@@ -10,6 +10,10 @@ squared-uniform skew (``floor(n_users * u**2)``, so low ids are hot), holds
 ``1 + Geometric`` events spaced by exponential gaps below the 30-minute rule,
 and sessions of one user may overlap and merge. Sessions that start before an
 hour ends and continue after it are what the hourly job carries in.
+
+The two timed workloads share one traffic profile (``EVENTS_PER_HOUR`` and
+the three parameters below it), so the hourly job and the stream see the same
+traffic, cut into hours or into one-minute drops.
 """
 
 from __future__ import annotations
@@ -43,6 +47,16 @@ BRANDS = np.array(["", "samsung", "apple", "xiaomi", "huawei", "lucente", "acer"
 EVENT_TYPES = np.array(["view", "click", "purchase", "signup", "error"])
 ANALYTICS_START = datetime(2024, 1, 1, tzinfo=timezone.utc)
 STREAM_START = datetime(2024, 3, 1, tzinfo=timezone.utc)
+
+
+#: Cited: the Kaggle 2019-Oct file holds about 42M rows (public dataset
+#: card), and 42M / 744 hours is about 56k events per hour.
+EVENTS_PER_HOUR = 56_000
+#: Unverified: no sample of the real data is in the repository. These set
+#: distinct users per hour or drop and the sessions carried across hours.
+USERS = 200_000
+EVENTS_PER_SESSION = 8.0
+MEAN_GAP_S = 90.0
 
 
 def _epoch_us(dt: datetime) -> int:
@@ -102,7 +116,8 @@ def _timestamps(ts_us: np.ndarray, tz: str | None) -> pa.Array:
 # hourly_backfill: Kaggle-shaped behavior CSV, one file per chunk of hours
 # --------------------------------------------------------------------------
 
-def behavior_traffic(seed: int, hours: int, events_per_hour: int, n_users: int) -> Traffic:
+def behavior_traffic(seed: int, hours: int, events_per_hour: int = EVENTS_PER_HOUR,
+                     n_users: int = USERS) -> Traffic:
     rng = np.random.default_rng([seed, 1])
     return traffic(
         rng,
@@ -110,8 +125,8 @@ def behavior_traffic(seed: int, hours: int, events_per_hour: int, n_users: int) 
         span_us=hours * HOUR_US,
         n_events=hours * events_per_hour,
         n_users=n_users,
-        mean_events_per_session=8.0,
-        mean_gap_s=90.0,
+        mean_events_per_session=EVENTS_PER_SESSION,
+        mean_gap_s=MEAN_GAP_S,
         resolution_us=1_000_000,
     )
 
@@ -142,13 +157,12 @@ def hour_index(t: Traffic) -> np.ndarray:
 
 
 def write_behavior_chunks(
-    out_dir: str, seed: int, t: Traffic, chunk_hours: list[int]
+    out_dir: str, table: pa.Table, hour: np.ndarray, chunk_hours: list[int]
 ) -> list[tuple[str, list[int]]]:
-    """Write one CSV per chunk, the i-th holding ``chunk_hours[i]`` hours;
-    return ``[(path, hour indices)]``."""
+    """Write ``table`` (rows in hour order, ``hour`` their hour indices) as
+    one CSV per chunk, the i-th holding ``chunk_hours[i]`` hours; return
+    ``[(path, hour indices)]``."""
     os.makedirs(out_dir, exist_ok=True)
-    table = behavior_table(seed, t)
-    hour = hour_index(t)
     chunks, h0 = [], 0
     for c, n in enumerate(chunk_hours):
         hs = list(range(h0, h0 + n))
@@ -209,22 +223,23 @@ def write_events(sf_dir: str, table: pa.Table) -> str:
 
 
 # --------------------------------------------------------------------------
-# stream_sessions: time-ordered parquet drops of 5 minutes each
+# stream_sessions: time-ordered parquet drops of one minute each
 # --------------------------------------------------------------------------
 
-DROP_US = 5 * 60 * 1_000_000
+DROP_US = 60 * 1_000_000
 
 
-def stream_traffic(seed: int, drops: int, events_per_drop: int, n_users: int) -> Traffic:
+def stream_traffic(seed: int, drops: int, events_per_hour: int = EVENTS_PER_HOUR,
+                   n_users: int = USERS) -> Traffic:
     rng = np.random.default_rng([seed, 5])
     return traffic(
         rng,
         start_us=_epoch_us(STREAM_START),
         span_us=drops * DROP_US,
-        n_events=drops * events_per_drop,
+        n_events=drops * events_per_hour * DROP_US // HOUR_US,
         n_users=n_users,
-        mean_events_per_session=6.0,
-        mean_gap_s=120.0,
+        mean_events_per_session=EVENTS_PER_SESSION,
+        mean_gap_s=MEAN_GAP_S,
         resolution_us=1,
     )
 

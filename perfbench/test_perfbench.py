@@ -42,7 +42,7 @@ def _loop_starts(user, ts):
 
 
 def test_session_starts_match_loop_reference():
-    t = gen.stream_traffic(7, 4, 300, 50)
+    t = gen.stream_traffic(7, 4, 18_000, 50)
     np.testing.assert_array_equal(
         oracle.session_starts(t.user_id, t.ts_us), _loop_starts(t.user_id, t.ts_us)
     )
@@ -63,7 +63,7 @@ def test_hourly_id_preimage():
 
 
 def _expected_drops():
-    t = gen.stream_traffic(3, 3, 200, 100)
+    t = gen.stream_traffic(3, 3, 12_000, 100)
     return pd.DataFrame({
         "drop": gen.drop_index(t),
         "event_id": np.arange(len(t.ts_us)),
@@ -110,10 +110,11 @@ def test_same_rows_ignores_order_and_integral_float_width():
 
 def _write_all(out: str, seed: int) -> list[str]:
     t = gen.behavior_traffic(seed, 2, 400, 300)
-    paths = [p for p, _ in gen.write_behavior_chunks(f"{out}/csv", seed, t, [1, 1])]
+    paths = [p for p, _ in gen.write_behavior_chunks(
+        f"{out}/csv", gen.behavior_table(seed, t), gen.hour_index(t), [1, 1])]
     e = gen.events_traffic(seed, 2000, 100, 2)
     paths.append(gen.write_events(f"{out}/sf", gen.events_table(seed, e)))
-    s = gen.stream_traffic(seed, 3, 200, 100)
+    s = gen.stream_traffic(seed, 3, 12_000, 100)
     paths += gen.write_drops(f"{out}/drops", gen.stream_table(seed, s), gen.drop_index(s), 0, 3)
     return paths
 
@@ -132,7 +133,8 @@ def test_generators_are_byte_identical_per_seed_and_differ_across_seeds(tmp_path
 
 def test_behavior_csv_has_kaggle_columns(tmp_path):
     t = gen.behavior_traffic(1, 1, 50, 20)
-    ((path, hours),) = gen.write_behavior_chunks(str(tmp_path), 1, t, [1])
+    ((path, hours),) = gen.write_behavior_chunks(
+        str(tmp_path), gen.behavior_table(1, t), gen.hour_index(t), [1])
     header, first = open(path).read().splitlines()[:2]
     assert header.replace('"', "") == (
         "event_time,event_type,product_id,category_id,category_code,brand,price,user_id"
@@ -177,12 +179,17 @@ def test_benchmark_json_matches_the_catalog():
     assert setup and setup[0].bound == max(m.bound for m in END_TO_END)
 
 
-@pytest.mark.parametrize("workload", WORKLOADS)
-def test_cli_refuses_unknown_arguments(workload):
+def test_cli_refuses_an_unknown_workload():
     import run
 
     with pytest.raises(SystemExit):
         run.parse_args(["--workload", "nope", "--seed", "1", "--seconds", "1"])
+
+
+@pytest.mark.parametrize("workload", WORKLOADS)
+def test_cli_accepts_each_workload(workload):
+    import run
+
     assert run.parse_args(
         ["--workload", workload, "--seed", "1", "--seconds", "1", "--trace", "1"]
     ).trace == 1

@@ -24,7 +24,6 @@ from dataclasses import dataclass, field
 class Span:
     id: int
     name: str
-    op: int
     start: float
     end: float = 0.0
     parent: int | None = None
@@ -46,9 +45,9 @@ class Tracer:
         self._stack: list[Span] = []
 
     @contextmanager
-    def span(self, name: str, op: int = 0):
+    def span(self, name: str):
         parent = self._stack[-1].id if self._stack else None
-        s = Span(id=len(self.spans), name=name, op=op, start=0.0, parent=parent)
+        s = Span(id=len(self.spans), name=name, start=0.0, parent=parent)
         s.group = f"{name}#{s.id}"
         self.spark.sparkContext.setJobGroup(s.group, name)
         self.spans.append(s)
@@ -72,7 +71,7 @@ class Tracer:
         with open(path, "w") as f:
             json.dump(
                 [
-                    {"id": s.id, "name": s.name, "op": s.op, "parent": s.parent,
+                    {"id": s.id, "name": s.name, "parent": s.parent,
                      "start": s.start, "end": s.end, "group": s.group,
                      "counts": s.counts}
                     for s in self.spans
@@ -183,28 +182,40 @@ def _tree_rss_bytes(root: int) -> int:
 
 
 class RssSampler:
-    """Peak summed RSS of this process and all its descendants (the JVM and
-    Spark's Python workers), sampled on a background thread."""
+    """Summed RSS of this process and all its descendants (the JVM and
+    Spark's Python workers), sampled on a background thread, less ``base``,
+    this process's RSS on entry (the benchmark's own inputs and imports)."""
 
     def __init__(self, interval_s: float = 0.2):
         self.interval_s = interval_s
-        self.peak = 0
+        self.base = 0
+        self.samples: list[tuple[float, int]] = []
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
 
+    def _sample(self) -> None:
+        self.samples.append((time.perf_counter(), _tree_rss_bytes(os.getpid()) - self.base))
+
     def _run(self) -> None:
         while not self._stop.is_set():
-            self.peak = max(self.peak, _tree_rss_bytes(os.getpid()))
+            self._sample()
             self._stop.wait(self.interval_s)
 
+    def peak(self) -> int:
+        return max(v for _, v in self.samples)
+
+    def median_since(self, t0: float) -> float:
+        return median(v for t, v in self.samples if t >= t0)
+
     def __enter__(self) -> RssSampler:
+        self.base = _tree_rss_bytes(os.getpid())
         self._thread.start()
         return self
 
     def __exit__(self, *exc) -> None:
         self._stop.set()
         self._thread.join(timeout=10)
-        self.peak = max(self.peak, _tree_rss_bytes(os.getpid()))
+        self._sample()
 
 
 def cpu_ticks() -> tuple[int, int]:

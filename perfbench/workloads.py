@@ -1,11 +1,12 @@
 """The benchmark's workloads, driven through the engine's public functions.
 
-Each run: generate the seeded inputs (the benchmark's own work, untimed);
-set up three times (``get_spark`` plus one warm-up operation on a small
-input; only the first starts the JVM and the session, the others find them
-running) and report the median; run the timed region with tracing off; in a
-traced run, run the same amount of work again with spans and Spark job
-groups; then check every output outside the timed region.
+Each run: generate the seeded inputs and write them to disk (the benchmark's
+own work, untimed); start the session, then start it anew five times in the
+running JVM and report the median; warm the last session up with untimed
+full-size operations; run the timed region with tracing off; in a traced run,
+run more of the same work with spans and Spark job groups; then check
+every output outside the timed region. Memory is sampled over set-up, warm-up
+and the timed region only.
 
 The amount of timed work is fixed by ``--seconds`` and a nominal cost per
 operation on a 4-vCPU host, not by a wall-clock deadline, so every run with
@@ -31,10 +32,10 @@ import pyarrow.parquet as pq
 import gen
 import oracle
 from metrics import ANALYTICS_QUERIES, PER_LAYER, traced_by
-from tracing import RestHarvester, Tracer, median
+from tracing import RestHarvester, RssSampler, Tracer, median
 
 CORES = 4
-SETUPS = 3
+SETUPS = 5
 
 
 @dataclass
@@ -43,8 +44,14 @@ class RunResult:
     layer: dict = field(default_factory=dict)
     attempted: int = 0
     failed: int = 0
-    checks_ok: bool = True
     record: dict = field(default_factory=dict)
+
+    def count(self, ops, failed) -> None:
+        """Count the operations ``ops`` as attempted, and those of them in
+        ``failed`` as failed."""
+        ops = set(ops)
+        self.attempted += len(ops)
+        self.failed += len(ops & set(failed))
 
 
 class Workload:
@@ -56,10 +63,12 @@ class Workload:
         self.spark = None
         self.result = RunResult()
         self.rec = self.result.record
-        self.session_start_s: list[float] = []
+        self.raised: set = set()
 
     # -- session ----------------------------------------------------------
-    def start_session(self) -> None:
+    def start_session(self) -> float:
+        """``get_spark``; returns its seconds. The first call launches the
+        JVM; a call after ``spark.stop()`` builds a new session in it."""
         from commerce_sessionization_spark.session import get_spark
 
         t0 = time.perf_counter()
@@ -68,7 +77,6 @@ class Workload:
             master=f"local[{CORES}]",
             shuffle_partitions=CORES,
             extra_conf={
-                "spark.driver.memory": "1g",
                 "spark.ui.enabled": "true" if self.trace else "false",
                 "spark.ui.showConsoleProgress": "false",
                 "spark.ui.retainedJobs": "100000",
@@ -76,15 +84,13 @@ class Workload:
                 "spark.ui.retainedTasks": "1000000",
                 "spark.sql.ui.retainedExecutions": "100000",
                 "spark.sql.warehouse.dir": os.path.join(self.work, "warehouse"),
-                # a pre-touched fixed heap keeps the JVM's share of peak RSS
-                # from following GC timing
-                "spark.driver.extraJavaOptions": "-Xms1g -XX:+AlwaysPreTouch "
-                    "-XX:-UsePerfData "
+                "spark.driver.extraJavaOptions": "-XX:-UsePerfData "
                     f"-Djava.io.tmpdir={os.path.join(self.work, 'tmp')}",
             },
         )
+        elapsed = time.perf_counter() - t0
         self.spark.sparkContext.setLogLevel("ERROR")
-        self.session_start_s.append(time.perf_counter() - t0)
+        return elapsed
 
     def stop(self) -> None:
         """Stop the session, then the JVM, and wait until the JVM has ended
@@ -113,29 +119,46 @@ class Workload:
         t0 = time.perf_counter()
         self.prepare()
         self.rec["gen_s"] = time.perf_counter() - t0
-        setups = [self.setup(k) for k in range(SETUPS)]
-        self.rec["setup_s"] = setups
-        self.rec["session_start_s"] = self.session_start_s
-        self.rec["setup_total_s"] = time.perf_counter() - t0
-        self.result.metrics["setup_s"] = median(setups)
-        self.timed()
+        with RssSampler() as rss:
+            cold = self.start_session()
+            starts = []
+            for _ in range(SETUPS):
+                self.spark.stop()
+                starts.append(self.start_session())
+            t = time.perf_counter()
+            self.warm_up()
+            self.rec["warm_s"] = time.perf_counter() - t
+            t = time.perf_counter()
+            self.timed()
+        self.rec["cold_start_s"] = cold
+        self.rec["session_start_s"] = starts
+        self.rec["rss_base_mb"] = rss.base / 2**20
+        self.rec["peak_rss_mb"] = rss.peak() / 2**20
+        self.rec["rss_p50_mb"] = rss.median_since(t) / 2**20
+        self.result.metrics["setup_s"] = median(starts)
         if self.trace:
             self.tracer = Tracer(self.spark)
             self.traced()
             self.harvest()
             self.tracer.dump(self.spans_path)
-            self.result.layer["session.start_s"] = median(self.session_start_s)
-            self.result.layer["session.cold_start_s"] = self.session_start_s[0]
+            self.result.layer["session.start_s"] = median(starts)
             self.result.layer = {
                 m.name: self.result.layer.get(m.name, 0.0) if m.name in traced_by(self.name) else 0.0
                 for m in PER_LAYER
             }
+        t = time.perf_counter()
         self.check()
+        self.rec["check_s"] = time.perf_counter() - t
         return self.result
+
+    def fail(self, op, e: Exception) -> None:
+        """An operation that raises counts as failed."""
+        self.raised.add(op)
+        self.rec.setdefault("errors", []).append(repr(e)[:500])
 
     # subclass hooks
     def prepare(self) -> None: ...
-    def setup(self, k: int) -> float: ...
+    def warm_up(self) -> None: ...
     def timed(self) -> None: ...
     def traced(self) -> None: ...
     def harvest(self) -> None: ...
@@ -152,86 +175,75 @@ def _files(pattern: str) -> list[str]:
 
 class HourlyBackfill(Workload):
     """``divide_file`` on Kaggle-shaped CSV chunks, then in-order
-    ``sessionize_hour`` over consecutive hours (backfill semantics)."""
+    ``sessionize_hour`` over consecutive hours (backfill semantics). The
+    first chunk is the untimed warm-up; the timed hours carry sessions in
+    from it."""
 
     name = "hourly_backfill"
-    EVENTS_PER_HOUR = 50_000
-    USERS = 200_000
-    CHUNK_HOURS = 2
-    WARM_EVENTS = 50_000
-    NOMINAL_HOUR_S = 2.5
+    WARM_HOURS = 2
+    CHUNK_HOURS = 3
+    NOMINAL_HOUR_S = 2.0
     ANALYTICS_EVENTS = 100_000
     ANALYTICS_USERS = 25_000
     ANALYTICS_DAYS = 7
 
     def prepare(self) -> None:
-        self.n_chunks = max(1, round(self.seconds / (self.CHUNK_HOURS * self.NOMINAL_HOUR_S)))
-        sizes = [self.CHUNK_HOURS] * (self.n_chunks * (2 if self.trace else 1))
-        self.traffic = gen.behavior_traffic(
-            self.seed, sum(sizes), self.EVENTS_PER_HOUR, self.USERS
-        )
-        self.chunks = gen.write_behavior_chunks(
-            os.path.join(self.work, "csv"), self.seed, self.traffic, sizes
-        )
+        n = max(1, round(self.seconds / (self.CHUNK_HOURS * self.NOMINAL_HOUR_S)))
+        sizes = [self.WARM_HOURS] + [self.CHUNK_HOURS] * (n + 1 if self.trace else n)
+        self.traffic = gen.behavior_traffic(self.seed, sum(sizes))
+        self.table = gen.behavior_table(self.seed, self.traffic)
         hours = gen.hour_index(self.traffic)
+        chunks = gen.write_behavior_chunks(
+            os.path.join(self.work, "csv"), self.table, hours, sizes
+        )
+        self.warm_chunks, self.timed_chunks = chunks[:1], chunks[1 : n + 1]
+        self.traced_chunks = chunks[n + 1 :]
         self.hour_events = np.bincount(hours, minlength=sum(sizes))
-        warm = gen.behavior_traffic(self.seed + 1, 1, self.WARM_EVENTS, self.USERS)
-        ((self.warm_csv, _),) = gen.write_behavior_chunks(
-            os.path.join(self.work, "warm"), self.seed + 1, warm, [1])
-        self.main = self.base("main")
+        self.main = os.path.join(self.work, "pipeline")
+        self.done_hours: list[int] = []
         self.rec["traffic"] = oracle.traffic_profile(
             self.traffic.user_id, self.traffic.ts_us, hours
         )
 
-    def base(self, k) -> str:
-        return os.path.join(self.work, f"pipeline{k}")
-
-    def sessionize(self, h: int, base: str) -> None:
+    def sessionize(self, h: int) -> None:
         from commerce_sessionization_spark.operators.sessionize import sessionize_hour
 
         d, hh = gen.hour_partition(h)
-        sessionize_hour(self.spark, d, hh, base)
+        sessionize_hour(self.spark, d, hh, self.main)
 
-    def setup(self, k: int) -> float:
-        """Session, then divide and sessionize a small hour into a throwaway
-        pipeline."""
+    def run_chunks(self, chunks) -> tuple[list[float], int, float]:
+        """Divide each chunk, then sessionize its hours in order; return the
+        per-hour seconds, the events and the wall seconds."""
         from commerce_sessionization_spark.operators.ingest import divide_file
 
+        ops, events = [], 0
         t0 = time.perf_counter()
-        self.start_session()
-        divide_file(self.spark, self.warm_csv, self.base(k))
-        self.sessionize(0, self.base(k))
-        elapsed = time.perf_counter() - t0
-        shutil.rmtree(self.base(k), ignore_errors=True)
-        return elapsed
-
-    def timed(self) -> None:
-        from commerce_sessionization_spark.operators.ingest import divide_file
-
-        ops, events, self.raised = [], 0, set()
-        t0 = time.perf_counter()
-        for path, hours in self.chunks[: self.n_chunks]:
+        for path, hours in chunks:
             try:
                 divide_file(self.spark, path, self.main)
-            except Exception as e:  # an operation that raises counts as failed
-                self.raised.update(hours)
-                self.rec.setdefault("errors", []).append(repr(e)[:500])
+            except Exception as e:
+                for h in hours:
+                    self.fail(h, e)
             for h in hours:
                 t = time.perf_counter()
                 try:
-                    self.sessionize(h, self.main)
+                    self.sessionize(h)
                 except Exception as e:
-                    self.raised.add(h)
-                    self.rec.setdefault("errors", []).append(repr(e)[:500])
+                    self.fail(h, e)
                 ops.append(time.perf_counter() - t)
                 events += int(self.hour_events[h])
-        wall = time.perf_counter() - t0
-        self.timed_hours = [h for _, hs in self.chunks[: self.n_chunks] for h in hs]
+                self.done_hours.append(h)
+        return ops, events, time.perf_counter() - t0
+
+    def warm_up(self) -> None:
+        self.rec["warm_ops_s"] = self.run_chunks(self.warm_chunks)[0]
+
+    def timed(self) -> None:
+        ops, events, wall = self.run_chunks(self.timed_chunks)
         self.rec["ops_s"] = ops
         self.rec["timed_wall_s"] = wall
         self.result.metrics["events_per_s"] = events / wall
         self.result.metrics["op_p50_s"] = median(ops)
-        self.result.attempted += len(ops)
 
     # -- traced run ---------------------------------------------------------
     def traced(self) -> None:
@@ -248,34 +260,34 @@ class HourlyBackfill(Workload):
 
         tr, spark, base = self.tracer, self.spark, self.main
         probe = os.path.join(self.work, "write_probe")
-        self.traced_hours = []
-        for op, (path, hours) in enumerate(self.chunks[self.n_chunks :]):
+        for path, hours in self.traced_chunks:
             before = set(_files(f"{base}/logs/*/*/*.parquet"))
-            with tr.span("operators.ingest.divide", op) as s:
+            with tr.span("operators.ingest.divide") as s:
                 divide_file(spark, path, base)
             s.counts["files_written"] = len(set(_files(f"{base}/logs/*/*/*.parquet")) - before)
             for h in hours:
                 d, hh = gen.hour_partition(h)
                 pd_, ph = gen.hour_partition(h - 1)
-                with tr.span("sources.io.scan_hour", op) as s:
+                with tr.span("sources.io.scan_hour") as s:
                     s.counts["rows"] = (
                         read_parquet(spark, f"{base}/logs", BEHAVIOR_SCHEMA)
                         .filter((F.col("event_date") == d) & (F.col("event_hour") == hh))
                         .count()
                     )
-                with tr.span("operators.sessionize.carry_in", op) as s:
+                with tr.span("operators.sessionize.carry_in") as s:
                     prev = read_parquet(spark, f"{base}/sessions", SESSION_SCHEMA).filter(
                         (F.col("event_date") == pd_) & (F.col("event_hour") == ph)
                     )
                     s.counts["rows"] = load_prev_active_sessions(
                         prev, datetime.strptime(f"{d} {hh}", "%Y-%m-%d %H")
                     ).count()
-                with tr.span("operators.sessionize.hour", op) as s:
-                    self.sessionize(h, base)
+                with tr.span("operators.sessionize.hour") as s:
+                    self.sessionize(h)
+                self.done_hours.append(h)
                 out = _files(f"{base}/sessions/event_date={d}/event_hour={hh}/*.parquet")
                 s.counts["files_written"] = len(out)
                 s.counts["bytes_written"] = sum(os.path.getsize(p) for p in out)
-                with tr.span("sources.io.write_hour", op):
+                with tr.span("sources.io.write_hour"):
                     write_partitioned_parquet(
                         read_parquet(spark, f"{base}/sessions", SESSION_SCHEMA).filter(
                             (F.col("event_date") == d) & (F.col("event_hour") == hh)
@@ -283,7 +295,6 @@ class HourlyBackfill(Workload):
                         probe,
                         cluster_before_write=False,
                     )
-                self.traced_hours.append(h)
         self.result.layer["trace.overhead_ratio"] = median(
             tr.seconds("operators.sessionize.hour")) / median(self.rec["ops_s"])
         t0 = time.perf_counter()
@@ -306,8 +317,10 @@ class HourlyBackfill(Workload):
         def noop(df):
             df.write.format("noop").mode("overwrite").save()
 
-        for q in ANALYTICS_QUERIES:  # untraced warm-up pass
-            noop(queries[q](self.spark, self.sf_dir))
+        # the output check runs every query once, untraced: it is the warm-up
+        t0 = time.perf_counter()
+        self.check_analytics()
+        self.rec["check_analytics_s"] = time.perf_counter() - t0
         with self.tracer.span("sources.tables.scan_events"):
             noop(load_table(self.spark, self.sf_dir, "events"))
         for q in ANALYTICS_QUERIES:
@@ -358,9 +371,10 @@ class HourlyBackfill(Workload):
 
     # -- output checks --------------------------------------------------------
     def check(self) -> None:
-        hours = [*self.timed_hours, *(self.traced_hours if self.trace else [])]
+        """Every hour the run processed, warm-up and traced hours included."""
+        hours = self.done_hours
         keep = np.isin(gen.hour_index(self.traffic), hours)
-        table = gen.behavior_table(self.seed, self.traffic)
+        table = self.table
         user = table["user_id"].to_numpy()[keep]
         expected = pd.DataFrame({
             "hour": gen.hour_index(self.traffic)[keep],
@@ -376,15 +390,10 @@ class HourlyBackfill(Workload):
         parity = got.groupby("hour").size().reindex(hours, fill_value=0) != (
             logs.groupby("hour").size().reindex(hours, fill_value=0))
         failed |= set(parity.index[parity.to_numpy()])
+        if failed - set(hours):  # rows in an hour the run never wrote
+            failed |= set(hours)
         self.rec["failed_hours"] = sorted(int(h) for h in failed)
-        self.result.failed += len((failed | self.raised) & set(self.timed_hours))
-        self.result.checks_ok = not failed
-        if self.trace:
-            self.result.attempted += len(self.traced_hours)
-            self.result.failed += len(failed & set(self.traced_hours))
-            t0 = time.perf_counter()
-            self.check_analytics()
-            self.rec["check_analytics_s"] = time.perf_counter() - t0
+        self.result.count(hours, failed | self.raised)
 
     def read_hours(self, path: str, cols: list[str]) -> pd.DataFrame:
         parts = ds.partitioning(
@@ -423,9 +432,7 @@ class HourlyBackfill(Workload):
             if not ok:
                 bad.append(name)
         self.rec["failed_queries"] = bad
-        self.result.attempted += len(ANALYTICS_QUERIES)
-        self.result.failed += len(bad)
-        self.result.checks_ok = self.result.checks_ok and not bad
+        self.result.count(ANALYTICS_QUERIES, bad)
 
 
 # ==========================================================================
@@ -437,36 +444,33 @@ def _data_batches(query) -> list:
 
 
 class StreamSessions(Workload):
-    """Drain a backlog of 5-minute parquet drops through
+    """Drain a backlog of one-minute parquet drops through
     ``stream_sessions_to_parquet`` (``availableNow``, one file per trigger),
-    starting from an empty checkpoint."""
+    starting from an empty checkpoint. The warm-up drains a separate,
+    smaller backlog of the same traffic profile into a throwaway sink."""
 
     name = "stream_sessions"
-    EVENTS_PER_DROP = 1500
-    USERS = 20_000
-    WARM_EVENTS = 100
-    NOMINAL_BATCH_S = 3.0
+    WARM_DROPS = 2
+    NOMINAL_BATCH_S = 2.0
     AWAIT_S = 150
 
     def prepare(self) -> None:
-        self.n_drops = max(2, round(self.seconds / self.NOMINAL_BATCH_S))
-        self.traffic = gen.stream_traffic(
-            self.seed, self.n_drops, self.EVENTS_PER_DROP, self.USERS
-        )
+        self.n_drops = max(3, round(self.seconds / self.NOMINAL_BATCH_S))
+        self.traffic = gen.stream_traffic(self.seed, self.n_drops)
         self.table = gen.stream_table(self.seed, self.traffic)
         self.drop = gen.drop_index(self.traffic)
         self.rec["traffic"] = oracle.traffic_profile(
             self.traffic.user_id, self.traffic.ts_us, self.drop
         )
-        warm = gen.stream_traffic(self.seed + 1, 1, self.WARM_EVENTS, self.USERS)
-        self.warm = (gen.stream_table(self.seed + 1, warm), gen.drop_index(warm))
+        for tag in ("main", *(("compute", "full") if self.trace else ())):
+            gen.write_drops(self.dirs(tag)[0], self.table, self.drop, 0, self.n_drops)
+        warm = gen.stream_traffic(self.seed + 1, self.WARM_DROPS)
+        gen.write_drops(self.dirs("warm")[0], gen.stream_table(self.seed + 1, warm),
+                        gen.drop_index(warm), 0, self.WARM_DROPS)
 
     def dirs(self, tag: str) -> tuple[str, str, str]:
         d = os.path.join(self.work, tag)
         return f"{d}/src", f"{d}/out", f"{d}/ckpt"
-
-    def write_backlog(self, tag: str) -> None:
-        gen.write_drops(self.dirs(tag)[0], self.table, self.drop, 0, self.n_drops)
 
     def drain(self, tag: str):
         from commerce_sessionization_spark.streaming.pipeline import (
@@ -485,26 +489,20 @@ class StreamSessions(Workload):
         if q.exception() is not None:
             raise RuntimeError(str(q.exception()))
 
-    def setup(self, k: int) -> float:
-        """Session, then drain one small drop into a throwaway sink."""
-        tag = f"setup{k}"
-        gen.write_drops(self.dirs(tag)[0], *self.warm, 0, 1)
-        t0 = time.perf_counter()
-        self.start_session()
-        self.drain(tag)
-        elapsed = time.perf_counter() - t0
-        shutil.rmtree(os.path.join(self.work, tag), ignore_errors=True)
-        return elapsed
+    def warm_up(self) -> None:
+        q = self.drain("warm")
+        self.rec["warm_ops_s"] = [p["durationMs"]["triggerExecution"] / 1000.0
+                                  for p in _data_batches(q)]
+        shutil.rmtree(os.path.join(self.work, "warm"), ignore_errors=True)
 
     def timed(self) -> None:
-        self.write_backlog("main")
-        self.raised = set()
         t0 = time.perf_counter()
         try:
             batches = _data_batches(self.drain("main"))
         except Exception as e:  # every batch of a drain that raises failed
-            self.rec.setdefault("errors", []).append(repr(e)[:500])
-            batches, self.raised = [], set(range(self.n_drops))
+            for d in range(self.n_drops):
+                self.fail(d, e)
+            batches = []
         wall = time.perf_counter() - t0
         ops = [p["durationMs"]["triggerExecution"] / 1000.0 for p in batches]
         self.untraced_wall = wall
@@ -512,7 +510,6 @@ class StreamSessions(Workload):
         self.rec["timed_wall_s"] = wall
         self.result.metrics["events_per_s"] = len(self.drop) / wall
         self.result.metrics["op_p50_s"] = median(ops) if ops else wall
-        self.result.attempted += self.n_drops
 
     # -- traced run ---------------------------------------------------------
     def traced(self) -> None:
@@ -522,9 +519,6 @@ class StreamSessions(Workload):
         )
 
         tr, L = self.tracer, self.result.layer
-        for tag in ("compute", "full"):
-            self.write_backlog(tag)
-
         src, _, ckpt = self.dirs("compute")
         with tr.span("streaming.sessionize_stream.compute") as compute:
             events = read_events_stream(self.spark, src, maxFilesPerTrigger="1")
@@ -560,18 +554,15 @@ class StreamSessions(Workload):
 
     # -- output checks --------------------------------------------------------
     def check(self) -> None:
+        drops = range(self.n_drops)
         failed = self.check_drain("main")
         self.rec["failed_drops"] = sorted(int(d) for d in failed)
-        drops = set(range(self.n_drops))  # drop -1 holds rows no input has
-        self.result.failed += len((failed | self.raised) & drops)
-        ok = not failed
+        self.result.count(drops, failed | self.raised)
         if self.trace:
             failed = self.check_drain("full")
             self.rec["failed_drops_traced"] = sorted(int(d) for d in failed)
-            self.result.attempted += self.n_drops
-            self.result.failed += len(failed & drops)
-            ok = ok and not failed
-        self.result.checks_ok = ok
+            self.result.count([("traced", d) for d in drops],
+                              [("traced", d) for d in failed])
 
     def check_drain(self, tag: str) -> set:
         """Every input event lands once, with the gap rule's id."""
@@ -589,7 +580,10 @@ class StreamSessions(Workload):
         ids = got["event_id"].to_numpy().astype(np.int64)
         in_range = (ids >= 0) & (ids < len(self.drop))
         got["drop"] = np.where(in_range, self.drop[np.clip(ids, 0, len(self.drop) - 1)], -1)
-        return oracle.failed_groups(expected, got, "drop", ["event_id", "session_id"])
+        failed = oracle.failed_groups(expected, got, "drop", ["event_id", "session_id"])
+        if -1 in failed:  # rows no input has: the whole drain is wrong
+            failed |= set(range(self.n_drops))
+        return failed
 
 
 WORKLOAD_CLASSES = {w.name: w for w in (HourlyBackfill, StreamSessions)}
