@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -164,8 +165,11 @@ def sessionize_hour(
             (F.col("event_date") == prev_time.strftime("%Y-%m-%d"))
             & (F.col("event_hour") == prev_time.strftime("%H"))
         )
-    except Exception:
-        # first hour ever: no sessions table yet → empty carry-in
+    except AnalysisException as e:
+        # first hour ever: no sessions table yet → empty carry-in. Any other
+        # failure must surface: an empty carry-in would split sessions.
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         prev_sessions = spark.createDataFrame([], SESSION_SCHEMA)
     prev_active = load_prev_active_sessions(prev_sessions, process_time)
 

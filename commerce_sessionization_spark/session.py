@@ -12,6 +12,9 @@ we centralize it so every entry point gets the same scale-hardened config:
 - **UTC session timezone** — session ids hash a *string-rendered* timestamp
   (``SessionizationBuiltIn.scala:76-77``); any timezone drift changes every
   id. Pinned here once.
+- **ANSI mode on** — overflow, invalid casts and division by zero raise
+  instead of yielding null. Spark 4 defaults to it; pinned so a cluster
+  default cannot turn it off under the engine.
 - **nanosAsLong** — the testdata parquet stores TIMESTAMP(NANOS) which the
   vectorized reader rejects; we read nanos as long and convert explicitly
   (see ``sources.tables``).
@@ -43,6 +46,7 @@ def get_spark(
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

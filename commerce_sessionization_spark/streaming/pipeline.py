@@ -55,10 +55,17 @@ epoch. The writer therefore FENCES each epoch:
 simultaneous writers (one commit, one no-op), a stale-lock zombie
 recovery, and a live-lock timeout.
 
-At scale: the state store carries the per-user session state (see
-``sessionize_stream.py``); the sink's partition clustering per micro-batch
-keeps file counts at (#hours touched per batch) × (#clustered tasks), and
-the cleanup glob in step 2 scans only directory metadata.
+At scale: the state store carries the session state as one row per
+user-hash bucket (see ``sessionize_stream.py``), so a micro-batch makes one
+Python call per touched bucket rather than per user. Users are evicted by
+pruning on touch, not by timeouts, so a batch has no timeout phase and an
+``availableNow`` drain ends without a trailing no-data batch; the price is
+that each touched bucket rewrites its whole state row every batch. A
+checkpoint written by the earlier per-user state layout is rejected
+(``STATE_STORE_*_SCHEMA_NOT_COMPATIBLE``) and needs a fresh checkpoint.
+The sink's partition clustering per micro-batch keeps file counts at
+(#hours touched per batch) × (#clustered tasks), and the cleanup glob in
+step 2 scans only directory metadata.
 """
 
 from __future__ import annotations

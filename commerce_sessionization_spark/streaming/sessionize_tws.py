@@ -20,9 +20,10 @@ Semantics (same contract as v1, ``sessionize_stream.py``):
   otherwise resurrect an expired session.
 - State is one (session_start_us, last_seen_us) pair per user; a timer
   at ``last_seen + gap`` clears it once the watermark proves no
-  admissible event can extend the session (same eviction rule as v1's
-  ``setTimeoutTimestamp``, so state size is bounded by ACTIVE users,
-  not all users ever seen).
+  admissible event can extend the session (the threshold v1 prunes its
+  per-bucket state at, so state size is bounded by ACTIVE users, not
+  all users ever seen). v1 keys its state by user-hash bucket instead
+  of by user; the ids are the same.
 
 Environment note: executing a transformWithState query requires the
 ``protobuf`` package (the Python↔JVM state-server protocol), which this
@@ -35,7 +36,6 @@ anywhere Spark 4 + protobuf are installed.
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 from typing import Any
 
@@ -50,11 +50,8 @@ from pyspark.sql.streaming.stateful_processor import (
 )
 from pyspark.sql.types import StringType, StructField, StructType
 
-DEFAULT_GAP_SECONDS = 30 * 60
-
-
-def _mint_id(user: Any, start_us: int) -> str:
-    return hashlib.sha256(f"{user}-{start_us}".encode()).hexdigest()
+from commerce_sessionization_spark.operators.sessions import DEFAULT_GAP_SECONDS
+from commerce_sessionization_spark.streaming.sessionize_stream import _mint_id
 
 
 class SessionProcessor(StatefulProcessor):

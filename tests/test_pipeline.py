@@ -90,6 +90,36 @@ def test_rerun_is_idempotent(spark, pipeline):
     assert before == after
 
 
+def test_missing_sessions_dir_is_the_only_empty_carry_in(
+    spark, pipeline, tmp_path, monkeypatch
+):
+    """The first hour's carry-in is empty because the sessions dir is
+    missing (PATH_NOT_FOUND); any other read failure must propagate, not
+    silently become an empty carry-in that splits sessions."""
+    import importlib
+
+    from pyspark.errors import AnalysisException
+
+    # the operators package re-exports a function named ``sessionize``,
+    # which shadows the module on attribute access
+    hourly = importlib.import_module(
+        "commerce_sessionization_spark.operators.sessionize"
+    )
+
+    with pytest.raises(AnalysisException) as missing:
+        read_parquet(spark, str(tmp_path / "no_sessions"), SESSION_SCHEMA)
+    assert missing.value.getCondition() == "PATH_NOT_FOUND"
+
+    def failing_read(spark, path, schema):
+        if path.endswith("/sessions"):
+            raise OSError("sessions listing failed")
+        return read_parquet(spark, path, schema)
+
+    monkeypatch.setattr(hourly, "read_parquet", failing_read)
+    with pytest.raises(OSError, match="sessions listing failed"):
+        sessionize_hour(spark, "2019-10-01", "11", pipeline, write=False)
+
+
 def test_generic_sessionize_invariants_on_testdata(spark):
     ev = load_table(spark, SF_DIR, "events")
     n = ev.count()

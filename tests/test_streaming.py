@@ -10,10 +10,14 @@ batch ``sessionize`` result on the same rows.
 from __future__ import annotations
 
 import glob
+import os
 import time
 from datetime import datetime
 from pathlib import Path
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import functions as F
@@ -153,6 +157,11 @@ def test_stream_is_streaming_plan(spark):
     out = sessionize_stream_stateful(stream)
     assert out.isStreaming
     assert "session_id" in out.columns
+    # bucket state keeps users as int64 arrays
+    with pytest.raises(TypeError, match="integral"):
+        sessionize_stream_stateful(
+            stream.withColumn("user_id", F.col("user_id").cast("string"))
+        )
 
 
 def test_stream_pipeline_writes_partitioned_sessions(spark, tmp_path):
@@ -368,6 +377,141 @@ def test_late_data_beyond_watermark_is_dropped(spark, tmp_path):
     # the 09:00 straggler is behind it and must not appear
     assert 99 not in got
     assert {1, 2, 3, 4, 5, 6} <= got
+
+
+def test_bucketed_state_matches_batch_on_seeded_drops(spark, tmp_path):
+    """Seeded parity for the bucketed stateful operator: 250 users share
+    the state rows over 3 micro-batches, with sessions crossing batch
+    boundaries, a user whose state the watermark expires and who returns,
+    rows out of order inside every drop, and one row behind the
+    watermark. Every admitted event carries the batch operator's id."""
+    rng = np.random.default_rng(5)
+    base = 1_704_103_200_000_000  # 2024-01-01 10:00:00 UTC, µs
+    minute = 60_000_000
+    drops: list[list[tuple[int, int, int]]] = [[], [], []]
+    drop_of: dict[int, int] = {}
+
+    def add(d: int, ts_us: int, user: int) -> int:
+        event_id = len(drop_of)
+        drops[d].append((event_id, ts_us, user))
+        drop_of[event_id] = d
+        return event_id
+
+    users = rng.choice(10**9, size=250, replace=False)
+    # drop d covers [lo, hi) minutes after 10:00
+    for d, (lo, hi) in enumerate([(0, 20), (30, 70), (75, 105)]):
+        for u in users:
+            for _ in range(rng.integers(0, 3)):
+                add(d, base + int(rng.integers(lo * minute, hi * minute)), int(u))
+    # drop 1 ends at 11:10, so drop 2 runs under a 10:40 watermark
+    add(1, base + 70 * minute, int(users[0]))
+    # last seen 10:02: pruned in drop 2 (10:32 < 10:40), back at 11:20
+    add(0, base + 2 * minute, 10**9 + 7)
+    add(2, base + 80 * minute, 10**9 + 7)
+    late_id = add(2, base + 30 * minute, int(users[1]))  # 10:30: too late
+
+    src = tmp_path / "bucket_src"
+    src.mkdir()
+    for d, rows in enumerate(drops):
+        rows = [rows[i] for i in rng.permutation(len(rows))]  # out of order
+        path = src / f"drop_{d}.parquet"
+        pq.write_table(
+            pa.table({
+                "event_id": np.array([r[0] for r in rows], dtype=np.int64),
+                "ts": pa.array([r[1] for r in rows], pa.timestamp("us", tz="UTC")),
+                "user_id": np.array([r[2] for r in rows], dtype=np.int64),
+                "event_type": ["view"] * len(rows),
+            }),
+            str(path),
+        )
+        # the file source takes the oldest file first
+        os.utime(path, (1_700_000_000 + d, 1_700_000_000 + d))
+
+    q = (
+        sessionize_stream_stateful(
+            read_events_stream(spark, str(src), maxFilesPerTrigger="1")
+        )
+        .writeStream.format("memory")
+        .queryName("bucket_parity_sink")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) == 3
+    got_rows = spark.sql(
+        "SELECT event_id, session_id FROM bucket_parity_sink"
+    ).collect()
+    got = {r.event_id: r.session_id for r in got_rows}
+    assert len(got) == len(got_rows)  # every event emitted at most once
+
+    admitted = spark.read.schema(SCHEMA).parquet(str(src)).where(
+        F.col("event_id") != late_id
+    )
+    expected = {
+        r.event_id: r.session_id
+        for r in sessionize(admitted, order_cols=("event_id",)).collect()
+    }
+    assert late_id not in got
+    assert got == expected
+    # the data really carries sessions across batch boundaries
+    drops_per_session: dict[str, set[int]] = {}
+    for e, sid in expected.items():
+        drops_per_session.setdefault(sid, set()).add(drop_of[e])
+    assert sum(len(ds) > 1 for ds in drops_per_session.values()) >= 10
+
+
+def test_bucket_sessionizer_equals_per_user_loop():
+    """The vectorized bucket step equals the per-user rule applied row by
+    row (carried state, time order within a user, gap > 30 min starts a
+    session) on seeded batches with disorder inside and across batches."""
+    from commerce_sessionization_spark.streaming.sessionize_stream import (
+        _EMPTY,
+        _mint_id,
+        _sessionize_bucket,
+    )
+
+    gap = 1800 * 1_000_000
+    rng = np.random.default_rng(11)
+    for _ in range(100):
+        users = starts = lasts = _EMPTY
+        carried: dict[int, tuple[int, int]] = {}
+        for b in range(3):
+            n = int(rng.integers(1, 30))
+            u = rng.integers(0, 6, n).astype(np.int64)
+            t = (rng.integers(0, 3 * 3600, n) + b * 3600) * 1_000_000
+            order, ids, users, starts, lasts = _sessionize_bucket(
+                u, t, users, starts, lasts, gap
+            )
+            want = {}
+            for i in sorted(range(n), key=lambda i: (u[i], t[i])):
+                start, last = carried.get(int(u[i]), (None, None))
+                if last is None or t[i] - last > gap:
+                    start = int(t[i])
+                carried[int(u[i])] = (start, int(t[i]))
+                want[i] = _mint_id(int(u[i]), start)
+            assert dict(zip(order.tolist(), ids)) == want
+            assert users.tolist() == sorted(carried)
+            assert list(zip(starts.tolist(), lasts.tolist())) == [
+                carried[k] for k in sorted(carried)
+            ]
+
+
+def test_bucket_state_from_another_bucket_count_is_rejected():
+    """A state row written under a different bucket count would remap
+    users silently; the operator raises instead."""
+    from commerce_sessionization_spark.streaming.sessionize_stream import (
+        N_BUCKETS,
+        _make_bucket_fn,
+    )
+
+    class _State:
+        exists = True
+        get = (N_BUCKETS * 2, b"", b"", b"")
+
+    fn = _make_bucket_fn("user_id", "ts", 1800 * 1_000_000, ["user_id"])
+    with pytest.raises(RuntimeError, match="fresh checkpoint"):
+        list(fn((0,), iter([]), _State()))
 
 
 def test_stream_dedup_drops_redelivery_across_batches(spark, tmp_path):
