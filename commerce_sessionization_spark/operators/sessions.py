@@ -15,7 +15,8 @@ Scale notes: state per user is just the running session-start — WindowExec
 sorts within each user partition and spills if needed. For skewed users at
 100 TB, partition the input by a time bucket first and carry boundaries like
 the hourly pipeline does, or use the streaming variant
-(``streaming.sessionize_stream``) whose state store holds one row per user.
+(``streaming.sessionize_stream``) whose state store holds one row per
+user-hash bucket.
 """
 
 from __future__ import annotations

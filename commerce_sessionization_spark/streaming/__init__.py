@@ -3,8 +3,9 @@
 The reference's incrementality is Airflow-driven hourly micro-batching
 (``airflow/dags/sessionization_batch.py:12,36-39``); this package is the
 stream-native equivalent per SURVEY §2.8/§7.2: ``session_window`` gap
-aggregation with watermarked late-data handling, and a stateful per-event
-variant whose session ids are byte-identical to the batch operator.
+aggregation with watermarked late-data handling, and one stateful per-event
+sessionizer (``sessionize_stream_stateful``) whose session ids equal the
+batch operator's when each user's events arrive in time order.
 """
 
 from commerce_sessionization_spark.streaming.cdc_stream import (
@@ -21,9 +22,6 @@ from commerce_sessionization_spark.streaming.sessionize_stream import (
     sessionize_stream_stateful,
     sessionize_stream_window,
 )
-from commerce_sessionization_spark.streaming.sessionize_tws import (
-    sessionize_stream_tws,
-)
 from commerce_sessionization_spark.streaming.windows import windowed_counts
 
 __all__ = [
@@ -34,7 +32,6 @@ __all__ = [
     "enrich_stream",
     "read_events_stream",
     "sessionize_stream_stateful",
-    "sessionize_stream_tws",
     "sessionize_stream_window",
     "windowed_counts",
 ]

@@ -51,10 +51,9 @@ bucket, and late events are bounded by the watermark: an event older than
 batch pipeline's equivalent failure is silent mis-sessionization — SURVEY
 §2.8; the stream is strictly safer).
 
-Within a micro-batch each user's rows are sorted by timestamp, so
-intra-batch disorder is handled exactly like the batch window's
-``orderBy``. Cross-batch disorder beyond the watermark is dropped by
-design.
+Disorder: rows behind the watermark are dropped by design; how a late
+row inside it is sessionized is stated once, on
+``sessionize_stream_stateful``.
 """
 
 from __future__ import annotations
@@ -178,14 +177,19 @@ def _sessionize_bucket(
     first = np.r_[True, u[1:] != u[:-1]]
     last = np.r_[u[1:] != u[:-1], True]
 
-    # carried state applies to each user's first row only
+    # a row's gap runs from its user's maximum admitted timestamp: the
+    # carried last-seen (the floor; INT64_MIN when nothing is carried, so
+    # the user's first row opens a session) or an earlier row of the batch
     pos = np.searchsorted(users, u)
     found = pos < len(users)
     found[found] = users[pos[found]] == u[found]
     carried = first & found
+    floor = np.full(len(u), np.iinfo(np.int64).min)
+    floor[found] = lasts[pos[found]]
     prev = np.r_[t[:1], t[:-1]]
-    prev[carried] = lasts[pos[carried]]
-    new_session = (first & ~found) | (t - prev > gap_us)
+    prev[first] = floor[first]
+    prev = np.maximum(prev, floor)
+    new_session = t > prev + gap_us
 
     # one anchor per session touched by the batch: a new session, or the
     # carried session a user's first row continues
@@ -201,7 +205,8 @@ def _sessionize_bucket(
     seg = np.cumsum(is_anchor) - 1
 
     # merge: the batch's users replace their carried rows
-    b_users, b_starts, b_lasts = u[last], anchor_start[seg[last]], t[last]
+    b_users, b_starts = u[last], anchor_start[seg[last]]
+    b_lasts = np.maximum(t[last], floor[last])
     keep = np.ones(len(users), dtype=bool)
     keep[pos[last & found]] = False
     all_users = np.concatenate((users[keep], b_users))
@@ -235,6 +240,9 @@ def _make_bucket_fn(user_col: str, ts_col: str, gap_us: int, out_cols: list[str]
             users, starts, lasts = _unpack(users), _unpack(starts), _unpack(lasts)
 
         batch = pd.concat(list(pdfs), ignore_index=True)
+        # a null turns the column to float64, which rounds large user ids
+        if batch[user_col].isna().any():
+            raise ValueError(f"{user_col!r} has a null: every event needs a user")
         ts_us = batch[ts_col].to_numpy("datetime64[us]").astype(np.int64)
         # enforce the late-data contract ourselves: unlike aggregations,
         # applyInPandasWithState does NOT pre-filter rows behind the
@@ -274,17 +282,24 @@ def sessionize_stream_stateful(
     gap_seconds: int = DEFAULT_GAP_SECONDS,
     watermark: str = "30 minutes",
 ) -> DataFrame:
-    """Per-event session ids on a stream, batch-identical.
+    """Per-event session ids on a stream, with the batch operator's ids.
 
     ``applyInPandasWithState`` keyed by ``pmod(xxhash64(user_col),
     N_BUCKETS)``; emits every admitted input row plus ``session_id``.
-    ``user_col`` must be a non-null integral column. Ids match
-    ``operators.sessions.sessionize`` exactly when events arrive
-    timestamp-ordered per user across micro-batches (the in-order case);
-    intra-batch disorder is sorted away, cross-batch disorder within the
-    gap extends the current session (same rule, possibly an id minted from
-    a later-arriving earlier event is NOT re-written — streams can't
-    retract emitted rows).
+    ``user_col`` must be an integral column (``TypeError`` here otherwise)
+    without nulls (a micro-batch bringing a null user raises
+    ``ValueError``).
+
+    The gap rule: within a micro-batch a user's rows are taken in
+    timestamp order, and a row opens a session iff it comes more than
+    ``gap_seconds`` after the user's maximum admitted timestamp so far
+    (carried across micro-batches in the state). Emitted ids are never
+    retracted. So ids equal ``operators.sessions.sessionize`` when each
+    user's events arrive in timestamp order across micro-batches, and a
+    late row inside the watermark never splits a session; but a late row
+    that comes before its session's emitted start joins that session under
+    the start already emitted, where the batch operator would mint the id
+    from the earlier row.
     """
     if not isinstance(events.schema[user_col].dataType, IntegralType):
         raise TypeError(

@@ -66,7 +66,6 @@ SLOW_TESTS = frozenset(
         "tests/test_streaming.py::test_enrich_stream_with_static_dim",
         "tests/test_streaming.py::test_epoch_writer_replay_is_idempotent",
         "tests/test_streaming.py::test_stateful_matches_batch",
-        "tests/test_streaming.py::test_stateful_session_structure",
         "tests/test_streaming.py::test_stream_pipeline_crash_replay_no_duplicates",
         "tests/test_streaming.py::test_stream_pipeline_writes_partitioned_sessions",
         "tests/test_streaming.py::test_stream_stream_purchase_attribution",

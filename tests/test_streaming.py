@@ -19,6 +19,8 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -110,21 +112,13 @@ def test_stateful_matches_batch(spark, tmp_path):
         assert r.session_id == expected[r.event_id], (
             f"event {r.event_id}: stream id != batch id"
         )
-
-
-def test_stateful_session_structure(spark, tmp_path):
-    got = {
-        r.event_id: r.session_id
-        for r in run_stream(
-            spark, tmp_path, sessionize_stream_stateful, ["event_id", "session_id"]
-        ).collect()
-    }
+    ids = {r.event_id: r.session_id for r in got}
     # user 1: events 1,2 share; event 5,6 share a DIFFERENT session
-    assert got[1] == got[2]
-    assert got[5] == got[6]
-    assert got[1] != got[5]
+    assert ids[1] == ids[2]
+    assert ids[5] == ids[6]
+    assert ids[1] != ids[5]
     # user 2: session survives the micro-batch boundary (15min gap)
-    assert got[3] == got[4]
+    assert ids[3] == ids[4]
 
 
 def test_session_window_stream_aggregates(spark, tmp_path):
@@ -383,8 +377,8 @@ def test_bucketed_state_matches_batch_on_seeded_drops(spark, tmp_path):
     """Seeded parity for the bucketed stateful operator: 250 users share
     the state rows over 3 micro-batches, with sessions crossing batch
     boundaries, a user whose state the watermark expires and who returns,
-    rows out of order inside every drop, and one row behind the
-    watermark. Every admitted event carries the batch operator's id."""
+    rows out of order inside every drop, a late row inside the watermark
+    that must not split its session, and one row behind the watermark. Every admitted event carries the batch operator's id."""
     rng = np.random.default_rng(5)
     base = 1_704_103_200_000_000  # 2024-01-01 10:00:00 UTC, µs
     minute = 60_000_000
@@ -409,6 +403,10 @@ def test_bucketed_state_matches_batch_on_seeded_drops(spark, tmp_path):
     add(0, base + 2 * minute, 10**9 + 7)
     add(2, base + 80 * minute, 10**9 + 7)
     late_id = add(2, base + 30 * minute, int(users[1]))  # 10:30: too late
+    # drop 2's 10:45 is late but admitted; 11:25 is 25 min after the
+    # carried 11:00, so all four rows are one session from 10:35
+    for d, m in [(1, 35), (1, 60), (2, 45), (2, 85)]:
+        add(d, base + m * minute, 10**9 + 9)
 
     src = tmp_path / "bucket_src"
     src.mkdir()
@@ -461,10 +459,32 @@ def test_bucketed_state_matches_batch_on_seeded_drops(spark, tmp_path):
     assert sum(len(ds) > 1 for ds in drops_per_session.values()) >= 10
 
 
-def test_bucket_sessionizer_equals_per_user_loop():
-    """The vectorized bucket step equals the per-user rule applied row by
-    row (carried state, time order within a user, gap > 30 min starts a
-    session) on seeded batches with disorder inside and across batches."""
+@settings(
+    max_examples=200,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(
+    batches=st.lists(
+        st.lists(
+            st.tuples(st.integers(0, 4), st.integers(0, 4 * 3600)),
+            min_size=1,
+            max_size=12,
+        ),
+        min_size=1,
+        max_size=4,
+    )
+)
+# carried 00:40-01:00, then 00:41 and 01:20: one session, as in batch
+@example(batches=[[(0, 2400), (0, 3600)], [(0, 2460), (0, 4800)]])
+# a late row must not lower the carried last-seen
+@example(batches=[[(0, 1)], [(0, 0)]])
+def test_bucket_sessionizer_equals_per_user_loop(batches):
+    """The vectorized bucket step equals the gap rule applied row by row
+    over arrival order (each batch in time order within a user): a row
+    opens a session iff it comes more than the gap after the user's
+    maximum admitted timestamp so far, which the state keeps as last-seen.
+    Batches ``(user, second)`` arrive in any time order."""
     from commerce_sessionization_spark.streaming.sessionize_stream import (
         _EMPTY,
         _mint_id,
@@ -472,29 +492,26 @@ def test_bucket_sessionizer_equals_per_user_loop():
     )
 
     gap = 1800 * 1_000_000
-    rng = np.random.default_rng(11)
-    for _ in range(100):
-        users = starts = lasts = _EMPTY
-        carried: dict[int, tuple[int, int]] = {}
-        for b in range(3):
-            n = int(rng.integers(1, 30))
-            u = rng.integers(0, 6, n).astype(np.int64)
-            t = (rng.integers(0, 3 * 3600, n) + b * 3600) * 1_000_000
-            order, ids, users, starts, lasts = _sessionize_bucket(
-                u, t, users, starts, lasts, gap
-            )
-            want = {}
-            for i in sorted(range(n), key=lambda i: (u[i], t[i])):
-                start, last = carried.get(int(u[i]), (None, None))
-                if last is None or t[i] - last > gap:
-                    start = int(t[i])
-                carried[int(u[i])] = (start, int(t[i]))
-                want[i] = _mint_id(int(u[i]), start)
-            assert dict(zip(order.tolist(), ids)) == want
-            assert users.tolist() == sorted(carried)
-            assert list(zip(starts.tolist(), lasts.tolist())) == [
-                carried[k] for k in sorted(carried)
-            ]
+    users = starts = lasts = _EMPTY
+    carried: dict[int, tuple[int, int]] = {}  # user -> (start, max ts)
+    for rows in batches:
+        u = np.array([r[0] for r in rows], dtype=np.int64)
+        t = np.array([r[1] for r in rows], dtype=np.int64) * 1_000_000
+        order, ids, users, starts, lasts = _sessionize_bucket(
+            u, t, users, starts, lasts, gap
+        )
+        want = {}
+        for i in sorted(range(len(rows)), key=lambda i: (u[i], t[i])):
+            start, seen = carried.get(int(u[i]), (None, None))
+            if seen is None or t[i] > seen + gap:
+                start = seen = int(t[i])
+            carried[int(u[i])] = (start, max(seen, int(t[i])))
+            want[i] = _mint_id(int(u[i]), start)
+        assert dict(zip(order.tolist(), ids)) == want
+        assert users.tolist() == sorted(carried)
+        assert list(zip(starts.tolist(), lasts.tolist())) == [
+            carried[k] for k in sorted(carried)
+        ]
 
 
 def test_bucket_state_from_another_bucket_count_is_rejected():
@@ -512,6 +529,33 @@ def test_bucket_state_from_another_bucket_count_is_rejected():
     fn = _make_bucket_fn("user_id", "ts", 1800 * 1_000_000, ["user_id"])
     with pytest.raises(RuntimeError, match="fresh checkpoint"):
         list(fn((0,), iter([]), _State()))
+
+
+def test_null_user_is_rejected():
+    """A null user turns the pandas column to float64, which would round
+    a user id like 2**53 + 3 onto another user; the operator raises."""
+    import pandas as pd
+
+    from commerce_sessionization_spark.streaming.sessionize_stream import (
+        _make_bucket_fn,
+    )
+
+    class _State:
+        exists = False
+
+        def getCurrentWatermarkMs(self):
+            return 0
+
+        def update(self, value):
+            pass
+
+    batch = pd.DataFrame({
+        "user_id": [None, 2**53 + 3],
+        "ts": pd.to_datetime(["2024-01-01 10:00", "2024-01-01 10:05"]),
+    })
+    fn = _make_bucket_fn("user_id", "ts", 1800 * 1_000_000, ["user_id"])
+    with pytest.raises(ValueError, match="'user_id'"):
+        list(fn((0,), iter([batch]), _State()))
 
 
 def test_stream_dedup_drops_redelivery_across_batches(spark, tmp_path):
