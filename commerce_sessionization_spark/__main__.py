@@ -349,6 +349,15 @@ def main(argv: list[str] | None = None) -> int:
             print(f"{qd.name:32s} {qd.doc}")
         return 0
     spark = get_spark(app_name=f"csz-{args.cmd}", master=args.master)
+
+    def load(table: str):
+        """``table`` by name under ``--sf-dir``, else a parquet path."""
+        if args.sf_dir:
+            from commerce_sessionization_spark.sources.tables import load_table
+
+            return load_table(spark, args.sf_dir, table)
+        return spark.read.parquet(table)
+
     try:
         if args.cmd == "divide":
             from commerce_sessionization_spark.operators import divide_file
@@ -536,45 +545,23 @@ def main(argv: list[str] | None = None) -> int:
         elif args.cmd == "corpus":
             from pyspark.sql import functions as F
 
-            from commerce_sessionization_spark.operators.dedup import (
-                exact_dedup,
-                ngram_jaccard_pairs,
-            )
             from commerce_sessionization_spark.operators.sampling import (
-                dsir_weights,
-                gumbel_top_k,
-                hash_split,
-            )
-            from commerce_sessionization_spark.operators.text import (
-                quality_score,
+                corpus_pipeline,
             )
 
             docs = spark.read.parquet(args.input)
-            scored = quality_score(docs)
-            kept = scored.where(
-                F.col("quality_score") >= args.min_quality
-            ).select(*docs.columns)
-            uniq = exact_dedup(kept).localCheckpoint()
-            dropb = (
-                ngram_jaccard_pairs(uniq, n=3, threshold=args.jaccard)
-                .select(F.col("b").alias("doc_id"))
-                .distinct()
-                .localCheckpoint()
+            if args.dsir_k and "lang" not in docs.columns:
+                top.error("--dsir-k needs a `lang` column for the target")
+            stages = corpus_pipeline(
+                docs,
+                min_quality=args.min_quality,
+                jaccard=args.jaccard,
+                dsir_k=args.dsir_k,
+                target_lang=args.target_lang,
+                audit=True,
             )
-            survivors = uniq.join(dropb, "doc_id", "left_anti")
-            if args.dsir_k:
-                if "lang" not in docs.columns:
-                    top.error("--dsir-k needs a `lang` column for the target")
-                survivors = survivors.localCheckpoint()
-                w = dsir_weights(
-                    survivors,
-                    survivors.filter(F.col("lang") == args.target_lang),
-                )
-                sel = gumbel_top_k(w, args.dsir_k).select("doc_id")
-                survivors = survivors.join(
-                    F.broadcast(sel), "doc_id", "left_semi"
-                )
-            corpus = hash_split(survivors, "doc_id").localCheckpoint()
+            # the input's columns and the label, without DSIR's weights
+            corpus = stages.corpus.select(*docs.columns, "split")
             if args.shards:
                 from commerce_sessionization_spark.operators.layout import (
                     write_shards,
@@ -584,32 +571,7 @@ def main(argv: list[str] | None = None) -> int:
                              n_shards=args.shards)
             else:
                 corpus.write.mode("overwrite").parquet(f"{args.out}/corpus")
-
-            kept_ids = corpus.select("doc_id").withColumn("_k", F.lit(1))
-            uniq_ids = uniq.select("doc_id").withColumn("_u", F.lit(1))
-            nd_ids = dropb.withColumn("_nd", F.lit(1))
-            reasons = (
-                scored.select("doc_id", "quality_score")
-                .join(uniq_ids, "doc_id", "left")
-                .join(nd_ids, "doc_id", "left")
-                .join(kept_ids, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    # NULL score (null/empty text) fails the quality
-                    # gate too — without the isNull arm it would fall
-                    # through to 'exact_dup' and misattribute the drop
-                    F.when(
-                        F.col("quality_score").isNull()
-                        | (F.col("quality_score") < args.min_quality),
-                        "quality",
-                    )
-                    .when(F.col("_u").isNull(), "exact_dup")
-                    .when(F.col("_nd") == 1, "near_dup")
-                    .when(F.col("_k").isNull(), "not_selected")
-                    .otherwise("kept")
-                    .alias("status"),
-                )
-            )
+            reasons = stages.drop_status()
             reasons.write.mode("overwrite").parquet(
                 f"{args.out}/drop_reasons"
             )
@@ -644,12 +606,7 @@ def main(argv: list[str] | None = None) -> int:
                 hex_to_long,
             )
 
-            if args.sf_dir:
-                from commerce_sessionization_spark.sources.tables import load_table
-
-                df = load_table(spark, args.sf_dir, args.table)
-            else:
-                df = spark.read.parquet(args.table)
+            df = load(args.table)
             names = (
                 [c.strip() for c in args.columns.split(",")]
                 if args.columns
@@ -674,12 +631,7 @@ def main(argv: list[str] | None = None) -> int:
 
             from commerce_sessionization_spark.operators.dq import profile_columns
 
-            if args.sf_dir:
-                from commerce_sessionization_spark.sources.tables import load_table
-
-                df = load_table(spark, args.sf_dir, args.table)
-            else:
-                df = spark.read.parquet(args.table)
+            df = load(args.table)
             names = (
                 [c.strip() for c in args.columns.split(",")]
                 if args.columns
@@ -694,12 +646,7 @@ def main(argv: list[str] | None = None) -> int:
                 key_skew_stats,
             )
 
-            if args.sf_dir:
-                from commerce_sessionization_spark.sources.tables import load_table
-
-                df = load_table(spark, args.sf_dir, args.table)
-            else:
-                df = spark.read.parquet(args.table)
+            df = load(args.table)
             keys = [c.strip() for c in args.key.split(",")]
             key_skew_stats(df, keys, top_k=args.top_k).show(
                 1, truncate=False, vertical=True
@@ -721,12 +668,7 @@ def main(argv: list[str] | None = None) -> int:
                 leakage_safe_split,
             )
 
-            if args.sf_dir:
-                from commerce_sessionization_spark.sources.tables import load_table
-
-                df = load_table(spark, args.sf_dir, args.table)
-            else:
-                df = spark.read.parquet(args.table)
+            df = load(args.table)
             if args.leakage_safe:
                 pairs = ngram_jaccard_pairs(
                     df, n=3, threshold=args.threshold,
@@ -750,12 +692,7 @@ def main(argv: list[str] | None = None) -> int:
                 mixture_waterfill,
             )
 
-            if args.sf_dir:
-                from commerce_sessionization_spark.sources.tables import load_table
-
-                df = load_table(spark, args.sf_dir, args.table)
-            else:
-                df = spark.read.parquet(args.table)
+            df = load(args.table)
             avail = df.groupBy(F.col(args.domain).alias("domain")).agg(
                 F.sum(args.size).alias("available"),
                 F.count(F.lit(1)).alias("_c"),
@@ -789,18 +726,9 @@ def main(argv: list[str] | None = None) -> int:
                 data_drift_psi,
             )
 
-            def _load(name: str):
-                if args.sf_dir:
-                    from commerce_sessionization_spark.sources.tables import (
-                        load_table,
-                    )
-
-                    return load_table(spark, args.sf_dir, name)
-                return spark.read.parquet(name)
-
             cols = [c.strip() for c in args.columns.split(",")]
             data_drift_psi(
-                _load(args.ref), _load(args.cur), cols, buckets=args.buckets
+                load(args.ref), load(args.cur), cols, buckets=args.buckets
             ).orderBy("column").show(truncate=False)
         elif args.cmd == "pca":
             import json as _json
@@ -810,12 +738,7 @@ def main(argv: list[str] | None = None) -> int:
                 pca_project,
             )
 
-            if args.sf_dir:
-                from commerce_sessionization_spark.sources.tables import load_table
-
-                df = load_table(spark, args.sf_dir, args.table)
-            else:
-                df = spark.read.parquet(args.table)
+            df = load(args.table)
             comps, mean, ev = pca_fit(df, vec_col=args.vec_col, k=args.k)
             projected = pca_project(
                 df,

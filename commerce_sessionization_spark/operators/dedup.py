@@ -75,20 +75,22 @@ def word_shingles(text: Column, n: int = 3, distinct: bool = True) -> Column:
     return shingles_from_words(normalized_words(text), n, distinct)
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Scan-parallelism guard for explosion-heavy per-doc operators.
+def spread(df: DataFrame) -> DataFrame:
+    """Scan-parallelism guard for operators that multiply every scanned
+    row before their first exchange (a per-doc word split + shingle
+    explode, a k-distinct profile's Expand).
 
-    Every gram operator funnels the corpus through a wide per-doc
-    expansion (word split + shingle transform + explode) whose cost is
-    10-100x the raw text scan. When the source provides fewer input
-    splits than the cluster has slots — a single parquet row group is
-    unsplittable, and testdata's documents table is exactly that — the
-    entire expansion runs on those few tasks (measured: 4.5 of 10.8 s
-    single-task at sf0.1). One defensive round-robin repartition of the
-    RAW rows (cheap: just the text bytes, before any expansion) fixes
-    it; when the scan is already at least slot-parallel — any sanely
-    laid-out 100 TB corpus — this is a no-op costing one plan->RDD
-    partition probe, so the big-data path keeps its shuffle-free scan.
+    That expansion costs 10-100x the raw scan. When the source provides
+    fewer input splits than the cluster has slots — a single parquet
+    row group is unsplittable, and testdata's tables are exactly that —
+    all of it runs on those few tasks. Measured at sf0.1: gram
+    operators on documents ran 4.5 of 10.8 s in one task; the orders
+    profile gave one task 3.8 of 6.1 task-seconds. One defensive
+    round-robin repartition of the RAW rows (cheap: just the scanned
+    bytes, before any expansion) fixes it; when the scan is already at
+    least slot-parallel — any sanely laid-out 100 TB corpus — this is a
+    no-op costing one plan->RDD partition probe, so the big-data path
+    keeps its shuffle-free scan. Callers must be order-independent.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
@@ -100,7 +102,7 @@ def _with_words(
     df: DataFrame, id_col: str, text_col: str, out: str = "_w"
 ) -> DataFrame:
     """(id, words) projection — the materialization step lambdas need."""
-    return _spread(df).select(
+    return spread(df).select(
         F.col(id_col).alias("_id"),
         normalized_words(F.col(text_col)).alias(out),
     )

@@ -24,6 +24,8 @@ from typing import Any, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from commerce_sessionization_spark.operators.dedup import spread
+
 
 @dataclass(frozen=True)
 class Rule:
@@ -174,19 +176,9 @@ def profile_columns(
     """
     if not cols:
         raise ValueError("need at least one column")
-    # Scan-parallelism guard (round-11, guide §2.5 input skew): the
-    # k-distinct Expand multiplies every scanned row (k+1)× BEFORE the
-    # first exchange, so a source with fewer input splits than the
-    # cluster has slots runs the whole fanout + partial aggregation on
-    # those few tasks (measured at sf0.1: the orders table is one
-    # parquet row group → ONE task owned 3.8 of 6.1 task-seconds). One
-    # defensive round-robin repartition of the raw rows parallelizes
-    # it; on any sanely-laid-out big table the branch is a no-op. Every
-    # profile statistic is order-independent (count/min/max/distinct,
-    # HLL merge), so values are unchanged.
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)
+    # the k-distinct Expand multiplies every row (k+1)x before the first
+    # exchange; every statistic is order-independent
+    df = spread(df)
     aggs = [F.count(F.lit(1)).alias("_n")]
     for name, expr in cols:
         ndv = (

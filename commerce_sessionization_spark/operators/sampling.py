@@ -7,9 +7,15 @@ the row id — deterministic across runs, engines, and partitionings (no
 ``rand()`` state), join-stable (the same id always lands in the same
 split, so features computed in separate jobs can't leak across splits),
 and mergeable (new data splits independently of old).
+
+``corpus_pipeline`` chains the whole training-corpus preparation
+(quality gate → exact dedup → near-dup prune → optional DSIR top-k →
+split) once, for the ``corpus`` CLI and every catalog query built on it.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -490,4 +496,110 @@ def dsir_weights(
     counts = ct.join(cr, "bucket", "full")
     return dsir_score(
         raw, dsir_log_ratios(counts, B), text_col, id_col, B
+    )
+
+
+@dataclass(frozen=True)
+class CorpusStages:
+    """The stages of one :func:`corpus_pipeline` run that
+    :meth:`drop_status` reads back to say where each document left."""
+
+    scored: DataFrame  # every input row plus its quality_score
+    uniq: DataFrame  # gate-passing exact-dedup representatives
+    near_dups: DataFrame | None  # doc_id of each pruned near-duplicate
+    corpus: DataFrame  # the kept rows with their split label
+    min_quality: float
+    selected: bool  # a DSIR top-k stage ran
+
+    def drop_status(self) -> DataFrame:
+        """(doc_id, status) for every input document, attributed to the
+        first stage that dropped it: 'quality' (below the gate, or a
+        NULL score from null/empty text), 'exact_dup' (lost the min-id
+        representative), 'near_dup' (pruned as the larger id of a
+        Jaccard pair), 'not_selected' (survived pruning, missed the
+        DSIR top-k) or 'kept'. Needs the near-dup stage."""
+
+        def ids(df: DataFrame, flag: str) -> DataFrame:
+            return df.select("doc_id").withColumn(flag, F.lit(1))
+
+        rows = (
+            self.scored.select("doc_id", "quality_score")
+            .join(ids(self.uniq, "_u"), "doc_id", "left")
+            .join(ids(self.near_dups, "_nd"), "doc_id", "left")
+        )
+        if self.selected:
+            rows = rows.join(ids(self.corpus, "_k"), "doc_id", "left")
+        else:  # without a selection stage every survivor is kept
+            rows = rows.withColumn("_k", F.lit(1))
+        score = F.col("quality_score")
+        return rows.select(
+            "doc_id",
+            F.when(score.isNull() | (score < self.min_quality), "quality")
+            .when(F.col("_u").isNull(), "exact_dup")
+            .when(F.col("_nd") == 1, "near_dup")
+            .when(F.col("_k").isNull(), "not_selected")
+            .otherwise("kept")
+            .alias("status"),
+        )
+
+
+def corpus_pipeline(
+    docs: DataFrame,
+    min_quality: float = 0.5,
+    jaccard: float | None = 0.8,
+    dsir_k: int | None = None,
+    target_lang: str = "en",
+    audit: bool = False,
+) -> CorpusStages:
+    """Training-corpus preparation over (doc_id, text[, lang]) rows, in
+    the order practitioners run the passes: quality gate (``quality_score``
+    ≥ ``min_quality``) → exact dedup (min-id representative) → near-dup
+    prune (drop the larger id of every 3-gram Jaccard ≥ ``jaccard`` pair
+    among the representatives; skipped when ``jaccard`` is None) →
+    optional DSIR Gumbel-top-``dsir_k`` toward the ``lang ==
+    target_lang`` subcorpus → 90/5/5 ``hash_split`` labels.
+
+    With DSIR the kept rows also carry their ``n_grams`` and
+    ``dsir_w_q6`` (the selection's evidence), joined back from the
+    k-row top-k by broadcast.
+
+    A stage is pinned (``localCheckpoint``) only where it is read twice:
+    ``uniq`` feeds both the pair generation and the anti-join, the
+    survivors feed both DSIR corpus statistics and the join back, and
+    ``audit=True`` pins the near-dup ids and the corpus, which
+    :meth:`CorpusStages.drop_status` and the caller's writes read again.
+    """
+    from commerce_sessionization_spark.operators.dedup import (
+        exact_dedup,
+        ngram_jaccard_pairs,
+    )
+    from commerce_sessionization_spark.operators.text import quality_score
+
+    scored = quality_score(docs)
+    gated = scored.where(F.col("quality_score") >= min_quality)
+    uniq = exact_dedup(gated.select(*docs.columns))
+    survivors, near_dups = uniq, None
+    if jaccard is not None:
+        uniq = uniq.localCheckpoint()
+        near_dups = (
+            ngram_jaccard_pairs(uniq, n=3, threshold=jaccard)
+            .select(F.col("b").alias("doc_id"))
+            .distinct()
+        )
+        if audit:
+            near_dups = near_dups.localCheckpoint()
+        survivors = uniq.join(near_dups, "doc_id", "left_anti")
+    if dsir_k:
+        survivors = survivors.localCheckpoint()
+        w = dsir_weights(
+            survivors, survivors.filter(F.col("lang") == target_lang)
+        )
+        survivors = survivors.join(
+            F.broadcast(gumbel_top_k(w, dsir_k)), "doc_id"
+        )
+    corpus = hash_split(survivors, "doc_id")
+    if audit:
+        corpus = corpus.localCheckpoint()
+    return CorpusStages(
+        scored, uniq, near_dups, corpus, min_quality, bool(dsir_k)
     )

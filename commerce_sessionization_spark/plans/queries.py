@@ -51,6 +51,7 @@ from commerce_sessionization_spark.operators.merge import (
     collapse_batch,
     merge_upsert,
 )
+from commerce_sessionization_spark.operators.sampling import corpus_pipeline
 from commerce_sessionization_spark.operators.sessions import sessionize
 from commerce_sessionization_spark.operators.sketches import (
     bloom_bits,
@@ -3195,24 +3196,8 @@ def q_llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup (min-id representative) → near-dup prune (drop the larger id of
     any ≥ 0.8 Jaccard pair among survivors) → deterministic split labels.
     One oracle checks the whole chain end-to-end."""
-    from commerce_sessionization_spark.operators.sampling import hash_split
-
     docs = load_table(spark, sf_dir, "documents")
-    kept = (
-        quality_score(docs)
-        .where(F.col("quality_score") >= 0.5)
-        .select(*docs.columns)
-    )
-    # stage materialization: `uniq` feeds BOTH the near-dup pair gen and
-    # the survivor anti-join — a real pipeline writes each stage to
-    # parquet; the pin is the in-process equivalent (one quality+dedup
-    # pass instead of two)
-    uniq = exact_dedup(kept).localCheckpoint()
-    pairs = ngram_jaccard_pairs(uniq, n=3, threshold=0.8)
-    survivors = uniq.join(
-        pairs.select(F.col("b").alias("doc_id")).distinct(), "doc_id", "left_anti"
-    )
-    return hash_split(survivors, "doc_id").select("doc_id", "split")
+    return corpus_pipeline(docs).corpus.select("doc_id", "split")
 
 
 _SPLIT_CASE_SQL = """CASE WHEN h < 9000 THEN 'train'
@@ -7618,16 +7603,11 @@ def q_llm_training_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
         chunk_documents,
         pack_sequences,
     )
-    from commerce_sessionization_spark.operators.sampling import hash_split
 
     docs = load_table(spark, sf_dir, "documents")
-    kept = (
-        quality_score(docs)
-        .where(F.col("quality_score") >= 0.5)
-        .select(*docs.columns)
+    train = corpus_pipeline(docs, jaccard=None).corpus.where(
+        F.col("split") == "train"
     )
-    uniq = exact_dedup(kept)
-    train = hash_split(uniq, "doc_id").where(F.col("split") == "train")
     chunks = chunk_documents(train, window=_CHUNK_W, stride=_CHUNK_S)
     items = chunks.select(
         (F.col("doc_id") * 10000 + F.col("chunk_id")).alias("item_id"),
@@ -12113,31 +12093,8 @@ def q_llm_corpus_dsir_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     split) with the data-selection stage between pruning and splitting;
     one oracle checks the whole chain end-to-end.
     """
-    from commerce_sessionization_spark.operators.sampling import (
-        dsir_weights,
-        gumbel_top_k,
-        hash_split,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
-    kept = (
-        quality_score(docs)
-        .where(F.col("quality_score") >= 0.5)
-        .select(*docs.columns)
-    )
-    uniq = exact_dedup(kept).localCheckpoint()
-    pairs = ngram_jaccard_pairs(uniq, n=3, threshold=0.8)
-    # pinned: dsir_weights reads the survivor set TWICE (raw corpus +
-    # English target) and its upstream is the expensive Jaccard pair
-    # generation — the same stage-materialization argument as `uniq`
-    survivors = uniq.join(
-        pairs.select(F.col("b").alias("doc_id")).distinct(),
-        "doc_id",
-        "left_anti",
-    ).localCheckpoint()
-    w = dsir_weights(survivors, survivors.filter(F.col("lang") == "en"))
-    sel = gumbel_top_k(w, 100)
-    return hash_split(sel, "doc_id").select(
+    return corpus_pipeline(docs, dsir_k=100).corpus.select(
         "doc_id", "n_grams", "dsir_w_q6", "split"
     )
 
@@ -12202,43 +12159,15 @@ def q_corpus_drop_reasons(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pipeline observability: WHY each document left the corpus. Every
     doc gets a status — 'quality' (failed the gate), 'exact_dup' (passed
     quality, lost the exact-dedup argmin), 'near_dup' (pruned as the
-    larger id of a ≥0.8-Jaccard pair), or 'kept'. The attribution is
+    larger id of a ≥0.8-Jaccard pair), or 'kept' (no DSIR stage here,
+    so never 'not_selected'). The attribution is
     stage-ordered like the pipeline itself, so per-stage loss rates are
     one groupBy away — the first question anyone asks of a corpus run
     ("where did my documents go?") answered as a table, auditable
     against the oracle end-to-end.
     """
     docs = load_table(spark, sf_dir, "documents")
-    scored = quality_score(docs)
-    kept = scored.where(F.col("quality_score") >= 0.5).select(*docs.columns)
-    uniq = exact_dedup(kept).localCheckpoint()
-    dropb = (
-        ngram_jaccard_pairs(uniq, n=3, threshold=0.8)
-        .select(F.col("b").alias("doc_id"))
-        .distinct()
-        .withColumn("_nd", F.lit(1))
-    )
-    uniq_ids = uniq.select("doc_id").withColumn("_u", F.lit(1))
-    return (
-        scored.select("doc_id", "quality_score")
-        .join(uniq_ids, "doc_id", "left")
-        .join(dropb, "doc_id", "left")
-        .select(
-            "doc_id",
-            # NULL score (null/empty text) fails the gate as well: the
-            # isNull arm keeps the attribution at the quality stage
-            # instead of falling through to 'exact_dup'
-            F.when(
-                F.col("quality_score").isNull()
-                | (F.col("quality_score") < 0.5),
-                "quality",
-            )
-            .when(F.col("_u").isNull(), "exact_dup")
-            .when(F.col("_nd") == 1, "near_dup")
-            .otherwise("kept")
-            .alias("status"),
-        )
-    )
+    return corpus_pipeline(docs).drop_status()
 
 
 SQL_CORPUS_DROP_REASONS = f"""

@@ -3,6 +3,8 @@ cross-engine parity on the near-dup graph; these pin the math)."""
 
 from __future__ import annotations
 
+import struct
+
 import pytest
 
 from pyspark.sql import Row
@@ -658,6 +660,12 @@ def test_hits_catalog_fast_matches_exact_on_testdata(spark):
         assert fast[n][1] == pytest.approx(exact[n][1], abs=2e-6)
 
 
+def _rank_bits(ranks) -> dict:
+    """node -> the rank's IEEE-754 bytes: float ``==`` equates 0.0 and
+    -0.0, byte equality is bit identity."""
+    return {r["node"]: struct.pack("<d", r["rank"]) for r in ranks.collect()}
+
+
 class TestPagerankExactLongSplit:
     """Round-11 long-split accumulation (graph.pagerank, broadcast
     regime): the hi/lo LONG sums + decimal merge must reproduce the
@@ -677,38 +685,28 @@ class TestPagerankExactLongSplit:
     def test_split_matches_all_decimal(self, spark, damping):
         e = _edges(spark, self._pairs())
         v = _verts(spark, range(10))
-        split = {
-            r["node"]: r["rank"]
-            for r in pagerank(
-                e, v, iterations=5, damping=damping, exact=True
-            ).collect()
-        }
-        ref = {
-            r["node"]: r["rank"]
-            for r in pagerank(
+        split = _rank_bits(
+            pagerank(e, v, iterations=5, damping=damping, exact=True)
+        )
+        ref = _rank_bits(
+            pagerank(
                 e, v, iterations=5, damping=damping, exact=True,
                 partition_invariants=False,
-            ).collect()
-        }
-        assert split == ref  # bit-identical doubles, not approx
+            )
+        )
+        assert split == ref
 
     def test_seeded_split_matches_all_decimal(self, spark):
         e = _edges(spark, self._pairs())
         v = _verts(spark, range(10))
         s = _verts(spark, [0, 3])
-        split = {
-            r["node"]: r["rank"]
-            for r in pagerank(
-                e, v, iterations=5, exact=True, seeds=s
-            ).collect()
-        }
-        ref = {
-            r["node"]: r["rank"]
-            for r in pagerank(
+        split = _rank_bits(pagerank(e, v, iterations=5, exact=True, seeds=s))
+        ref = _rank_bits(
+            pagerank(
                 e, v, iterations=5, exact=True, seeds=s,
                 partition_invariants=False,
-            ).collect()
-        }
+            )
+        )
         assert split == ref
 
     def test_out_of_domain_damping_falls_back(self, spark):
@@ -717,17 +715,13 @@ class TestPagerankExactLongSplit:
         # agree with the shuffle-regime reference
         e = _edges(spark, self._pairs())
         v = _verts(spark, range(10))
-        split = {
-            r["node"]: r["rank"]
-            for r in pagerank(
-                e, v, iterations=3, damping=1.5, exact=True
-            ).collect()
-        }
-        ref = {
-            r["node"]: r["rank"]
-            for r in pagerank(
+        split = _rank_bits(
+            pagerank(e, v, iterations=3, damping=1.5, exact=True)
+        )
+        ref = _rank_bits(
+            pagerank(
                 e, v, iterations=3, damping=1.5, exact=True,
                 partition_invariants=False,
-            ).collect()
-        }
+            )
+        )
         assert split == ref

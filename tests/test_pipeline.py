@@ -648,6 +648,28 @@ def test_cli_corpus_shards(tmp_path):
     assert total[0] == total[1] == sum(n for _, n in shards)
 
 
+def test_corpus_pipeline_dsir_attribution(spark):
+    """The stage chain and drop attribution behind `corpus --dsir-k 20`,
+    in the fast tier: DSIR caps the corpus at 20, every document is
+    attributed exactly once, the 'kept' ids are the corpus ids, and
+    survivors the top-k passed over are 'not_selected'."""
+    from commerce_sessionization_spark.operators.sampling import (
+        corpus_pipeline,
+    )
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    stages = corpus_pipeline(docs, dsir_k=20, audit=True)
+    corpus_ids = [r["doc_id"] for r in stages.corpus.collect()]
+    assert len(corpus_ids) == 20  # DSIR top-k caps the corpus
+    assert "split" in stages.corpus.columns
+    status = stages.drop_status().collect()
+    doc_ids = [r["doc_id"] for r in docs.select("doc_id").collect()]
+    assert sorted(r["doc_id"] for r in status) == sorted(doc_ids)
+    kept = {r["doc_id"] for r in status if r["status"] == "kept"}
+    assert kept == set(corpus_ids)
+    assert "not_selected" in {r["status"] for r in status}
+
+
 def test_cli_crawl_frontier_composition(tmp_path):
     """`crawl --frontier-out` closes the crawl loop: the next fetch
     batch holds outlink targets NOT in the fetched set, in-degree
