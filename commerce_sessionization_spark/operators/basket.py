@@ -33,7 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from commerce_sessionization_spark.session import pin
 
 
 def association_rules(
@@ -50,25 +51,17 @@ def association_rules(
     ``antecedent, consequent, pair_count, antecedent_count,
     consequent_count, confidence, lift``. Multiplicity within a basket
     is ignored (set semantics), matching the standard formulation.
-    Eager-pin contract (round-11, documents the round-10 change):
-    constructing this DataFrame runs Spark jobs immediately — a
-    multiply-consumed intermediate is ``localCheckpoint``-pinned, so the
-    input is snapshotted at CALL time (not action time), pushdown does
-    not cross the pin, and the pin is not fault-tolerant to executor
-    loss (an acceptable trade for a materialize-once single execution;
-    recompute-from-source callers should re-invoke the operator).
+    Eager: building this DataFrame runs a Spark job (``session.pin``).
     """
     # pinned: the distinct item set feeds THREE consumers — the eager
     # n_baskets count below, the pass-1 frequency aggregate, and the
     # pass-2 probe join — and its subtree re-reads (and re-distincts)
-    # the fact table per consumer when unpinned. Serialized level (cf.
-    # the graph-loop pins): the basket-item pair set is fact-scale.
-    items = (
+    # the fact table per consumer when unpinned.
+    items = pin(
         df.select(
             F.col(basket_col).alias("basket"), F.col(item_col).alias("item")
         )
         .distinct()
-        .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
 
     n_baskets = items.select("basket").distinct().count()

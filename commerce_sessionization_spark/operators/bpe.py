@@ -23,7 +23,7 @@ engine/partitioning.
 Scale: per round the shuffle carries only (pair, partial count) rows —
 vocabulary-bounded, not corpus-bounded — and the corpus rewrite is
 narrow. ``iterations`` is the driver loop; each round
-``localCheckpoint``s the re-segmented corpus so lineage stays O(1)
+pins (``session.pin``) the re-segmented corpus so lineage stays O(1)
 (the pagerank pattern).
 """
 
@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from commerce_sessionization_spark.session import pin
 
 
 def to_symbol_seqs(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -87,7 +89,7 @@ def bpe_train(
     pair's corpus frequency at the round it was chosen. Ties break on
     (a, b) lexical order for cross-run determinism.
     """
-    seqs = to_symbol_seqs(df, text_col).localCheckpoint()
+    seqs = pin(to_symbol_seqs(df, text_col))
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):
         top = (
@@ -100,9 +102,7 @@ def bpe_train(
             break
         a, b, n = top[0]["a"], top[0]["b"], top[0]["n"]
         merges.append((a, b, int(n)))
-        seqs = seqs.select(
-            _merge_expr(F.col("syms"), a, b).alias("syms")
-        ).localCheckpoint()
+        seqs = pin(seqs.select(_merge_expr(F.col("syms"), a, b).alias("syms")))
     return merges
 
 

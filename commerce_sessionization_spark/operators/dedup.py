@@ -30,9 +30,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from commerce_sessionization_spark.functions.hashing import hex_to_long
+from commerce_sessionization_spark.session import pin
 
 #: Mersenne prime 2^61 - 1: modulus for the MinHash permutation family.
 MERSENNE_61 = (1 << 61) - 1
@@ -192,13 +192,7 @@ def ngram_jaccard_pairs(
 
     Output: (a, b, jaccard) with jaccard rounded to 6 decimals.
 
-    Eager-pin contract (round-11, documents the round-10 change):
-    constructing this DataFrame runs Spark jobs immediately — the
-    multiply-consumed intermediate is ``localCheckpoint``-pinned, so the
-    input is snapshotted at CALL time (not action time), pushdown does
-    not cross the pin, and the pin is not fault-tolerant to executor
-    loss (an acceptable trade for a materialize-once single execution;
-    recompute-from-source callers should re-invoke the operator).
+    Eager: building this DataFrame runs a Spark job (``session.pin``).
     """
     sh = _with_words(df, id_col, text_col).select(
         "_id",
@@ -208,7 +202,7 @@ def ngram_jaccard_pairs(
     # self-join (whose two sides already share one exchange) — unpinned,
     # the tokenize+shingle pass executed twice (cf. the k-gram pin in
     # exact_substring_dedup).
-    sh = sh.localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+    sh = pin(sh)
     sizes = sh.groupBy("_id").agg(F.count(F.lit(1)).alias("_n"))
 
     left = sh.alias("l")
@@ -433,7 +427,7 @@ def minhash_lsh_dedup_pairs(
     )
     # candidates feed two consumers (the id semi-join and the pair join);
     # materialize once so the signature/banding pipeline doesn't run twice
-    cands = cands.localCheckpoint()
+    cands = pin(cands)
     # shingle only docs that appear in a candidate pair (semi-join first):
     # the verification set is tiny relative to the corpus, so the expensive
     # array build runs on |candidates| docs, not 2×|corpus|
@@ -477,18 +471,17 @@ def dedup_components(
     min label across the (symmetrized) edge list, then (2) compresses
     ``comp → comp_of(comp)`` — so convergence is O(log component-diameter),
     not O(diameter). Stops when a round changes nothing. Labels are
-    ``localCheckpoint``ed per round to cut lineage; every round works on
+    pinned (``session.pin``) per round to cut lineage; every round works on
     the (tiny) pair set, never touching full documents.
     """
-    edges = (
+    edges = pin(
         pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionByName(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
         .distinct()
-        .localCheckpoint()
     )
-    labels = ids.select(
-        F.col(id_col).alias("node"), F.col(id_col).alias("comp")
-    ).localCheckpoint()
+    labels = pin(
+        ids.select(F.col(id_col).alias("node"), F.col(id_col).alias("comp"))
+    )
     for _ in range(max_iter):
         neighbor_min = (
             edges.join(labels, edges["dst"] == labels["node"])
@@ -507,13 +500,12 @@ def dedup_components(
         hop = propagated.select(
             F.col("node").alias("c_node"), F.col("comp").alias("c_comp")
         )
-        new_labels = (
+        new_labels = pin(
             propagated.join(hop, propagated["comp"] == hop["c_node"], "left")
             .select(
                 "node",
                 F.coalesce(F.col("c_comp"), F.col("comp")).alias("comp"),
             )
-            .localCheckpoint()
         )
         changed = (
             new_labels.alias("n")
@@ -783,22 +775,14 @@ def cdc_chunk_dedup(
     still chunks identically from its first anchor on, where fixed
     segmentation sees |header|-dependent windows and misses all of it.
     
-    Eager-pin contract (round-11, documents the round-10 change):
-    constructing this DataFrame runs Spark jobs immediately — a
-    multiply-consumed intermediate is ``localCheckpoint``-pinned, so the
-    input is snapshotted at CALL time (not action time), pushdown does
-    not cross the pin, and the pin is not fault-tolerant to executor
-    loss (an acceptable trade for a materialize-once single execution;
-    recompute-from-source callers should re-invoke the operator).
+    Eager: building this DataFrame runs a Spark job (``session.pin``).
     """
     # pinned: the chunk table feeds THREE consumers (the boilerplate
     # frequency count, the anti-join probe side, and the per-doc chunk
     # count), and its subtree prices one sha2 per TOKEN — unpinned, the
     # whole per-token hashing pass executes three times (cf. the
     # minhash_lsh_dedup_pairs cands pin).
-    chunks = cdc_chunks(df, id_col, text_col, divisor).localCheckpoint(
-        storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+    chunks = pin(cdc_chunks(df, id_col, text_col, divisor))
     boiler = (
         chunks.groupBy("chunk_sha")
         .agg(F.count_distinct(F.col(id_col)).alias("_nd"))
@@ -933,13 +917,7 @@ def exact_substring_dedup(
     groupBy(doc) array_sort(collect_list) shape as ``segment_dedup``.
     All built-ins, whole-stage codegen end to end.
 
-    Eager-pin contract (round-11, documents the round-10 change):
-    constructing this DataFrame runs Spark jobs immediately — a
-    multiply-consumed intermediate is ``localCheckpoint``-pinned, so the
-    input is snapshotted at CALL time (not action time), pushdown does
-    not cross the pin, and the pin is not fault-tolerant to executor
-    loss (an acceptable trade for a materialize-once single execution;
-    recompute-from-source callers should re-invoke the operator).
+    Eager: building this DataFrame runs a Spark job (``session.pin``).
     """
     if count_mode not in ("docs", "occurrences"):
         raise ValueError(f"count_mode must be docs|occurrences: {count_mode}")
@@ -949,9 +927,7 @@ def exact_substring_dedup(
     # the covered-position probe join, and its subtree prices one sha2
     # per word k-gram — unpinned, the tokenize+hash pass executed twice
     # (cf. the cdc_chunk_dedup chunk pin). Narrow (_id, _p, _h) rows.
-    grams = _word_kgrams(toks, window).localCheckpoint(
-        storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+    grams = pin(_word_kgrams(toks, window))
     freq = (
         F.count_distinct(F.col("_id"))
         if count_mode == "docs"

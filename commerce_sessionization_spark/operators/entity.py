@@ -37,7 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from commerce_sessionization_spark.session import pin
 
 
 def passjoin_segments(
@@ -111,11 +112,10 @@ def blocked_match_pairs(
     # block-cap aggregate + semi-join above — executed twice. The
     # materialized rows are the narrow (_id, block keys, padded prefix)
     # projection, far cheaper to hold than the second cap pass they
-    # replace (serialized level, cf. the dedup token pins; eager-pin
-    # contract as documented on those operators).
-    base = df.select(
-        F.col(id_col).alias("_id"), *block_keys, pad.alias("_p")
-    ).localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+    # replace.
+    base = pin(
+        df.select(F.col(id_col).alias("_id"), *block_keys, pad.alias("_p"))
+    )
 
     # signature side: each record's max_dist+1 template segments at
     # their home slots

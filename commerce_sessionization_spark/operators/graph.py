@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from commerce_sessionization_spark.session import pin
+
 
 def _dec(col: F.Column) -> F.Column:
     return col.cast("decimal(38,18)")
@@ -98,7 +100,7 @@ def pagerank(
     the correct plan for billion-node graphs. The dangling mass is a
     scalar, carried by a broadcast crossJoin; the iteration count is a
     bounded constant. No per-vertex driver state — the driver loop only
-    rebinds DataFrames. Each round ``localCheckpoint``s the new rank
+    rebinds DataFrames. Each round pins (``session.pin``) the new rank
     table so the lineage — and with it the replayed-plan depth — stays
     O(1) instead of O(iterations).
 
@@ -138,15 +140,10 @@ def pagerank(
     # this its entire upstream lineage (often an expensive pair-generation
     # subtree, e.g. the Jaccard self-join feeding the near-dup graph) would
     # re-execute per round — measured 36.7 s → ~8 s at sf0.1 for 5 rounds.
-    # persist (compressed columnar batches, unrolled incrementally, spills
-    # per batch) rather than localCheckpoint (deserialized row blocks,
-    # unrolled per partition): on a 10M-node/700M-edge graph squeezed
-    # into one local-mode JVM the row blocks OOM an 8 GiB heap, while
-    # the columnar pin fits — and on a cluster the same level just means
-    # less aggregate cache memory. The plan stays loop-invariant, so the
-    # O(1)-lineage argument for a checkpoint doesn't apply.
+    # Loop-invariant, so columnar persist (the other pin kind, see
+    # session.pin): a 10M-node/700M-edge graph fits an 8 GiB local JVM.
     edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    vertices = vertices.localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+    vertices = pin(vertices)
     # count AFTER the checkpoint: it reads the materialized partitions
     # instead of executing the vertex subtree a second time
     n_vert = vertices.count()  # scalar dimension, like k-means' k
@@ -157,9 +154,7 @@ def pagerank(
             F.col(id_col), F.lit(0.0).alias("rank")
         )
     if seeds is not None:
-        seed_ck = seeds.select(id_col).distinct().localCheckpoint(
-            storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
+        seed_ck = pin(seeds.select(id_col).distinct())
         n_seed = seed_ck.count()
         if n_seed == 0:
             raise ValueError("personalized pagerank needs >= 1 seed node")
@@ -191,7 +186,7 @@ def pagerank(
     # pinned edge list — a |V|-sized checkpoint replaces a second |E|
     # pass (measured as one of the two edge-scan jobs in the iters=0
     # setup split; the values are byte-identical, only computed once).
-    out_deg = out_deg.localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+    out_deg = pin(out_deg)
     base = F.lit((1.0 - damping) / n_vert)
     small = n_vert <= broadcast_vertices
 
@@ -227,23 +222,20 @@ def pagerank(
         # edge join), so the ONLY per-round exchange left is the
         # groupBy(_dst) aggregation and the contribs⋈vertices join-back.
         # Kill both: lay wedges out hash-partitioned by _dst and vertices
-        # by id ONCE, and pin them with cache() rather than
-        # localCheckpoint() — a checkpoint's LogicalRDD forgets its
-        # outputPartitioning (plan-asserted in tests/test_graph.py), while
-        # InMemoryRelation keeps it, so Catalyst elides the per-round
-        # Exchange under the aggregate (alias-aware: _dst → id_col) and
+        # by id ONCE, and pin them with cache(): InMemoryRelation keeps
+        # the outputPartitioning a checkpoint forgets (session.pin;
+        # plan-asserted in tests/test_graph.py), so Catalyst elides the
+        # per-round Exchange under the aggregate (alias-aware: _dst → id_col) and
         # under both sides of the join-back. Net: ZERO data shuffles per
         # iteration; the loop moves only the broadcast of the small rank
-        # table. Both caches are loop-invariant (shallow plans, so the
-        # O(1)-lineage argument for checkpointing doesn't apply) and are
-        # released before return.
+        # table. Both caches are released before return.
         wedges = wedges.repartition(F.col("_dst")).cache()
         vertices = vertices.repartition(F.col(id_col)).cache()
     else:
         # shuffle regime (billion-node graphs, or partition_invariants
         # off): the rank⋈edges join and the groupBy(dst) each need their
         # own key layout, so one shuffle per round is inherent (the
-        # standard Pregel cost); pin as compressed columnar (cf. edges).
+        # standard Pregel cost); loop-invariant, so columnar persist.
         wedges = wedges.persist(StorageLevel.MEMORY_AND_DISK)
         if weight_col is None:
             # the vertices⋈out_deg augmentation above must not re-run
@@ -270,7 +262,7 @@ def pagerank(
     )
     n_dang = dang_lazy.count()
     dang_nodes = (
-        dang_lazy.localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+        pin(dang_lazy)
         if n_dang > 0
         else None
     )
@@ -282,9 +274,7 @@ def pagerank(
     # rank checkpoint (8 bytes/vertex) so the per-source contribution can
     # be computed on the rank side before the edge join
     carry = ["_outdeg"] if weight_col is None else []
-    ranks = vertices.select(
-        F.col(id_col), init_rank.alias("rank"), *carry
-    ).localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+    ranks = pin(vertices.select(F.col(id_col), init_rank.alias("rank"), *carry))
 
     # Exact-mode long-split accumulation (round-11, guide §2.3 — same
     # derivation as operators/ml.py's sufficient-stats split): in the
@@ -400,9 +390,7 @@ def pagerank(
                 "left_semi",
             ).agg(_sum0(F.col("rank")).alias("_dangling"))
             nxt = nxt.crossJoin(F.broadcast(dangling))
-        ranks = nxt.select(
-            F.col(id_col), new_rank.alias("rank"), *carry
-        ).localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+        ranks = pin(nxt.select(F.col(id_col), new_rank.alias("rank"), *carry))
     if carry:
         # drop the carried loop-invariant from the output contract
         # (lazy projection over the materialized checkpoint)
@@ -463,9 +451,6 @@ def triangle_counts(
         # subtree) is referenced by the degree count, the ranked
         # direction, and both sides of the wedge join — without this
         # the upstream re-executes per reference (cf. pagerank).
-        # Compressed-columnar persist, not localCheckpoint: deserialized
-        # row blocks OOM the single local-mode JVM at the sf10 edge
-        # count (see pagerank's edge pin for the full rationale).
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     deg = (
@@ -493,10 +478,8 @@ def triangle_counts(
         # without an exchange, and (b) the wide per-edge intersect stage
         # parallelizes — without it AQE can hand the pin a single
         # coalesced partition and the whole credit stage runs one-task
-        # (9.5 s of a 17 s wall at sf0.1, measured). Columnar persist
-        # (InMemoryRelation keeps outputPartitioning, unlike a
-        # checkpoint's LogicalRDD) instead of localCheckpoint — the
-        # deserialized row blocks OOM the local JVM at sf10 edge counts.
+        # (9.5 s of a 17 s wall at sf0.1, measured). Columnar persist,
+        # which keeps that partitioning (see session.pin).
         # 4× over-partitioning bounds PER-TASK memory in the intersect
         # stage: each task holds both sides' adjacency arrays for its
         # key slice, and at sf10 a slot-count layout OOMs an 8 GiB JVM
@@ -571,7 +554,11 @@ def triangle_counts(
         raise ValueError(f"unknown strategy {strategy!r}")
     two_t = F.coalesce(F.col("n_triangles"), F.lit(0)) * 2
     dd = F.col("degree") * (F.col("degree") - 1)
-    out = (
+    # materialize the small per-node result so the two big pins below
+    # can be released before returning — without this, every triangle
+    # call in a long session leaves its edge/adjacency spill blocks
+    # behind (cf. pagerank's release)
+    out = pin(
         deg.filter(F.col("degree") >= 2)
         .join(per_node, "node", "left")
         .select(
@@ -582,11 +569,6 @@ def triangle_counts(
                 two_t.cast("double") / dd.cast("double") * F.lit(1e6)
             ).cast("long").alias("cc_q6"),
         )
-        # materialize the small per-node result (serialized checkpoint)
-        # so the two big pins below can be released before returning —
-        # without this, every triangle call in a long session leaves its
-        # edge/adjacency spill blocks behind (cf. pagerank's release)
-        .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
     und.unpersist(blocking=False)
     ranked.unpersist(blocking=False)
@@ -616,29 +598,27 @@ def label_propagation(
     no struct-argmax second shuffle. When the vertex set is small
     enough (``<= broadcast_labels``), the per-round label table
     broadcasts into the join and the adjacency is laid out
-    hash-partitioned by node ONCE (cache, not localCheckpoint — a
-    checkpoint forgets its outputPartitioning, cf. pagerank): hash(node)
+    hash-partitioned by node ONCE (cache, which keeps its
+    outputPartitioning, see ``session.pin``): hash(node)
     satisfies the groupBy(node) clustering, so each round runs with
     ZERO data exchanges — the loop moves only the broadcast of the
     small label table. Past the threshold the join falls back to
     shuffle, the right plan for billion-node graphs. Per-round state is
-    the (node, label) table, pinned with ``localCheckpoint`` for O(1)
+    the (node, label) table, pinned (``session.pin``) for O(1)
     lineage.
 
     Output: (node, community) — the label each node holds after
     ``rounds`` rounds.
     """
     a, b = F.col(src_col), F.col(dst_col)
-    und = (
+    und = pin(
         edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
-    verts = (
+    verts = pin(
         und.select(F.explode(F.array(F.col("a"), F.col("b"))).alias("node"))
         .distinct()
-        .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
     n_vert = verts.count()
     small = n_vert <= broadcast_labels
@@ -667,10 +647,9 @@ def label_propagation(
             F.col("node").alias("nbr"), F.col("community").alias("_l")
         )
         votes = adj.join(F.broadcast(lbl) if small else lbl, "nbr")
-        labels = (
+        labels = pin(
             votes.groupBy("node")
             .agg(F.mode(F.col("_l"), True).alias("community"))
-            .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
         )
     # labels are checkpoint-materialized each round, so the adjacency
     # pin can be released in BOTH regimes (not just the small branch)
@@ -715,8 +694,7 @@ def shortest_paths(
             ).alias("_e")
         )
         .select("_e.node", "_e.nbr")
-        # loop-INVARIANT pin -> columnar persist (decompresses batch-wise
-        # per round; a serialized checkpoint re-deserializes row by row)
+        # loop-invariant: columnar persist (see session.pin)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     spark = edges.sparkSession
@@ -748,13 +726,12 @@ def shortest_paths(
         fr = frontier.select(F.col("node").alias("nbr"))
         if n_frontier <= broadcast_limit:
             fr = F.broadcast(fr)
-        reached = (
+        reached = pin(
             adj.join(fr, "nbr")
             .select("node")
             .distinct()
             .join(_settled(), "node", "left_anti")
             .select("node", F.lit(r).alias("dist"))
-            .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
         )
         frames.append(reached)
         frontier = reached
@@ -818,7 +795,7 @@ def weighted_shortest_paths(
             ).alias("_e")
         )
         .select("_e.node", "_e.nbr", "_e.w")
-        # loop-INVARIANT pin -> columnar persist (cf. shortest_paths)
+        # loop-invariant: columnar persist (see session.pin)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     spark = edges.sparkSession
@@ -833,11 +810,10 @@ def weighted_shortest_paths(
         relaxed = adj.join(d, "nbr").select(
             "node", (F.col("_d") + F.col("w")).alias("dist")
         )
-        dist = (
+        dist = pin(
             dist.unionAll(relaxed)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
         )
         row = dist.agg(
             F.count(F.lit(1)).alias("n"), F.sum("dist").alias("s")
@@ -875,7 +851,7 @@ def hits(
     one aggregation, the score table broadcasts while the vertex set
     is dimension-sized (past ``broadcast_vertices`` the join falls
     back to shuffle — the billion-node plan), and each round's score
-    tables are serialized localCheckpoints for O(1) lineage. In the
+    tables are pinned (``session.pin``) for O(1) lineage. In the
     broadcast regime the L1 normalizer rides a whole-table window over
     the half-round's |V| rows, so fill + norm + divide execute in ONE
     pass per half-round (round-11, guide §2.4; decimal window sums are
@@ -885,7 +861,7 @@ def hits(
     funnels |V| rows through one window task. The explicitly pinned
     edge list is released before returning; the per-round score
     checkpoints are reclaimed by the context cleaner once unreferenced
-    (localCheckpoint blocks are not CacheManager-tracked, so there is
+    (pin blocks are not CacheManager-tracked, so there is
     no eager release point for them).
 
     Output: (node, authority, hub) for every node in the graph.
@@ -920,11 +896,10 @@ def hits(
     edges = edges.select(
         F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst")
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    verts = (
+    verts = pin(
         edges.select(F.col("_src").alias("node"))
         .union(edges.select(F.col("_dst").alias("node")))
         .distinct()
-        .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
     n_vert = verts.count()
     small = n_vert <= broadcast_vertices
@@ -965,19 +940,21 @@ def hits(
             # unchanged. Checkpointing the NORMALIZED table (not raw)
             # keeps lineage O(1) and makes every consumer a plain scan.
             norm = _sum0_win(F.col(col))
-            return raw.select(
-                "node",
-                F.when(norm > 0, F.col(col) / norm)
-                .otherwise(F.lit(0.0))
-                .alias(col),
-            ).localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+            return pin(
+                raw.select(
+                    "node",
+                    F.when(norm > 0, F.col(col) / norm)
+                    .otherwise(F.lit(0.0))
+                    .alias(col),
+                )
+            )
         # big regime: pin raw FIRST — the norm aggregate and the
         # normalized projection both read it, and raw's subtree is the
         # half-round's real work (edges join + aggregation); unpinned it
         # executed twice per half-round. The normalized output stays
         # lazy: one broadcast crossJoin over the pinned raw, never |V|
         # rows through a single window task.
-        raw = raw.localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+        raw = pin(raw)
         norm = raw.agg(_sum0(F.col(col)).alias("_norm"))
         return raw.crossJoin(F.broadcast(norm)).select(
             "node",
@@ -986,9 +963,7 @@ def hits(
             .alias(col),
         )
 
-    hub = verts.select("node", F.lit(1.0).alias("hub")).localCheckpoint(
-        storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+    hub = pin(verts.select("node", F.lit(1.0).alias("hub")))
     auth = verts.select("node", F.lit(1.0).alias("authority"))
     for _ in range(iterations):
         a_raw = (
@@ -1021,7 +996,7 @@ def hits(
             ),
             "hub",
         )
-    out = (
+    out = pin(
         verts.join(auth, "node", "left")
         .join(hub, "node", "left")
         .select(
@@ -1029,7 +1004,6 @@ def hits(
             F.coalesce("authority", F.lit(0.0)).alias("authority"),
             F.coalesce("hub", F.lit(0.0)).alias("hub"),
         )
-        .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
     edges.unpersist(blocking=False)
     if small:
@@ -1060,28 +1034,21 @@ def k_core(
 
     Each round is one degree aggregation (map-side combinable) plus two
     anti-joins keyed by node — shuffle size shrinks monotonically as the
-    graph peels. Each round's survivor set is pinned with
-    ``localCheckpoint(storageLevel=MEMORY_AND_DISK)`` (serialized in Spark 4;
-    the checkpoint default is the deserialized MEMORY_AND_DISK_DESER): the survivor
-    state EVOLVES, so the checkpoint's plan truncation is load-bearing
-    (each round references the prior set three times — without
-    truncation the logical plan grows 3^rounds and analysis time
+    graph peels. Each round's survivor set is pinned (``session.pin``):
+    the survivor state EVOLVES, so the pin's plan truncation is
+    load-bearing (each round references the prior set three times —
+    without truncation the logical plan grows 3^rounds and analysis time
     dominates: measured 3.7 s → ~50 s at sf0.01 with a persist-based
-    pin), while the SERIALIZED level keeps the blocks compact byte
-    buffers instead of per-row deserialized objects (the default
-    deserialized level OOMs the local JVM at sf10 edge counts — cf. the
-    loop-INVARIANT pagerank/triangle pins, where no plan grows and a
-    plain columnar persist is the better trade).
+    pin).
 
     Output: (node, core_degree) — surviving nodes with their degree in
     the surviving subgraph (>= k iff the peel reached fixpoint).
     """
     a, b = F.col(src_col), F.col(dst_col)
-    cur = (
+    cur = pin(
         edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
     n_edges = cur.count()
     for _ in range(rounds):
@@ -1101,11 +1068,10 @@ def k_core(
         # canonically-equal broadcast stages at runtime (verified via
         # the SQL metrics API: one Generate/agg pair executes per
         # round) — left as is, round-11 audit
-        cur = (
+        cur = pin(
             cur.join(bad.withColumnRenamed("node", "a"), "a", "left_anti")
             .join(bad.withColumnRenamed("node", "b"), "b", "left_anti")
             .select("a", "b")
-            .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
         )
         next_edges = cur.count()
         if next_edges == n_edges:  # fixpoint: further rounds are no-ops

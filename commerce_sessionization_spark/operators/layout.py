@@ -29,6 +29,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from commerce_sessionization_spark.session import pin
+
 
 def _bucket(col: Column, cmin: Column, cmax: Column, bits: int) -> Column:
     """Rank ``col`` into ``2**bits`` equal-width buckets of [cmin, cmax]."""
@@ -126,9 +128,9 @@ def global_rank(
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     ranged = df.repartitionByRange(n, *[F.col(c) for c in order_cols])
     with_pid = ranged.withColumn("_pid", F.spark_partition_id())
-    # localCheckpoint pins the partitioning: the counts collect and the
-    # ranked output must see the SAME partition assignment
-    with_pid = with_pid.localCheckpoint()
+    # pinned: the counts collect and the ranked output must see the
+    # SAME partition assignment
+    with_pid = pin(with_pid)
     counts = {
         r["_pid"]: r["cnt"]
         for r in with_pid.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from commerce_sessionization_spark.functions.hashing import hex_to_long
+from commerce_sessionization_spark.session import pin
 
 #: Split-space resolution: weights are expressed in 1/10000ths.
 SPLIT_BUCKETS = 10_000
@@ -563,7 +564,7 @@ def corpus_pipeline(
     ``dsir_w_q6`` (the selection's evidence), joined back from the
     k-row top-k by broadcast.
 
-    A stage is pinned (``localCheckpoint``) only where it is read twice:
+    A stage is pinned (``session.pin``) only where it is read twice:
     ``uniq`` feeds both the pair generation and the anti-join, the
     survivors feed both DSIR corpus statistics and the join back, and
     ``audit=True`` pins the near-dup ids and the corpus, which
@@ -580,17 +581,17 @@ def corpus_pipeline(
     uniq = exact_dedup(gated.select(*docs.columns))
     survivors, near_dups = uniq, None
     if jaccard is not None:
-        uniq = uniq.localCheckpoint()
+        uniq = pin(uniq)
         near_dups = (
             ngram_jaccard_pairs(uniq, n=3, threshold=jaccard)
             .select(F.col("b").alias("doc_id"))
             .distinct()
         )
         if audit:
-            near_dups = near_dups.localCheckpoint()
+            near_dups = pin(near_dups)
         survivors = uniq.join(near_dups, "doc_id", "left_anti")
     if dsir_k:
-        survivors = survivors.localCheckpoint()
+        survivors = pin(survivors)
         w = dsir_weights(
             survivors, survivors.filter(F.col("lang") == target_lang)
         )
@@ -599,7 +600,7 @@ def corpus_pipeline(
         )
     corpus = hash_split(survivors, "doc_id")
     if audit:
-        corpus = corpus.localCheckpoint()
+        corpus = pin(corpus)
     return CorpusStages(
         scored, uniq, near_dups, corpus, min_quality, bool(dsir_k)
     )

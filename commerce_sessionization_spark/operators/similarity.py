@@ -25,6 +25,7 @@ from commerce_sessionization_spark.functions.vectors import (
     dot_product,
     l2_norm,
 )
+from commerce_sessionization_spark.session import pin
 
 # Norm hoisting (used by every cross-scoring path below): cosine is
 # dot(a,b) / (|a|·|b|), and computing it per PAIR re-derives both norms
@@ -690,13 +691,7 @@ def mmr_rerank_exact(
 
     Output: (query, id, mmr_rank, mmr_score_q) — mmr_score_q is the
     integer objective scaled by ``lam_den·grid``; k rows per query.
-    Eager-pin contract (round-11, documents the round-10 change):
-    constructing this DataFrame runs Spark jobs immediately — a
-    multiply-consumed intermediate is ``localCheckpoint``-pinned, so the
-    input is snapshotted at CALL time (not action time), pushdown does
-    not cross the pin, and the pin is not fault-tolerant to executor
-    loss (an acceptable trade for a materialize-once single execution;
-    recompute-from-source callers should re-invoke the operator).
+    Eager: building this DataFrame runs a Spark job (``session.pin``).
     """
     import numpy as np
     import pandas as pd
@@ -707,7 +702,7 @@ def mmr_rerank_exact(
     # pipeline's IVF+SQ shortlist + exact refine) that subtree prices a
     # full corpus scoring pass — unpinned it executed twice. The pinned
     # frame is ANN-top-N-sized (tens of rows per query) by contract.
-    candidates = candidates.localCheckpoint()
+    candidates = pin(candidates)
 
     g = F.lit(float(grid))
     a = candidates.select(

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from commerce_sessionization_spark.functions.hashing import hex_to_long
+from commerce_sessionization_spark.session import pin
 
 CMS_DEPTH = 4
 CMS_WIDTH = 256
@@ -280,7 +281,7 @@ def sample_quantiles(
     # pin the k-row sample: count + ranking + one filter per percentile
     # all reference it, and without the pin each reference re-executes
     # the full upstream corpus scan (PLANS.md caught 3 scans)
-    sample = sample.localCheckpoint()
+    sample = pin(sample)
     w = Window.orderBy(F.col(value_col), F.col(id_col))
     n = sample.count()  # k, a bounded constant by construction
     ranked = sample.select(

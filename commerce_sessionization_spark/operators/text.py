@@ -16,7 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from commerce_sessionization_spark.session import pin
 
 #: Tiny per-language stopword profiles for the heuristic language-ID.
 #: Deliberately minimal — real pipelines plug in fastText/cld3; the operator
@@ -291,13 +292,7 @@ def cross_doc_span_stats(
     layout. The stream only ever joins membership, never per-hash
     counts, so the shuffle payload stays (doc_id, hash). All built-ins,
     whole-stage codegen.
-    Eager-pin contract (round-11, documents the round-10 change):
-    constructing this DataFrame runs Spark jobs immediately — a
-    multiply-consumed intermediate is ``localCheckpoint``-pinned, so the
-    input is snapshotted at CALL time (not action time), pushdown does
-    not cross the pin, and the pin is not fault-tolerant to executor
-    loss (an acceptable trade for a materialize-once single execution;
-    recompute-from-source callers should re-invoke the operator).
+    Eager: building this DataFrame runs a Spark job (``session.pin``).
     """
     from commerce_sessionization_spark.functions.hashing import hex_to_long
 
@@ -325,7 +320,7 @@ def cross_doc_span_stats(
     # (cf. the cdc_chunk_dedup chunk pin). The materialized rows are the
     # narrow (doc, 60-bit hash) pairs, far cheaper to hold than the
     # second hashing pass they replace.
-    spans = spans.localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+    spans = pin(spans)
     dup_hashes = (
         spans.groupBy("_h")
         .agg(F.count_distinct(F.col("_id")).alias("_nd"))

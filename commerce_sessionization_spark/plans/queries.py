@@ -71,6 +71,7 @@ from commerce_sessionization_spark.operators.text import (
     with_fingerprint,
     with_text_stats,
 )
+from commerce_sessionization_spark.session import pin
 from commerce_sessionization_spark.sources.tables import load_table
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
@@ -1126,7 +1127,7 @@ def q_compressed_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFra
     emb = load_table(spark, sf_dir, "embeddings")
     cents = seed_centroids(emb, nlist=8)
     assigned = ivf_assign(emb, cents)
-    bounds = sq_bounds(emb, dim=64).localCheckpoint()
+    bounds = pin(sq_bounds(emb, dim=64))
     coded = sq_encode(assigned, bounds)
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -4430,10 +4431,9 @@ def q_kmv_set_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin the sketch (<= 2K rows): union_k and shared both read it, and
     # without the pin each reference re-executes the corpus distinct +
     # window subtree (PLANS.md showed 13 exchanges for this query)
-    sketches = (
+    sketches = pin(
         du.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= KMV_K)
-        .localCheckpoint()
     )
     union_w = Window.orderBy("h")
     union_k = (
@@ -4442,7 +4442,7 @@ def q_kmv_set_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("urn", F.row_number().over(union_w))
         .filter(F.col("urn") <= KMV_K)
     )
-    tau = union_k.agg(F.max("h").alias("tau")).localCheckpoint()  # 1 row, read 3x
+    tau = pin(union_k.agg(F.max("h").alias("tau")))  # 1 row, read 3x
     shared = (
         sketches.groupBy("h")
         .agg(F.countDistinct("event_type").alias("nt"))
@@ -4872,10 +4872,9 @@ def _neardup_graph(spark: SparkSession, sf_dir: str):
     # pinned: both branches of the symmetrizing union read `pairs`, and
     # the Jaccard pair generation is the expensive subtree (cf. the
     # _copurchase_graph cp pin — same double-execution, same fix)
-    pairs = (
+    pairs = pin(
         ngram_jaccard_pairs(docs, n=3, threshold=0.8)
         .select("a", "b")
-        .localCheckpoint()
     )
     edges = pairs.select(
         F.col("a").alias("src"), F.col("b").alias("dst")
@@ -4952,10 +4951,8 @@ def _copurchase_graph(spark: SparkSession, sf_dir: str):
         # pinned: edges AND verts derive from cp, and pagerank
         # checkpoints each input separately — unpinned, the join+distinct
         # executed twice (profiler: the two ~10 MiB-shuffle pair-gen jobs
-        # back to back at the head of every pagerank run). Compressed
-        # columnar persist, not localCheckpoint: at sf10 the ~50M-row
-        # pair set OOMs an 8 GiB local JVM as deserialized row blocks
-        # (cf. operators/graph.py edge pins).
+        # back to back at the head of every pagerank run). Loop-
+        # invariant, so columnar persist (see session.pin).
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     edges = cp.select(F.col("c").alias("src"), F.col("p").alias("dst")).unionByName(
@@ -5299,12 +5296,8 @@ def _wcopurchase_graph(spark: SparkSession, sf_dir: str):
             F.concat(F.lit("p"), F.col("l_partkey")).alias("p"),
         )
         .agg(F.count(F.lit(1)).alias("wt"))
-        # compressed columnar persist, NOT localCheckpoint — same
-        # reasoning as _copurchase_graph above: the grouped pair set is
-        # pair-cardinality (~50M rows at sf10) and deserialized
-        # checkpoint row blocks OOM a local JVM where columnar blocks
-        # fit; persist also makes the callers' unpersist() real
-        # (checkpoint blocks are invisible to the CacheManager).
+        # loop-invariant, so columnar persist (see session.pin); it
+        # also makes the callers' unpersist() real
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     edges = cp.select(
@@ -6617,7 +6610,7 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = pq_codebook(emb)
     # materialize codes ONCE: three per-query ADC scans then read the
     # compact (id, 8-byte codes) table instead of re-running the encode
-    codes = pq_encode(emb, cents).localCheckpoint()
+    codes = pin(pq_encode(emb, cents))
     qrows = (
         emb.filter(F.col("vec_id") < 3)
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
@@ -8386,7 +8379,7 @@ def q_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    bounds = sq_bounds(emb, dim=64).localCheckpoint()
+    bounds = pin(sq_bounds(emb, dim=64))
     coded = sq_encode(emb, bounds)
     qdf = sq_encode(emb.filter(F.col("vec_id") == 0), bounds)
     return sq_topk(coded, qdf, k=10)
@@ -8469,7 +8462,7 @@ def q_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the vector norm rides the pin: computed once per vector instead of
     # once per within-cluster PAIR (cosine = dot/(|a|·|b|) with the norms
     # hoisted — same doubles, same parenthesization, values unchanged)
-    assigned = (
+    assigned = pin(
         ivf_assign(emb, cents)
         .select(
             "vec_id",
@@ -8477,7 +8470,6 @@ def q_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             "centroid_id",
             l2_norm(F.col("embedding")).alias("_nrm"),
         )
-        .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
     left = assigned.select(
         "centroid_id",
@@ -8793,8 +8785,6 @@ def q_mixture_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from commerce_sessionization_spark.operators.sampling import (
         mixture_waterfill,
     )
-
-    from pyspark import StorageLevel
 
     docs = load_table(spark, sf_dir, "documents")
     # one corpus scan: denom / targets / budget all branch from this
@@ -9205,15 +9195,14 @@ def q_sliding_kmv_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     day = F.floor(F.unix_timestamp("ts") / 86400).cast("long")
-    du = (
+    # referenced by the sketch path, the day list, and the exact side —
+    # pin it so the events scan + distinct runs once
+    du = pin(
         ev.select(day.alias("day_idx"), "user_id")
         .distinct()
         .withColumn(
             "h", hex_to_long(F.sha2(F.col("user_id").cast("string"), 256))
         )
-        # referenced by the sketch path, the day list, and the exact
-        # side — pin it so the events scan + distinct runs once
-        .localCheckpoint()
     )
     wd = Window.partitionBy("day_idx").orderBy("h")
     daily_sketch = (
@@ -9637,9 +9626,7 @@ def q_part_hop_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from commerce_sessionization_spark.operators.graph import shortest_paths
 
-    # loop-invariant pin -> columnar persist: the pair set is ~100M rows
-    # at sf10 and the deserialized checkpoint default OOMs the local JVM
-    # (cf. operators/graph.py pin-type rule)
+    # loop-invariant: columnar persist (see session.pin)
     edges = _part_pair_edges(spark, sf_dir).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -10090,7 +10077,7 @@ def q_part_weighted_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         _part_pair_edges(spark, sf_dir)
         .withColumn("w", 1 + (F.col("src") + F.col("dst")) % 5)
-        # loop-invariant pin -> columnar persist, cf. q_part_hop_distances
+        # loop-invariant: columnar persist (see session.pin)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     src = edges.agg(F.min(F.least(F.col("src"), F.col("dst")))).first()[0]

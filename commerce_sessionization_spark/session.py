@@ -19,13 +19,18 @@ we centralize it so every entry point gets the same scale-hardened config:
   vectorized reader rejects; we read nanos as long and convert explicitly
   (see ``sources.tables``).
 - **Arrow** — pandas UDF exchange is Arrow-batched.
+
+``pin`` is the engine's one ``localCheckpoint``: every operator that
+materializes an intermediate calls it, so the storage level and the pin
+contract are decided here once.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -65,3 +70,35 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now and return a relation that reads the copy.
+
+    The one checkpoint pin of the engine. It runs
+    ``df.localCheckpoint(eager=True, storageLevel=MEMORY_AND_DISK)``:
+    the blocks are stored serialized (Kryo, as ``get_spark`` sets) and
+    spill to disk. ``localCheckpoint``'s own default is the deserialized
+    level, whose per-row objects were the heap pressure behind every sf10
+    out-of-memory failure of the iterative families (SCALE.md, "Round-7
+    follow-up"), so no caller chooses a level.
+
+    Contract, for every caller:
+
+    - the input is snapshotted at CALL time, not at action time: the
+      Spark job runs inside ``pin``;
+    - filter and projection pushdown does not cross the pin;
+    - the pin is not fault-tolerant to executor loss (the blocks live on
+      the executors only; a caller that must recompute from source
+      re-invokes its operator);
+    - lineage is truncated, so a loop that pins its evolving state each
+      round keeps an O(1) plan instead of one that grows per round.
+
+    The other pin kind: a loop-INVARIANT input read every round (an edge
+    list, an adjacency) is pinned with columnar ``persist(MEMORY_AND_DISK)``
+    and released with ``unpersist``, not with ``pin``. Its plan does not
+    grow, so truncation buys nothing, while ``InMemoryRelation`` keeps
+    the input's ``outputPartitioning`` (a checkpoint forgets it) and its
+    compressed column batches spill per batch.
+    """
+    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)

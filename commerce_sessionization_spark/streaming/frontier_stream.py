@@ -31,9 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from commerce_sessionization_spark.streaming.pipeline import _fs_and_path
+from commerce_sessionization_spark.session import pin
 from commerce_sessionization_spark.streaming.rollup_stream import (
-    _live_versions,
+    _commit_state,
     read_rollup_state,
 )
 
@@ -62,8 +62,6 @@ def make_frontier_writer(
         extract_links,
     )
 
-    state_root = f"{out_path}/rollup_state"
-
     def write(batch_df: DataFrame, epoch_id: int) -> None:
         prev = read_rollup_state(spark, out_path, before=epoch_id)
         links = extract_links(batch_df, html_col, url_col).select(
@@ -77,7 +75,7 @@ def make_frontier_writer(
         state = links.unionByName(fetched)
         if prev is not None:
             state = prev.unionByName(state)
-        state = state.distinct().localCheckpoint()
+        state = pin(state.distinct())
         frontier = crawl_frontier(
             state.filter(F.col("kind") == "edge").select("src", "dst"),
             state.filter(F.col("kind") == "fetched").select(
@@ -88,14 +86,7 @@ def make_frontier_writer(
         frontier.write.mode("overwrite").parquet(
             f"{out_path}/frontier/epoch={epoch_id}"
         )
-        state.write.mode("overwrite").parquet(f"{state_root}/v={epoch_id}")
-        live = _live_versions(spark, state_root)
-        fs, jvm = _fs_and_path(spark, state_root)
-        for v in live[:-keep_versions] if keep_versions else []:
-            if v != epoch_id:
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(f"{state_root}/v={v}"), True
-                )
+        _commit_state(spark, out_path, state, epoch_id, keep_versions)
 
     return write
 

@@ -28,9 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from commerce_sessionization_spark.operators.dedup import (
     incremental_exact_dedup,
 )
-from commerce_sessionization_spark.streaming.pipeline import _fs_and_path
 from commerce_sessionization_spark.streaming.rollup_stream import (
-    _live_versions,
+    _commit_state,
     read_rollup_state,
 )
 
@@ -58,8 +57,6 @@ def make_dedup_ingest_writer(
     never gains duplicates — the same argument as the rollup maintainer,
     plus determinism of the anti-join given (batch, prior index).
     """
-    state_root = f"{out_path}/rollup_state"
-
     def write(batch_df: DataFrame, epoch_id: int) -> None:
         prev = read_rollup_state(spark, out_path, before=epoch_id)
         if prev is None:
@@ -76,14 +73,7 @@ def make_dedup_ingest_writer(
                 "content_sha"
             )
         ).distinct()
-        new_state.write.mode("overwrite").parquet(f"{state_root}/v={epoch_id}")
-        live = _live_versions(spark, state_root)
-        fs, jvm = _fs_and_path(spark, state_root)
-        for v in live[:-keep_versions] if keep_versions else []:
-            if v != epoch_id:
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(f"{state_root}/v={v}"), True
-                )
+        _commit_state(spark, out_path, new_state, epoch_id, keep_versions)
 
     return write
 
@@ -115,7 +105,6 @@ def make_neardup_ingest_writer(
         lsh_band_table,
     )
 
-    state_root = f"{out_path}/rollup_state"
     lsh_kw = dict(
         id_col=id_col, text_col=text_col, n=n,
         num_hashes=num_hashes, bands=bands,
@@ -138,14 +127,7 @@ def make_neardup_ingest_writer(
                 **lsh_kw,
             )
         ).distinct()
-        new_state.write.mode("overwrite").parquet(f"{state_root}/v={epoch_id}")
-        live = _live_versions(spark, state_root)
-        fs, jvm = _fs_and_path(spark, state_root)
-        for v in live[:-keep_versions] if keep_versions else []:
-            if v != epoch_id:
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(f"{state_root}/v={v}"), True
-                )
+        _commit_state(spark, out_path, new_state, epoch_id, keep_versions)
 
     return write
 

@@ -31,6 +31,7 @@ from commerce_sessionization_spark.operators.rollup import (
     merge_rollups,
     time_bucket_rollup,
 )
+from commerce_sessionization_spark.session import pin
 from commerce_sessionization_spark.streaming.pipeline import _fs_and_path, _glob
 
 _VERSION_RE = re.compile(r"/v=(\d+)$")
@@ -60,6 +61,29 @@ def read_rollup_state(
     return spark.read.parquet(f"{state_root}/v={versions[-1]}")
 
 
+def _commit_state(
+    spark: SparkSession,
+    out_path: str,
+    state: DataFrame,
+    epoch_id: int,
+    keep_versions: int,
+) -> None:
+    """Write ``state`` as version ``v=epoch_id``, then prune the committed
+    versions beyond the newest ``keep_versions`` (never ``epoch_id``).
+
+    Overwrite makes a replayed epoch rewrite the same version; pruning
+    runs AFTER the commit, so a crash mid-prune leaves extra versions,
+    never missing ones.
+    """
+    state_root = f"{out_path}/rollup_state"
+    state.write.mode("overwrite").parquet(f"{state_root}/v={epoch_id}")
+    live = _live_versions(spark, state_root)
+    fs, jvm = _fs_and_path(spark, state_root)
+    for v in live[:-keep_versions] if keep_versions else []:
+        if v != epoch_id:
+            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{state_root}/v={v}"), True)
+
+
 def make_incremental_writer(
     spark: SparkSession,
     out_path: str,
@@ -70,24 +94,16 @@ def make_incremental_writer(
     """Build an idempotent ``foreachBatch`` fn for any mergeable state.
 
     Public so tests can drive epochs directly and assert replay safety.
-    Old committed versions beyond ``keep_versions`` are pruned AFTER the
-    new version commits (a crash mid-prune leaves extra versions, never
-    missing ones) — a replay of the newest epoch always finds its
-    predecessor as long as ``keep_versions >= 2``.
+    Old committed versions beyond ``keep_versions`` are pruned after the
+    new version commits (``_commit_state``) — a replay of the newest
+    epoch always finds its predecessor as long as ``keep_versions >= 2``.
     """
-    state_root = f"{out_path}/rollup_state"
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
         partial = partial_fn(batch_df)
         prev = read_rollup_state(spark, out_path, before=epoch_id)
         merged = partial if prev is None else merge_fn(prev, partial)
-        # overwrite => replaying this epoch rewrites the same version
-        merged.write.mode("overwrite").parquet(f"{state_root}/v={epoch_id}")
-        live = _live_versions(spark, state_root)
-        fs, jvm = _fs_and_path(spark, state_root)
-        for v in live[:-keep_versions] if keep_versions else []:
-            if v != epoch_id:
-                fs.delete(jvm.org.apache.hadoop.fs.Path(f"{state_root}/v={v}"), True)
+        _commit_state(spark, out_path, merged, epoch_id, keep_versions)
 
     return write
 
@@ -398,7 +414,7 @@ def make_drift_writer(
         drift_bucket_counts,
     )
 
-    bounds = bounds.localCheckpoint()  # freeze: epochs must not recompute
+    bounds = pin(bounds)  # freeze: epochs must not recompute
 
     def partial(df: DataFrame) -> DataFrame:
         return drift_bucket_counts(df, bounds, cols, buckets)
@@ -459,7 +475,7 @@ def make_centroid_stats_writer(
     )
 
     grid = F.lit(float(10 ** quantize_scale))
-    pinned = centroids.localCheckpoint()
+    pinned = pin(centroids)
 
     def partial(df: DataFrame) -> DataFrame:
         assigned = ivf_assign(df, pinned, id_col=id_col, vec_col=vec_col)

@@ -271,10 +271,26 @@ _INTENDED_LOOP_JOINS = {
 def test_no_accidental_cartesian_joins(spark):
     """Plan-lint EVERY catalog query: a CartesianProduct or
     BroadcastNestedLoopJoin outside the explicit allowlist is a scale
-    accident (usually a missing join key or a silently-true condition)."""
+    accident (usually a missing join key or a silently-true condition).
+    The same plans must also reproduce every committed PLANS.md row, so
+    a plan change cannot land without regenerating the audit
+    (`python tools/gen_plan_report.py`)."""
+    import sys
+    from pathlib import Path
+
     from commerce_sessionization_spark.plans.queries import FULL_CATALOG
 
+    tools = Path(__file__).resolve().parent.parent / "tools"
+    sys.path.insert(0, str(tools))
+    from gen_plan_report import plan_row
+
+    committed = {
+        line.split("`")[1]: line
+        for line in (tools.parent / "PLANS.md").read_text().splitlines()
+        if line.startswith("| `")
+    }
     offenders = {}
+    stale = {}
     for q in FULL_CATALOG:
         plan = plan_of(q.spark(spark, SF_DIR))
         loops = node_count(plan, "CartesianProduct") + node_count(
@@ -282,7 +298,12 @@ def test_no_accidental_cartesian_joins(spark):
         )
         if loops and q.name not in _INTENDED_LOOP_JOINS:
             offenders[q.name] = loops
+        row = plan_row(q.name, plan)
+        if committed.get(q.name) != row:
+            stale[q.name] = (committed.get(q.name), row)
     assert not offenders, f"unexpected cartesian shapes: {offenders}"
+    assert not stale, f"PLANS.md rows differ from the plans: {stale}"
+    assert set(committed) == {q.name for q in FULL_CATALOG}
 
 
 def test_aqe_splits_skewed_join_partition(spark):

@@ -19,8 +19,11 @@ box stable:
   their geometric mean — a number that stays meaningful when the
   absolute seconds do not. ratio > 1 means the working tree is slower.
 
-    python tools/bench_ab.py --base <git-ref> [--queries a,b,...]
+    python tools/bench_ab.py --base <git-ref | checkout-dir> [--queries a,b,...]
         [--repeats 2] [--phases 4] [--out BENCH_AB.json]
+
+``--base`` may also name an existing checkout of the base (for example
+a ``git archive`` export), which is used as is instead of a worktree.
 
 Self-validation: `--base HEAD` (A == B code) measures the method's own
 noise floor — the geomean must sit near 1.0 even on a drifting box;
@@ -102,7 +105,8 @@ def run_phase(tree: Path, queries: list[str], repeats: int) -> dict:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--base", required=True, help="git ref for side A")
+    ap.add_argument("--base", required=True,
+                    help="git ref or checkout directory for side A")
     ap.add_argument("--queries", default=None,
                     help="comma list (default: HEADLINE shared by both trees)")
     ap.add_argument("--repeats", type=int, default=2)
@@ -126,7 +130,9 @@ def main() -> None:
         raise SystemExit("--phases must be a multiple of 4 (whole ABBA "
                          "blocks; truncated blocks break drift symmetry)")
 
-    base_tree = ensure_worktree(args.base)
+    base_tree = (
+        Path(args.base) if Path(args.base).is_dir() else ensure_worktree(args.base)
+    )
     if args.queries:
         queries = [q for q in args.queries.split(",") if q]
     else:

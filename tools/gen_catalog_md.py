@@ -20,8 +20,11 @@ from commerce_sessionization_spark.plans.queries import (  # noqa: E402
 from gen_rotation import grade_counts  # noqa: E402
 
 
-def main() -> None:
-    out = Path(__file__).resolve().parent.parent / "CATALOG.md"
+OUT = Path(__file__).resolve().parent.parent / "CATALOG.md"
+
+
+def render() -> str:
+    """The full text of CATALOG.md for the current catalog and grades."""
     counts = grade_counts()
     graded_ever = sum(
         1
@@ -59,8 +62,12 @@ def main() -> None:
             g = f"{c['graded']} ({c['green']}✓)" if c["graded"] else "0"
             lines.append(f"| `{q.name}` | {oracle} | {g} | {q.doc} |")
         lines.append("")
-    out.write_text("\n".join(lines))
-    print(f"wrote {out} ({len(CATALOG) + len(EXTENDED_CATALOG)} queries)")
+    return "\n".join(lines)
+
+
+def main() -> None:
+    OUT.write_text(render())
+    print(f"wrote {OUT} ({len(CATALOG) + len(EXTENDED_CATALOG)} queries)")
 
 
 if __name__ == "__main__":

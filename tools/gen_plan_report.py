@@ -30,6 +30,28 @@ PY_NODES = (
 )
 
 
+def _count(plan: str, node: str) -> int:
+    return len(re.findall(rf"\(\d+\) {node}", plan))
+
+
+def plan_counts(plan: str) -> tuple[int, ...]:
+    """A formatted plan's PLANS.md columns: exchanges, broadcast joins,
+    sort-merge joins, loop joins, python nodes, parquet scans."""
+    return (
+        _count(plan, "Exchange"),
+        _count(plan, "BroadcastHashJoin"),
+        _count(plan, "SortMergeJoin"),
+        _count(plan, "BroadcastNestedLoopJoin") + _count(plan, "CartesianProduct"),
+        sum(_count(plan, n) for n in PY_NODES),
+        _count(plan, "Scan parquet"),
+    )
+
+
+def plan_row(name: str, plan: str) -> str:
+    """The PLANS.md table row of query ``name`` with formatted plan ``plan``."""
+    return "| `{}` | {} | {} | {} | {} | {} | {} |".format(name, *plan_counts(plan))
+
+
 def main() -> None:
     from commerce_sessionization_spark.plans.queries import FULL_CATALOG
     from commerce_sessionization_spark.session import get_spark
@@ -38,27 +60,12 @@ def main() -> None:
                       shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
-    def count(plan: str, node: str) -> int:
-        return len(re.findall(rf"\(\d+\) {node}", plan))
-
     rows = []
     for q in FULL_CATALOG:
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             q.spark(spark, SF_DIR).explain(mode="formatted")
-        plan = buf.getvalue()
-        rows.append(
-            (
-                q.name,
-                count(plan, "Exchange"),
-                count(plan, "BroadcastHashJoin"),
-                count(plan, "SortMergeJoin"),
-                count(plan, "BroadcastNestedLoopJoin")
-                + count(plan, "CartesianProduct"),
-                sum(count(plan, n) for n in PY_NODES),
-                count(plan, "Scan parquet"),
-            )
-        )
+        rows.append((q.name, buf.getvalue()))
 
     out = Path(__file__).resolve().parent.parent / "PLANS.md"
     lines = [
@@ -85,9 +92,9 @@ def main() -> None:
         "loop joins | python nodes | parquet scans |",
         "|---|---|---|---|---|---|---|",
     ]
-    for r in rows:
-        lines.append("| `{}` | {} | {} | {} | {} | {} | {} |".format(*r))
-    tot = [sum(r[i] for r in rows) for i in range(1, 7)]
+    lines += [plan_row(name, plan) for name, plan in rows]
+    counts = [plan_counts(plan) for _, plan in rows]
+    tot = [sum(c[i] for c in counts) for i in range(6)]
     lines.append(
         "| **total** | {} | {} | {} | {} | {} | {} |".format(*tot)
     )
