@@ -34,8 +34,13 @@ chunk may be short. Both engines replay this arithmetic exactly
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
+import pandas as pd
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from commerce_sessionization_spark.functions.hashing import hex_to_long
 
@@ -85,6 +90,62 @@ def chunk_documents(
     )
 
 
+def _pack_buckets(
+    df: DataFrame,
+    budget: int,
+    id_col: str,
+    len_col: str,
+    n_buckets: int,
+    seed: str,
+    walk: Callable[[pd.DataFrame], tuple[pd.DataFrame, list, list]],
+) -> DataFrame:
+    """The bucketed packers' shared frame: items hash into ``n_buckets``
+    sha256 buckets, one ``applyInPandas`` per bucket runs ``walk`` over the
+    bucket's (_id, _len, bucket) rows, which returns them in placement
+    order (index reset) with each item's bin_idx and bin_offset.
+
+    Output: (id, bucket, bin_idx, bin_offset, item_tokens).
+    """
+    if budget <= 0:
+        raise ValueError("budget must be positive")
+    bucket = (
+        hex_to_long(
+            F.sha2(
+                F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string")), 256
+            )
+        )
+        % n_buckets
+    ).cast("long")
+    slim = df.select(
+        F.col(id_col).cast("long").alias("_id"),
+        F.col(len_col).cast("long").alias("_len"),
+        bucket.alias("bucket"),
+    )
+    out_schema = StructType(
+        [
+            StructField(id_col, LongType()),
+            StructField("bucket", LongType()),
+            StructField("bin_idx", LongType()),
+            StructField("bin_offset", LongType()),
+            StructField("item_tokens", LongType()),
+        ]
+    )
+
+    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf, bins, offs = walk(pdf)
+        return pd.DataFrame(
+            {
+                id_col: pdf["_id"],
+                "bucket": pdf["bucket"],
+                "bin_idx": bins,
+                "bin_offset": offs,
+                "item_tokens": pdf["_len"],
+            }
+        )
+
+    return slim.groupBy("bucket").applyInPandas(pack, schema=out_schema)
+
+
 def pack_sequences(
     df: DataFrame,
     budget: int,
@@ -114,35 +175,8 @@ def pack_sequences(
     walk with a recursive CTE, making even the imperative path
     hash-checked, not just row-counted.
     """
-    if budget <= 0:
-        raise ValueError("budget must be positive")
-    import pandas as pd  # noqa: F401 — applyInPandas contract
-    from pyspark.sql.types import LongType, StructField, StructType
 
-    bucket = (
-        hex_to_long(
-            F.sha2(
-                F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string")), 256
-            )
-        )
-        % n_buckets
-    ).cast("long")
-    slim = df.select(
-        F.col(id_col).cast("long").alias("_id"),
-        F.col(len_col).cast("long").alias("_len"),
-        bucket.alias("bucket"),
-    )
-    out_schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("bucket", LongType()),
-            StructField("bin_idx", LongType()),
-            StructField("bin_offset", LongType()),
-            StructField("item_tokens", LongType()),
-        ]
-    )
-
-    def pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def walk(pdf: pd.DataFrame) -> tuple[pd.DataFrame, list, list]:
         pdf = pdf.sort_values("_id").reset_index(drop=True)
         bins, offs = [], []
         bin_idx, fill = 0, 0
@@ -155,17 +189,9 @@ def pack_sequences(
             offs.append(fill)
             bins.append(bin_idx)
             fill += ln
-        return pd.DataFrame(
-            {
-                id_col: pdf["_id"],
-                "bucket": pdf["bucket"],
-                "bin_idx": bins,
-                "bin_offset": offs,
-                "item_tokens": pdf["_len"],
-            }
-        )
+        return pdf, bins, offs
 
-    return slim.groupBy("bucket").applyInPandas(pack, schema=out_schema)
+    return _pack_buckets(df, budget, id_col, len_col, n_buckets, seed, walk)
 
 
 #: Sentence segmentation without lookbehind (RE2-replayable): a run of
@@ -274,35 +300,8 @@ def pack_sequences_ffd(
     contract as ``pack_sequences``, drop-in for the training job's
     (bucket, bin_idx) group-by.
     """
-    if budget <= 0:
-        raise ValueError("budget must be positive")
-    import pandas as pd  # noqa: F401 — applyInPandas contract
-    from pyspark.sql.types import LongType, StructField, StructType
 
-    bucket = (
-        hex_to_long(
-            F.sha2(
-                F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string")), 256
-            )
-        )
-        % n_buckets
-    ).cast("long")
-    slim = df.select(
-        F.col(id_col).cast("long").alias("_id"),
-        F.col(len_col).cast("long").alias("_len"),
-        bucket.alias("bucket"),
-    )
-    out_schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("bucket", LongType()),
-            StructField("bin_idx", LongType()),
-            StructField("bin_offset", LongType()),
-            StructField("item_tokens", LongType()),
-        ]
-    )
-
-    def pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def walk(pdf: pd.DataFrame) -> tuple[pd.DataFrame, list, list]:
         pdf = pdf.sort_values(
             ["_len", "_id"], ascending=[False, True]
         ).reset_index(drop=True)
@@ -350,14 +349,6 @@ def pack_sequences_ffd(
             offs.append(fills[placed])
             fills[placed] += ln
             _set_rem(placed, budget - fills[placed])
-        return pd.DataFrame(
-            {
-                id_col: pdf["_id"],
-                "bucket": pdf["bucket"],
-                "bin_idx": bins,
-                "bin_offset": offs,
-                "item_tokens": pdf["_len"],
-            }
-        )
+        return pdf, bins, offs
 
-    return slim.groupBy("bucket").applyInPandas(pack, schema=out_schema)
+    return _pack_buckets(df, budget, id_col, len_col, n_buckets, seed, walk)

@@ -224,43 +224,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signature_from_base(base: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature (array<bigint>) from a pre-hashed shingle array.
-
-    h_i(x) = xxhash64(i, x): an independent 64-bit mix per slot, JVM-side
-    codegen, min per i. All array built-ins — no UDF. ``base`` should be a
-    *materialized* column (one hash per shingle), reused across all slots.
-
-    A linear family (a·x + b) mod p does NOT work here: with 48-bit base
-    hashes and small multipliers the product never wraps past p, the map
-    stays monotonic, and every slot picks the same argmin — the signature
-    degenerates to one effective hash (observed: recall ≈ j instead of the
-    banded S-curve). xxhash64's avalanche gives genuinely independent mins.
-    """
-    def mix(i: int):
-        # real closure: default-arg lambdas would change the visible arity
-        # and make transform() pass the element index into the salt
-        return lambda x: F.xxhash64(F.lit(i), x)
-
-    sigs = []
-    for i in range(num_hashes):
-        sigs.append(F.array_min(F.transform(base, mix(i))))
-    return F.array(*sigs)
-
-
-def shingle_base_hashes(text: Column, n: int = 3, fast: bool = False) -> Column:
-    """48-bit integer hash per distinct word n-gram shingle (array<bigint>).
-
-    48 bits (not 60) so the MinHash permutation a·x + b (a ≤ 127) cannot
-    overflow int64 under ANSI mode.
-    """
-    from commerce_sessionization_spark.functions.hashing import stable_long_hash
-
-    return F.transform(
-        word_shingles(text, n), lambda s: stable_long_hash(s, fast=fast, n_chars=12)
-    )
-
-
 def lsh_band_table(
     df: DataFrame,
     id_col: str = "doc_id",

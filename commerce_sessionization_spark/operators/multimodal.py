@@ -11,11 +11,24 @@ IDAT with stdlib ``zlib``; JPEG is a full T.81 decode, baseline AND
 progressive — Huffman entropy decode, successive approximation,
 vectorized IDCT, chroma upsampling; VP8L covers the full lossless
 bitstream: prefix codes, LZ77 + color cache, all four transforms).
-Formats that need external libs
-(arithmetic JPEG, lossy VP8 WebP, AVIF, MP3, video) raise
-``NotImplementedError`` on the real path; ``fake=True`` swaps in a
-deterministic payload-seeded fake so pipeline shape stays testable for
-those modalities too.
+
+The per-asset contract, shared by every extractor below: each one is a
+per-asset function run by ``_map_assets`` (modality filter, one
+Arrow-batched ``mapInPandas``, 0..n rows of a fixed schema per asset).
+
+* ``fake=True`` swaps the decode for a deterministic stand-in derived
+  from sha256(payload), so pipeline shape stays testable for formats
+  (arithmetic JPEG, lossy VP8 WebP, AVIF, MP3, video codecs) that need
+  external libs.
+* On the real path (``_decode``), a payload the decoders do not support
+  raises ``NotImplementedError`` naming the asset. Extractors that take
+  ``on_error="skip"`` (crawl mode) instead drop an unsupported or corrupt
+  asset (``UnsupportedMediaError``, ``ValueError``, ``struct.error``), so
+  one garbage payload never kills the pass. Any other error propagates:
+  it is a decoder bug.
+* The triage extractors (``extract_container_metadata``,
+  ``extract_image_metadata``, ``extract_document_text``) never fail: an
+  unparseable payload yields a fallback row (unknown container/format).
 
 At 100 TB: binary payloads dominate row size — always project metadata-only
 when features suffice (column pruning keeps payload IO at zero), partition
@@ -27,8 +40,9 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -45,6 +59,89 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from commerce_sessionization_spark.functions.codecs import (
+    UnsupportedMediaError,
+    _luma,
+    average_hash,
+    decode_bmp,
+    decode_gif,
+    decode_jpeg,
+    decode_png,
+    decode_wav,
+    encode_bmp,
+    encode_jpeg,
+    encode_png,
+    encode_wav,
+    image_features,
+    parse_gif_frames,
+    resample_audio,
+    wav_features,
+    wav_mfcc_features,
+    wav_spectral_features,
+)
+from commerce_sessionization_spark.functions.containers import (
+    container_metadata,
+    mp4_sample_index,
+    parse_avif,
+    sniff_container,
+)
+from commerce_sessionization_spark.functions.metadata import (
+    jpeg_dimensions,
+    parse_jpeg_exif,
+    parse_png_metadata,
+    parse_tiff_exif,
+)
+
+#: What a decoder may raise on garbage (the fuzz contract): skip mode and
+#: the triage fallbacks absorb exactly these.
+_DECODE_ERRORS = (UnsupportedMediaError, ValueError, struct.error)
+
+_WAV_ONLY = "only PCM WAV decodes without codec libs"
+
+
+def _map_assets(
+    df: DataFrame,
+    schema: StructType,
+    per_asset: Callable[..., Iterable[dict]],
+    modality: str | None = None,
+    extra: tuple[str, ...] = (),
+) -> DataFrame:
+    """Run ``per_asset(asset_id, payload, *extra)`` over every asset (of
+    ``modality`` when given) in Arrow batches; it returns the asset's 0..n
+    records, keyed by ``schema`` field names (missing keys become null)."""
+    cols = [f.name for f in schema.fields]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            recs: list[dict] = []
+            for a, c, *rest in zip(
+                pdf["asset_id"], pdf["content"], *(pdf[x] for x in extra)
+            ):
+                recs.extend(per_asset(a, bytes(c or b""), *rest))
+            yield pd.DataFrame.from_records(recs, columns=cols)
+
+    if modality is not None:
+        df = df.filter(F.col("modality") == modality)
+    return df.select("asset_id", "content", *extra).mapInPandas(
+        batches, schema=schema
+    )
+
+
+def _decode(asset_id, fn: Callable, on_error: str, what: str):
+    """``fn()`` under the decode-error contract (module docstring);
+    ``on_error="skip"`` turns a decode error into ``[]`` (asset dropped)."""
+    try:
+        return fn()
+    except _DECODE_ERRORS as e:
+        if on_error == "skip":
+            return []
+        if not isinstance(e, UnsupportedMediaError):
+            raise
+        raise NotImplementedError(
+            f"asset {asset_id}: {what} ({e}); use fake=True for other formats"
+        ) from e
+
 
 IMAGE_FEATURES_SCHEMA = StructType(
     [
@@ -88,7 +185,7 @@ FRAME_SAMPLE_SCHEMA = StructType(
 
 def _fake_image_features(asset_id: int, payload: bytes) -> dict:
     """Deterministic stand-in for a real image decode (no PIL/opencv here)."""
-    h = hashlib.sha256(payload or b"").digest()
+    h = hashlib.sha256(payload).digest()
     return {
         "asset_id": asset_id,
         "width": 64 + h[0] % 192,
@@ -102,7 +199,7 @@ def _fake_image_features(asset_id: int, payload: bytes) -> dict:
 def extract_image_features(
     df: DataFrame, fake: bool = False, on_error: str = "raise"
 ) -> DataFrame:
-    """Decode + featurize image payloads via Arrow-batched ``mapInPandas``.
+    """Decode + featurize image payloads.
 
     The real path decodes BMP, PNG, JPEG (baseline + progressive),
     lossless-WebP (VP8L), and baseline TIFF (none/LZW/PackBits strips)
@@ -110,152 +207,77 @@ def extract_image_features(
     ``functions.codecs`` / ``functions.webp`` (width/height/channels,
     Rec.601 mean luma, 8×8 average-hash; PNG rides stdlib ``zlib``,
     JPEG is a full T.81 decode incl. progressive; TIFF implements the
-    TIFF-variant LZW with EarlyChange). Other formats raise because
-    lossy-VP8 WebP / AVIF need codec libraries this container lacks. ``fake=True`` routes every payload
-    to the deterministic fake instead.
+    TIFF-variant LZW with EarlyChange). Lossy-VP8 WebP / AVIF need codec
+    libraries this container lacks.
     """
-    from commerce_sessionization_spark.functions.codecs import (
-        UnsupportedMediaError,
-        image_features,
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for a, c in zip(pdf["asset_id"], pdf["content"]):
-                if fake:
-                    recs.append(_fake_image_features(a, c))
-                    continue
-                try:
-                    recs.append(image_features(a, bytes(c or b"")))
-                except (UnsupportedMediaError, ValueError, struct.error) as e:
-                    # skip mode must survive everything the fuzz contract
-                    # lets a decoder raise on garbage (ValueError /
-                    # struct.error included), not just the triage error —
-                    # otherwise one corrupt payload kills the whole pass.
-                    if on_error == "skip":
-                        continue  # crawl mode: garbage drops, pass lives
-                    if not isinstance(e, UnsupportedMediaError):
-                        raise
-                    raise NotImplementedError(
-                        f"asset {a}: only BMP/PNG/JPEG/VP8L/TIFF decode "
-                        f"without codec libs ({e}); use fake=True or "
-                        "on_error='skip' for other formats"
-                    ) from e
-            yield pd.DataFrame.from_records(
-                recs, columns=[f.name for f in IMAGE_FEATURES_SCHEMA.fields]
-            )
+    def one(a, payload):
+        if fake:
+            return [_fake_image_features(a, payload)]
+        return _decode(
+            a,
+            lambda: [image_features(a, payload)],
+            on_error,
+            "only BMP/PNG/JPEG/VP8L/TIFF decode without codec libs",
+        )
 
-    return df.filter(F.col("modality") == "image").select(
-        "asset_id", "content"
-    ).mapInPandas(
-        batches, schema=IMAGE_FEATURES_SCHEMA
-    )
+    return _map_assets(df, IMAGE_FEATURES_SCHEMA, one, "image")
 
 
 def extract_audio_features(
     df: DataFrame, fake: bool = False, on_error: str = "raise"
 ) -> DataFrame:
-    """Decode + featurize audio payloads via Arrow-batched ``mapInPandas``.
-
-    The real path decodes 16-bit PCM RIFF/WAVE with ``functions.codecs``
-    (sample rate, duration, RMS over mono-averaged samples); compressed
-    formats (MP3/AAC/OGG) raise ``NotImplementedError``. ``fake=True``
-    routes every payload to the deterministic fake instead.
+    """Decode + featurize audio payloads: the real path decodes PCM
+    RIFF/WAVE with ``functions.codecs`` (sample rate, duration, RMS over
+    mono-averaged samples); compressed formats (MP3/AAC/OGG) need codec
+    libraries.
     """
-    from commerce_sessionization_spark.functions.codecs import (
-        UnsupportedMediaError,
-        wav_features,
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for a, c in zip(pdf["asset_id"], pdf["content"]):
-                if fake:
-                    h = hashlib.sha256(c or b"").digest()
-                    recs.append(
-                        {
-                            "asset_id": a,
-                            "sample_rate": 16000,
-                            "duration_sec": round(len(c or b"") / 32000.0, 6),
-                            "rms": round(h[0] / 255.0, 6),
-                        }
-                    )
-                    continue
-                try:
-                    recs.append(wav_features(a, bytes(c or b"")))
-                except (UnsupportedMediaError, ValueError, struct.error) as e:
-                    if on_error == "skip":
-                        continue  # crawl mode: garbage drops, pass lives
-                    if not isinstance(e, UnsupportedMediaError):
-                        raise
-                    raise NotImplementedError(
-                        f"asset {a}: only PCM WAV decodes without codec libs "
-                        f"({e}); use fake=True or on_error='skip' for "
-                        "other formats"
-                    ) from e
-            yield pd.DataFrame.from_records(
-                recs, columns=[f.name for f in AUDIO_FEATURES_SCHEMA.fields]
-            )
+    def one(a, payload):
+        if fake:
+            h = hashlib.sha256(payload).digest()
+            return [
+                {
+                    "asset_id": a,
+                    "sample_rate": 16000,
+                    "duration_sec": round(len(payload) / 32000.0, 6),
+                    "rms": round(h[0] / 255.0, 6),
+                }
+            ]
+        return _decode(
+            a, lambda: [wav_features(a, payload)], on_error, _WAV_ONLY
+        )
 
-    return df.filter(F.col("modality") == "audio").select(
-        "asset_id", "content"
-    ).mapInPandas(
-        batches, schema=AUDIO_FEATURES_SCHEMA
-    )
+    return _map_assets(df, AUDIO_FEATURES_SCHEMA, one, "audio")
 
 
 def extract_audio_spectral(df: DataFrame, fake: bool = False) -> DataFrame:
-    """Frequency-domain audio features (FFT) via Arrow-batched
-    ``mapInPandas`` — dominant pitch, spectral centroid, 85% rolloff,
-    zero-crossing rate per asset.
+    """Frequency-domain audio features (FFT) — dominant pitch, spectral
+    centroid, 85% rolloff, zero-crossing rate per asset.
 
     The real path runs ONE numpy rfft per PCM-WAV payload inside the
     batch loop (vectorized per asset; Arrow moves only (asset_id,
-    content) in and six scalars out). Compressed formats raise
-    ``NotImplementedError`` exactly like ``extract_audio_features``;
-    ``fake=True`` derives deterministic stand-in values from the
-    payload hash so pipelines stay testable without codec libs.
+    content) in and six scalars out).
     """
-    from commerce_sessionization_spark.functions.codecs import (
-        UnsupportedMediaError,
-        wav_spectral_features,
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for a, c in zip(pdf["asset_id"], pdf["content"]):
-                if fake:
-                    h = hashlib.sha256(c or b"").digest()
-                    recs.append(
-                        {
-                            "asset_id": a,
-                            "sample_rate": 16000,
-                            "dominant_hz": float(h[0]) * 8000.0 / 255.0,
-                            "spectral_centroid_hz": float(h[1]) * 8000.0 / 255.0,
-                            "rolloff85_hz": float(h[2]) * 8000.0 / 255.0,
-                            "zero_crossing_rate": float(h[3]) * 2.0,
-                        }
-                    )
-                    continue
-                try:
-                    recs.append(wav_spectral_features(a, bytes(c or b"")))
-                except UnsupportedMediaError as e:
-                    raise NotImplementedError(
-                        f"asset {a}: only PCM WAV decodes without codec libs "
-                        f"({e}); use fake=True for other formats"
-                    ) from e
-            yield pd.DataFrame.from_records(
-                recs, columns=[f.name for f in AUDIO_SPECTRAL_SCHEMA.fields]
-            )
+    def one(a, payload):
+        if fake:
+            h = hashlib.sha256(payload).digest()
+            return [
+                {
+                    "asset_id": a,
+                    "sample_rate": 16000,
+                    "dominant_hz": float(h[0]) * 8000.0 / 255.0,
+                    "spectral_centroid_hz": float(h[1]) * 8000.0 / 255.0,
+                    "rolloff85_hz": float(h[2]) * 8000.0 / 255.0,
+                    "zero_crossing_rate": float(h[3]) * 2.0,
+                }
+            ]
+        return _decode(
+            a, lambda: [wav_spectral_features(a, payload)], "raise", _WAV_ONLY
+        )
 
-    return df.filter(F.col("modality") == "audio").select(
-        "asset_id", "content"
-    ).mapInPandas(
-        batches, schema=AUDIO_SPECTRAL_SCHEMA
-    )
+    return _map_assets(df, AUDIO_SPECTRAL_SCHEMA, one, "audio")
 
 
 def sample_video_frames(
@@ -265,7 +287,7 @@ def sample_video_frames(
     fake: bool = False,
     on_error: str = "raise",
 ) -> DataFrame:
-    """Frame sampling for motion payloads via Arrow-batched ``mapInPandas``.
+    """Frame sampling for motion payloads.
 
     The real path dispatches on the container: animated GIFs walk the
     frame descriptors in ``functions.codecs``; MP4s walk the ``stbl``
@@ -274,105 +296,57 @@ def sample_video_frames(
     wants, located by byte offset without an H.264 decoder. Either way,
     every ``every_n``-th eligible frame (up to ``max_frames``) is emitted
     with a SHA-256 fingerprint of its compressed bytes. Other video
-    containers raise ``NotImplementedError`` (they need ffmpeg bindings
-    this container lacks); ``fake=True`` keeps the deterministic stand-in.
+    containers need ffmpeg bindings this container lacks; an MP4 whose
+    ``moov`` is absent or corrupt takes the same decode-error contract.
     """
-    from commerce_sessionization_spark.functions.codecs import (
-        UnsupportedMediaError,
-        parse_gif_frames,
-    )
-    from commerce_sessionization_spark.functions.containers import (
-        mp4_sample_index,
-        sniff_container,
-    )
+    step = max(every_n, 1)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for a, c in zip(pdf["asset_id"], pdf["content"]):
-                if fake:
-                    n = min(
-                        max_frames,
-                        1 + (len(c or b"") // max(every_n, 1)) % max_frames,
-                    )
-                    for i in range(n):
-                        recs.append(
-                            {
-                                "asset_id": a,
-                                "frame_idx": i * every_n,
-                                "frame_phash": hashlib.sha256(
-                                    (c or b"") + i.to_bytes(4, "big")
-                                ).hexdigest()[:16],
-                            }
-                        )
-                    continue
-                payload = bytes(c or b"")
-                if sniff_container(payload) == "mp4":
-                    # ftyp sniffs as mp4 but moov may be absent/corrupt:
-                    # route those through the same contract as the GIF
-                    # branch instead of letting the parse kill the task.
-                    try:
-                        sync = [
-                            s for s in mp4_sample_index(payload) if s["sync"]
-                        ]
-                    except (
-                        UnsupportedMediaError,
-                        ValueError,
-                        struct.error,
-                    ) as e:
-                        if on_error == "skip":
-                            continue
-                        if not isinstance(e, UnsupportedMediaError):
-                            raise
-                        raise NotImplementedError(
-                            f"asset {a}: MP4 container unparsable without "
-                            f"ffmpeg fallback ({e}); use fake=True or "
-                            "on_error='skip'"
-                        ) from e
-                    for s in sync[:: max(every_n, 1)][:max_frames]:
-                        frame_bytes = payload[
-                            s["offset"] : s["offset"] + s["size"]
-                        ]
-                        recs.append(
-                            {
-                                "asset_id": a,
-                                "frame_idx": s["sample"] - 1,
-                                "frame_phash": hashlib.sha256(
-                                    frame_bytes
-                                ).hexdigest()[:16],
-                            }
-                        )
-                    continue
-                try:
-                    frames = parse_gif_frames(payload)
-                except (UnsupportedMediaError, ValueError, struct.error) as e:
-                    if on_error == "skip":
-                        continue
-                    if not isinstance(e, UnsupportedMediaError):
-                        raise
-                    raise NotImplementedError(
-                        f"asset {a}: only GIF and MP4 containers parse "
-                        f"without ffmpeg ({e}); use fake=True or "
-                        f"on_error='skip' for other formats"
-                    ) from e
-                for fr in frames[:: max(every_n, 1)][:max_frames]:
-                    recs.append(
-                        {
-                            "asset_id": a,
-                            "frame_idx": fr["frame_idx"],
-                            "frame_phash": fr["data_sha256"][:16],
-                        }
-                    )
-            yield pd.DataFrame.from_records(
-                recs,
-                columns=["asset_id", "frame_idx", "frame_phash"],
+    def one(a, payload):
+        if fake:
+            n = min(max_frames, 1 + (len(payload) // step) % max_frames)
+            return [
+                {
+                    "asset_id": a,
+                    "frame_idx": i * every_n,
+                    "frame_phash": hashlib.sha256(
+                        payload + i.to_bytes(4, "big")
+                    ).hexdigest()[:16],
+                }
+                for i in range(n)
+            ]
+        if sniff_container(payload) == "mp4":
+            sync = _decode(
+                a,
+                lambda: [s for s in mp4_sample_index(payload) if s["sync"]],
+                on_error,
+                "MP4 container unparsable without ffmpeg fallback",
             )
+            return [
+                {
+                    "asset_id": a,
+                    "frame_idx": s["sample"] - 1,
+                    "frame_phash": hashlib.sha256(
+                        payload[s["offset"] : s["offset"] + s["size"]]
+                    ).hexdigest()[:16],
+                }
+                for s in sync[::step][:max_frames]
+            ]
+        frames = _decode(
+            a,
+            lambda: parse_gif_frames(payload),
+            on_error,
+            "only GIF and MP4 containers parse without ffmpeg",
+        )
+        return [
+            {
+                "asset_id": a,
+                "frame_idx": fr["frame_idx"],
+                "frame_phash": fr["data_sha256"][:16],
+            }
+            for fr in frames[::step][:max_frames]
+        ]
 
-    return df.filter(F.col("modality") == "video").select(
-        "asset_id", "content"
-    ).mapInPandas(
-        batches, schema=FRAME_SAMPLE_SCHEMA
-    )
+    return _map_assets(df, FRAME_SAMPLE_SCHEMA, one, "video")
 
 
 AUDIO_MFCC_SCHEMA = StructType(
@@ -388,56 +362,35 @@ AUDIO_MFCC_SCHEMA = StructType(
 def extract_audio_mfcc(
     df: DataFrame, n_mfcc: int = 13, fake: bool = False
 ) -> DataFrame:
-    """MFCC audio fingerprints via Arrow-batched ``mapInPandas``: the
-    standard speech/audio featurization (pre-emphasis → Hamming frames →
-    power spectrum → mel filterbank → log → DCT-II) reduced to a
-    fixed-size per-asset vector (frame mean + std), computed as one
-    numpy matmul chain per payload. The output ``mfcc_mean`` is an
-    ``array<double>`` — directly consumable by the embedding similarity
-    and dedup operators, so audio near-dup rides the same kNN/SemDeDup
-    paths as text embeddings. Compressed audio (MP3/AAC) raises
-    ``NotImplementedError``; ``fake=True`` emits a deterministic
-    payload-seeded stand-in.
+    """MFCC audio fingerprints: the standard speech/audio featurization
+    (pre-emphasis → Hamming frames → power spectrum → mel filterbank →
+    log → DCT-II) reduced to a fixed-size per-asset vector (frame mean +
+    std), computed as one numpy matmul chain per payload. The output
+    ``mfcc_mean`` is an ``array<double>`` — directly consumable by the
+    embedding similarity and dedup operators, so audio near-dup rides the
+    same kNN/SemDeDup paths as text embeddings.
     """
-    from commerce_sessionization_spark.functions.codecs import (
-        UnsupportedMediaError,
-        wav_mfcc_features,
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for a, c in zip(pdf["asset_id"], pdf["content"]):
-                if fake:
-                    h = hashlib.sha256(c or b"").digest()
-                    vec = [round(b / 255.0, 6) for b in h[:n_mfcc]]
-                    recs.append(
-                        {
-                            "asset_id": a,
-                            "n_frames": 1 + h[0] % 100,
-                            "mfcc_mean": vec,
-                            "mfcc_std": vec[::-1],
-                        }
-                    )
-                    continue
-                try:
-                    recs.append(
-                        wav_mfcc_features(a, bytes(c or b""), n_mfcc=n_mfcc)
-                    )
-                except UnsupportedMediaError as e:
-                    raise NotImplementedError(
-                        f"asset {a}: only PCM WAV decodes without codec "
-                        f"libs ({e}); use fake=True for other formats"
-                    ) from e
-            yield pd.DataFrame.from_records(
-                recs, columns=[f.name for f in AUDIO_MFCC_SCHEMA.fields]
-            )
+    def one(a, payload):
+        if fake:
+            h = hashlib.sha256(payload).digest()
+            vec = [round(b / 255.0, 6) for b in h[:n_mfcc]]
+            return [
+                {
+                    "asset_id": a,
+                    "n_frames": 1 + h[0] % 100,
+                    "mfcc_mean": vec,
+                    "mfcc_std": vec[::-1],
+                }
+            ]
+        return _decode(
+            a,
+            lambda: [wav_mfcc_features(a, payload, n_mfcc=n_mfcc)],
+            "raise",
+            _WAV_ONLY,
+        )
 
-    return df.filter(F.col("modality") == "audio").select(
-        "asset_id", "content"
-    ).mapInPandas(
-        batches, schema=AUDIO_MFCC_SCHEMA
-    )
+    return _map_assets(df, AUDIO_MFCC_SCHEMA, one, "audio")
 
 
 FRAME_FEATURES_SCHEMA = StructType(
@@ -463,70 +416,50 @@ def extract_video_frame_features(
     one fingerprint space. ``sample_video_frames`` stays the cheap
     container-walk variant (compressed-bytes fingerprints, no pixel
     work); this one pays the decode for real content features. True
-    video codecs (H.264/VP9) still raise ``NotImplementedError``.
+    video codecs (H.264/VP9) are unsupported.
 
     At 100 TB: decode cost is per-asset and rides the same Arrow batch;
     sampling (``every_n``, ``max_frames``) bounds output rows, and the
     composited-canvas copies are freed per asset — peak memory is one
     canvas per in-flight row, not per frame.
     """
-    from commerce_sessionization_spark.functions.codecs import (
-        UnsupportedMediaError,
-        _luma,
-        average_hash,
-        decode_gif,
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for a, c in zip(pdf["asset_id"], pdf["content"]):
-                if fake:
-                    h = hashlib.sha256(c or b"").digest()
-                    for i in range(min(max_frames, 1 + h[0] % 4)):
-                        recs.append(
-                            {
-                                "asset_id": a,
-                                "frame_idx": i * every_n,
-                                "width": 64 + h[1] % 64,
-                                "height": 64 + h[2] % 64,
-                                "delay_cs": 10,
-                                "mean_luma": round(h[3] / 255.0, 6),
-                                "phash": h.hex()[:16],
-                            }
-                        )
-                    continue
-                try:
-                    frames, delays = decode_gif(bytes(c or b""))
-                except UnsupportedMediaError as e:
-                    raise NotImplementedError(
-                        f"asset {a}: only GIF pixels decode without "
-                        f"ffmpeg ({e}); use fake=True for other formats"
-                    ) from e
-                step = max(every_n, 1)
-                for i, (rgb, d) in list(enumerate(zip(frames, delays)))[
-                    ::step
-                ][:max_frames]:
-                    recs.append(
-                        {
-                            "asset_id": a,
-                            "frame_idx": i,
-                            "width": rgb.shape[1],
-                            "height": rgb.shape[0],
-                            "delay_cs": d,
-                            "mean_luma": round(float(_luma(rgb).mean()), 6),
-                            "phash": average_hash(rgb),
-                        }
-                    )
-            yield pd.DataFrame.from_records(
-                recs, columns=[f.name for f in FRAME_FEATURES_SCHEMA.fields]
-            )
+    def one(a, payload):
+        if fake:
+            h = hashlib.sha256(payload).digest()
+            return [
+                {
+                    "asset_id": a,
+                    "frame_idx": i * every_n,
+                    "width": 64 + h[1] % 64,
+                    "height": 64 + h[2] % 64,
+                    "delay_cs": 10,
+                    "mean_luma": round(h[3] / 255.0, 6),
+                    "phash": h.hex()[:16],
+                }
+                for i in range(min(max_frames, 1 + h[0] % 4))
+            ]
+        frames, delays = _decode(
+            a,
+            lambda: decode_gif(payload),
+            "raise",
+            "only GIF pixels decode without ffmpeg",
+        )
+        sampled = list(enumerate(zip(frames, delays)))[:: max(every_n, 1)]
+        return [
+            {
+                "asset_id": a,
+                "frame_idx": i,
+                "width": rgb.shape[1],
+                "height": rgb.shape[0],
+                "delay_cs": d,
+                "mean_luma": round(float(_luma(rgb).mean()), 6),
+                "phash": average_hash(rgb),
+            }
+            for i, (rgb, d) in sampled[:max_frames]
+        ]
 
-    return df.filter(F.col("modality") == "video").select(
-        "asset_id", "content"
-    ).mapInPandas(
-        batches, schema=FRAME_FEATURES_SCHEMA
-    )
+    return _map_assets(df, FRAME_FEATURES_SCHEMA, one, "video")
 
 
 SCENE_CUT_SCHEMA = StructType(
@@ -551,55 +484,39 @@ def detect_scene_cuts(df: DataFrame, fake: bool = False) -> DataFrame:
     swap the fingerprint for a frame-difference metric; the GIF path
     uses the compressed-bytes SHA the codec layer already exposes
     (identical frames ⇒ identical bytes in practice for our encoder
-    path). ``fake=True`` derives a deterministic stand-in cut list.
+    path).
     """
-    from commerce_sessionization_spark.functions.codecs import (
-        UnsupportedMediaError,
-        parse_gif_frames,
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for a, c in zip(pdf["asset_id"], pdf["content"]):
-                if fake:
-                    h = hashlib.sha256(c or b"").digest()
-                    for i in range(h[0] % 3):
-                        recs.append(
-                            {
-                                "asset_id": a,
-                                "cut_at_frame": i + 1,
-                                "prev_fingerprint": h[1:9].hex(),
-                                "next_fingerprint": h[9:17].hex(),
-                            }
-                        )
-                    continue
-                try:
-                    frames = parse_gif_frames(bytes(c or b""))
-                except UnsupportedMediaError as e:
-                    raise NotImplementedError(
-                        f"asset {a}: only GIF containers parse without "
-                        f"ffmpeg ({e}); use fake=True for other formats"
-                    ) from e
-                for prev, nxt in zip(frames, frames[1:]):
-                    if prev["data_sha256"] != nxt["data_sha256"]:
-                        recs.append(
-                            {
-                                "asset_id": a,
-                                "cut_at_frame": nxt["frame_idx"],
-                                "prev_fingerprint": prev["data_sha256"][:16],
-                                "next_fingerprint": nxt["data_sha256"][:16],
-                            }
-                        )
-            yield pd.DataFrame.from_records(
-                recs, columns=[f.name for f in SCENE_CUT_SCHEMA.fields]
-            )
+    def one(a, payload):
+        if fake:
+            h = hashlib.sha256(payload).digest()
+            return [
+                {
+                    "asset_id": a,
+                    "cut_at_frame": i + 1,
+                    "prev_fingerprint": h[1:9].hex(),
+                    "next_fingerprint": h[9:17].hex(),
+                }
+                for i in range(h[0] % 3)
+            ]
+        frames = _decode(
+            a,
+            lambda: parse_gif_frames(payload),
+            "raise",
+            "only GIF containers parse without ffmpeg",
+        )
+        return [
+            {
+                "asset_id": a,
+                "cut_at_frame": nxt["frame_idx"],
+                "prev_fingerprint": prev["data_sha256"][:16],
+                "next_fingerprint": nxt["data_sha256"][:16],
+            }
+            for prev, nxt in zip(frames, frames[1:])
+            if prev["data_sha256"] != nxt["data_sha256"]
+        ]
 
-    return df.filter(F.col("modality") == "video").select(
-        "asset_id", "content"
-    ).mapInPandas(
-        batches, schema=SCENE_CUT_SCHEMA
-    )
+    return _map_assets(df, SCENE_CUT_SCHEMA, one, "video")
 
 
 RESAMPLED_AUDIO_SCHEMA = StructType(
@@ -622,53 +539,28 @@ def standardize_audio(
     the codec layer decodes (8/16/24/32-bit int, 32/64-bit float,
     extensible); output ``content`` is a decodable 16-bit WAV, so the
     step composes with ``extract_audio_mfcc``/``extract_audio_spectral``
-    downstream. Compressed formats raise ``NotImplementedError``.
+    downstream.
     """
-    from commerce_sessionization_spark.functions.codecs import (
-        UnsupportedMediaError,
-        decode_wav,
-        encode_wav,
-        resample_audio,
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for a, c in zip(pdf["asset_id"], pdf["content"]):
-                payload = bytes(c or b"")
-                if fake:
-                    h = hashlib.sha256(payload).digest()
-                    n = 100 + h[0]
-                    recs.append(
-                        {"asset_id": a, "sample_rate": target_rate,
-                         "n_samples": n, "content": h * 8}
-                    )
-                    continue
-                try:
-                    rate, mono = decode_wav(payload)
-                except UnsupportedMediaError as e:
-                    raise NotImplementedError(
-                        f"asset {a}: only PCM WAV decodes without codec "
-                        f"libs ({e}); use fake=True for other formats"
-                    ) from e
-                out = resample_audio(mono, rate, target_rate)
-                recs.append(
-                    {
-                        "asset_id": a,
-                        "sample_rate": target_rate,
-                        "n_samples": len(out),
-                        "content": encode_wav(out, target_rate),
-                    }
-                )
-            yield pd.DataFrame.from_records(
-                recs, columns=[f.name for f in RESAMPLED_AUDIO_SCHEMA.fields]
-            )
+    def one(a, payload):
+        if fake:
+            h = hashlib.sha256(payload).digest()
+            return [
+                {"asset_id": a, "sample_rate": target_rate,
+                 "n_samples": 100 + h[0], "content": h * 8}
+            ]
+        rate, mono = _decode(a, lambda: decode_wav(payload), "raise", _WAV_ONLY)
+        out = resample_audio(mono, rate, target_rate)
+        return [
+            {
+                "asset_id": a,
+                "sample_rate": target_rate,
+                "n_samples": len(out),
+                "content": encode_wav(out, target_rate),
+            }
+        ]
 
-    return df.filter(F.col("modality") == "audio").select(
-        "asset_id", "content"
-    ).mapInPandas(
-        batches, schema=RESAMPLED_AUDIO_SCHEMA
-    )
+    return _map_assets(df, RESAMPLED_AUDIO_SCHEMA, one, "audio")
 
 
 def phash_near_dup_pairs(
@@ -794,52 +686,33 @@ def extract_container_metadata(df: DataFrame, fake: bool = False) -> DataFrame:
     decode by duration" all read this table — which is thousands of times
     smaller than the payload column — and never touch payload bytes again.
 
-    Best-effort by design: a payload matching no known magic yields a row
-    with ``container = 'unknown'`` rather than failing the triage pass
-    (crawl data always contains garbage). Runs on ALL modalities.
+    A payload matching no known magic yields ``container = 'unknown'``.
+    Runs on ALL modalities.
     """
-    from commerce_sessionization_spark.functions.codecs import (
-        UnsupportedMediaError,
-    )
-    from commerce_sessionization_spark.functions.containers import (
-        container_metadata,
-    )
 
-    cols = [f.name for f in CONTAINER_META_SCHEMA.fields]
+    # tags must be an explicit None: pandas fills missing record keys with
+    # NaN, which Arrow's map converter rejects
+    def one(a, payload):
+        if fake:
+            h = hashlib.sha256(payload).digest()
+            return [
+                {
+                    "asset_id": a,
+                    "container": "fake",
+                    "codec": "fake",
+                    "duration_sec": round(h[0] / 16.0, 6),
+                    "sample_rate": 16000,
+                    "channels": 1 + h[1] % 2,
+                    "n_streams": 1,
+                    "tags": None,
+                }
+            ]
+        try:
+            return [container_metadata(a, payload)]
+        except _DECODE_ERRORS:
+            return [{"asset_id": a, "container": "unknown", "tags": None}]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for a, c in zip(pdf["asset_id"], pdf["content"]):
-                if fake:
-                    h = hashlib.sha256(c or b"").digest()
-                    recs.append(
-                        {
-                            "asset_id": a,
-                            "container": "fake",
-                            "codec": "fake",
-                            "duration_sec": round(h[0] / 16.0, 6),
-                            "sample_rate": 16000,
-                            "channels": 1 + h[1] % 2,
-                            "n_streams": 1,
-                            "tags": None,
-                        }
-                    )
-                    continue
-                try:
-                    recs.append(container_metadata(a, bytes(c or b"")))
-                except (UnsupportedMediaError, ValueError, struct.error):
-                    # tags must be an explicit None: pandas fills missing
-                    # record keys with NaN, which Arrow's map converter
-                    # rejects
-                    recs.append(
-                        {"asset_id": a, "container": "unknown", "tags": None}
-                    )
-            yield pd.DataFrame.from_records(recs, columns=cols)
-
-    return df.select("asset_id", "content").mapInPandas(
-        batches, schema=CONTAINER_META_SCHEMA
-    )
+    return _map_assets(df, CONTAINER_META_SCHEMA, one)
 
 
 IMAGE_METADATA_SCHEMA = StructType(
@@ -870,103 +743,67 @@ def extract_image_metadata(df: DataFrame, fake: bool = False) -> DataFrame:
     where generative-model provenance strings live). JPEG dimensions come
     from the SOF marker and PNG's from IHDR, so no payload is ever
     entropy-decoded; formats without embedded metadata (BMP/WebP/GIF)
-    yield a format + null-fields row rather than failing the pass.
+    and unparseable payloads yield a format + null-fields row.
     """
-    from commerce_sessionization_spark.functions.codecs import (
-        UnsupportedMediaError,
-    )
-    from commerce_sessionization_spark.functions.containers import (
-        sniff_container,
-    )
-    from commerce_sessionization_spark.functions.metadata import (
-        jpeg_dimensions,
-        parse_jpeg_exif,
-        parse_png_metadata,
-    )
 
-    cols = [f.name for f in IMAGE_METADATA_SCHEMA.fields]
+    def one(a, payload):
+        if fake:
+            h = hashlib.sha256(payload).digest()
+            return [
+                {
+                    "asset_id": a,
+                    "format": "fake",
+                    "width": 1 + h[0],
+                    "height": 1 + h[1],
+                    "orientation": 1,
+                    "has_gps": False,
+                }
+            ]
+        kind = sniff_container(payload)
+        rec = {"asset_id": a, "format": kind or "unknown"}
+        try:
+            if kind == "jpeg":
+                exif = parse_jpeg_exif(payload)
+                w, h = jpeg_dimensions(payload)
+                rec.update(
+                    width=w,
+                    height=h,
+                    orientation=exif["orientation"],
+                    make=exif["make"],
+                    model=exif["model"],
+                    datetime_original=exif["datetime_original"]
+                    or exif["datetime"],
+                    has_gps=exif["has_gps"],
+                )
+            elif kind == "png":
+                m = parse_png_metadata(payload)
+                rec.update(
+                    width=m["width"],
+                    height=m["height"],
+                    dpi=m["dpi"],
+                    software=m["text"].get("Software"),
+                    datetime_original=m["modified"],
+                    has_gps=False,
+                )
+            elif kind == "avif":
+                m = parse_avif(payload)
+                rec.update(width=m["width"], height=m["height"], has_gps=False)
+            elif kind == "tiff":
+                m = parse_tiff_exif(payload)
+                rec.update(
+                    width=m["width"],
+                    height=m["height"],
+                    orientation=m["orientation"],
+                    make=m["make"],
+                    model=m["model"],
+                    datetime_original=m["datetime_original"] or m["datetime"],
+                    has_gps=m["has_gps"],
+                )
+        except _DECODE_ERRORS:
+            pass  # keep the format-only row
+        return [rec]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for a, c in zip(pdf["asset_id"], pdf["content"]):
-                if fake:
-                    h = hashlib.sha256(c or b"").digest()
-                    recs.append(
-                        {
-                            "asset_id": a,
-                            "format": "fake",
-                            "width": 1 + h[0],
-                            "height": 1 + h[1],
-                            "orientation": 1,
-                            "has_gps": False,
-                        }
-                    )
-                    continue
-                payload = bytes(c or b"")
-                kind = sniff_container(payload)
-                rec = {"asset_id": a, "format": kind or "unknown"}
-                try:
-                    if kind == "jpeg":
-                        exif = parse_jpeg_exif(payload)
-                        w, h = jpeg_dimensions(payload)
-                        rec.update(
-                            width=w,
-                            height=h,
-                            orientation=exif["orientation"],
-                            make=exif["make"],
-                            model=exif["model"],
-                            datetime_original=exif["datetime_original"]
-                            or exif["datetime"],
-                            has_gps=exif["has_gps"],
-                        )
-                    elif kind == "png":
-                        m = parse_png_metadata(payload)
-                        rec.update(
-                            width=m["width"],
-                            height=m["height"],
-                            dpi=m["dpi"],
-                            software=m["text"].get("Software"),
-                            datetime_original=m["modified"],
-                            has_gps=False,
-                        )
-                    elif kind == "avif":
-                        from commerce_sessionization_spark.functions.containers import (  # noqa: E501
-                            parse_avif,
-                        )
-
-                        m = parse_avif(payload)
-                        rec.update(
-                            width=m["width"],
-                            height=m["height"],
-                            has_gps=False,
-                        )
-                    elif kind == "tiff":
-                        from commerce_sessionization_spark.functions.metadata import (  # noqa: E501
-                            parse_tiff_exif,
-                        )
-
-                        m = parse_tiff_exif(payload)
-                        rec.update(
-                            width=m["width"],
-                            height=m["height"],
-                            orientation=m["orientation"],
-                            make=m["make"],
-                            model=m["model"],
-                            datetime_original=m["datetime_original"]
-                            or m["datetime"],
-                            has_gps=m["has_gps"],
-                        )
-                except (UnsupportedMediaError, ValueError, struct.error):
-                    pass  # keep the format-only row; triage never fails
-                recs.append(rec)
-            yield pd.DataFrame.from_records(recs, columns=cols)
-
-    return df.filter(F.col("modality") == "image").select(
-        "asset_id", "content"
-    ).mapInPandas(
-        batches, schema=IMAGE_METADATA_SCHEMA
-    )
+    return _map_assets(df, IMAGE_METADATA_SCHEMA, one, "image")
 
 
 RESIZED_IMAGE_SCHEMA = StructType(
@@ -979,33 +816,29 @@ RESIZED_IMAGE_SCHEMA = StructType(
 )
 
 
+def _decode_for_resize(payload: bytes):
+    """(rgb, encoder of the same container) for a BMP/PNG/JPEG payload."""
+    if payload[:8] == b"\x89PNG\r\n\x1a\n":
+        return decode_png(payload)[0], encode_png
+    if payload[:2] == b"\xff\xd8":
+        return decode_jpeg(payload)[0], encode_jpeg
+    return decode_bmp(payload)[0], encode_bmp
+
+
 def resize_images(df: DataFrame, max_dim: int = 64, fake: bool = False) -> DataFrame:
-    """Downscale image payloads so the longest edge ≤ ``max_dim`` via
-    Arrow-batched ``mapInPandas`` (the thumbnail/normalize step every
-    vision-data pipeline runs before feature extraction).
+    """Downscale image payloads so the longest edge ≤ ``max_dim`` (the
+    thumbnail/normalize step every vision-data pipeline runs before
+    feature extraction).
 
     Real path: BMP/PNG/JPEG decode → nearest-neighbor index
     sampling (pure numpy, no PIL) → re-encode in the SAME container the
     asset arrived in (JPEG re-encodes near-lossless at ``quant=1``);
-    images already within bounds pass through byte-identical.
-    Other formats raise ``NotImplementedError`` (codec libs);
-    ``fake=True`` emits a deterministic payload-seeded stand-in with the
-    correctly scaled dimensions so pipeline shape stays testable.
+    images already within bounds pass through byte-identical. The fake
+    stand-in carries correctly scaled dimensions.
 
     Output keeps the ``content`` column a decodable image — resize
     composes with ``extract_image_features`` downstream.
     """
-    import numpy as np
-
-    from commerce_sessionization_spark.functions.codecs import (
-        UnsupportedMediaError,
-        decode_bmp,
-        decode_jpeg,
-        decode_png,
-        encode_bmp,
-        encode_jpeg,
-        encode_png,
-    )
 
     def scaled(w: int, h: int) -> tuple[int, int]:
         m = max(w, h)
@@ -1013,55 +846,28 @@ def resize_images(df: DataFrame, max_dim: int = 64, fake: bool = False) -> DataF
             return w, h
         return max(1, (w * max_dim) // m), max(1, (h * max_dim) // m)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for a, c in zip(pdf["asset_id"], pdf["content"]):
-                payload = bytes(c or b"")
-                if fake:
-                    hsh = hashlib.sha256(payload).digest()
-                    w, h = scaled(64 + hsh[0] % 192, 64 + hsh[1] % 192)
-                    recs.append(
-                        {"asset_id": a, "width": w, "height": h,
-                         "content": hsh * 2}
-                    )
-                    continue
-                try:
-                    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-                        rgb, _bits = decode_png(payload)
-                        encode = encode_png
-                    elif payload[:2] == b"\xff\xd8":
-                        rgb, _bits = decode_jpeg(payload)
-                        encode = encode_jpeg
-                    else:
-                        rgb, _bits = decode_bmp(payload)
-                        encode = encode_bmp
-                except UnsupportedMediaError as e:
-                    raise NotImplementedError(
-                        f"asset {a}: only BMP/PNG/JPEG resize "
-                        f"without codec libs ({e}); use fake=True for "
-                        "other formats"
-                    ) from e
-                ih, iw = rgb.shape[:2]
-                w, h = scaled(iw, ih)
-                if (w, h) == (iw, ih):
-                    out = payload  # within bounds: byte-identical passthrough
-                else:
-                    ys = (np.arange(h) * ih) // h
-                    xs = (np.arange(w) * iw) // w
-                    out = encode(np.ascontiguousarray(rgb[ys][:, xs]))
-                recs.append(
-                    {"asset_id": a, "width": w, "height": h, "content": out}
-                )
-            yield pd.DataFrame.from_records(
-                recs, columns=["asset_id", "width", "height", "content"]
-            )
+    def one(a, payload):
+        if fake:
+            hsh = hashlib.sha256(payload).digest()
+            w, h = scaled(64 + hsh[0] % 192, 64 + hsh[1] % 192)
+            return [{"asset_id": a, "width": w, "height": h, "content": hsh * 2}]
+        rgb, encode = _decode(
+            a,
+            lambda: _decode_for_resize(payload),
+            "raise",
+            "only BMP/PNG/JPEG resize without codec libs",
+        )
+        ih, iw = rgb.shape[:2]
+        w, h = scaled(iw, ih)
+        if (w, h) == (iw, ih):
+            out = payload  # within bounds: byte-identical passthrough
+        else:
+            ys = (np.arange(h) * ih) // h
+            xs = (np.arange(w) * iw) // w
+            out = encode(np.ascontiguousarray(rgb[ys][:, xs]))
+        return [{"asset_id": a, "width": w, "height": h, "content": out}]
 
-    return df.filter(F.col("modality") == "image").select(
-        "asset_id", "content"
-    ).mapInPandas(
-        batches, schema=RESIZED_IMAGE_SCHEMA
-    )
+    return _map_assets(df, RESIZED_IMAGE_SCHEMA, one, "image")
 
 
 DOCUMENT_TEXT_SCHEMA = StructType(
@@ -1103,9 +909,6 @@ def _extract_document_rec(asset_id, payload: bytes, mime: str) -> dict:
     Module-level (not a closure) so the swallow-vs-raise contract is
     unit-testable without a Spark round-trip.
     """
-    from commerce_sessionization_spark.functions.codecs import (
-        UnsupportedMediaError,
-    )
     from commerce_sessionization_spark.functions.docx import (
         extract_docx_text,
         parse_docx,
@@ -1163,32 +966,22 @@ def _extract_document_rec(asset_id, payload: bytes, mime: str) -> dict:
 
 def extract_document_text(df: DataFrame) -> DataFrame:
     """Text + metadata from document payloads (PDF) — the document leg
-    of the corpus pipeline, same Arrow-batched shape as the image/audio
-    extractors. Per asset: page count, concatenated page text (pages
-    joined by form-feed, so the sentence chunker can re-split), Info
-    metadata (Title/Producer — generative-tool provenance lives there),
-    and the ``has_cid_fonts`` flag (CJK embedded fonts decode wrong in
-    the dependency-free path — route those to a real PDF stack).
-    Encrypted or non-PDF payloads yield a format-only row; extraction
-    never fails the pass. The output is documents-shaped enough to feed
-    ``quality_score`` / dedup directly via ``text``.
+    of the corpus pipeline. Per asset: page count, concatenated page text
+    (pages joined by form-feed, so the sentence chunker can re-split),
+    Info metadata (Title/Producer — generative-tool provenance lives
+    there), and the ``has_cid_fonts`` flag (CJK embedded fonts decode
+    wrong in the dependency-free path — route those to a real PDF stack).
+    Encrypted or non-PDF payloads yield a format-only row. The output is
+    documents-shaped enough to feed ``quality_score`` / dedup directly via
+    ``text``.
     """
-    cols = [f.name for f in DOCUMENT_TEXT_SCHEMA.fields]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in it:
-            recs = [
-                _extract_document_rec(a, bytes(c or b""), mt)
-                for a, c, mt in zip(
-                    pdf_batch["asset_id"],
-                    pdf_batch["content"],
-                    pdf_batch["mime_type"],
-                )
-            ]
-            yield pd.DataFrame(recs, columns=cols)
-
     docs = df.filter(
         (F.col("modality") == "document")
         | (F.col("mime_type") == "application/pdf")
-    ).select("asset_id", "content", "mime_type")
-    return docs.mapInPandas(batches, DOCUMENT_TEXT_SCHEMA)
+    )
+    return _map_assets(
+        docs,
+        DOCUMENT_TEXT_SCHEMA,
+        lambda a, payload, mime: [_extract_document_rec(a, payload, mime)],
+        extra=("mime_type",),
+    )

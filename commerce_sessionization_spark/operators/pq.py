@@ -43,14 +43,6 @@ PQ_M = 8  #: subspaces
 PQ_K = 16  #: centroids per subspace
 
 
-def _sq_dist(a: Column, b: Column) -> Column:
-    """d²(a,b) via the dot identity — matches DuckDB's list_dot_product
-    fold bit-for-bit (left-to-right double accumulation)."""
-    from commerce_sessionization_spark.functions.vectors import dot_product
-
-    return dot_product(a, a) - F.lit(2.0) * dot_product(a, b) + dot_product(b, b)
-
-
 def pq_codebook(
     df: DataFrame,
     m: int = PQ_M,

@@ -57,13 +57,12 @@ def write_partitioned_parquet(
     Requires ``spark.sql.sources.partitionOverwriteMode=dynamic`` (set by
     ``session.get_spark``) so only touched partitions are replaced.
     """
-    if cluster_before_write:
-        df = df.repartition(*[df[c] for c in partition_cols])
-    (
-        df.write.partitionBy(*partition_cols)
-        .mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
-        .parquet(path)
+    write_partitioned(
+        df,
+        path,
+        partition_cols,
+        cluster_before_write=cluster_before_write,
+        max_records_per_file=max_records_per_file,
     )
 
 
