@@ -48,17 +48,11 @@ def main(argv: list[str] | None = None) -> int:
     s = sub.add_parser("sessionize", help="EP1: one incremental hour")
     s.add_argument("--date", required=True, help="event_date YYYY-MM-DD")
     s.add_argument("--hour", required=True, help="event_hour HH")
-    s.add_argument(
-        "--no-sort",
-        action="store_true",
-        help="skip the reference's global output sort (recommended at scale)",
-    )
     _add_common(s)
 
     b = sub.add_parser("backfill", help="ordered EP1 over an hour range")
     b.add_argument("--start", required=True, help='"YYYY-MM-DD HH" first hour')
     b.add_argument("--end", required=True, help='"YYYY-MM-DD HH" last hour (inclusive)')
-    b.add_argument("--no-sort", action="store_true")
     _add_common(b)
 
     st = sub.add_parser(
@@ -366,9 +360,7 @@ def main(argv: list[str] | None = None) -> int:
         elif args.cmd == "sessionize":
             from commerce_sessionization_spark.operators import sessionize_hour
 
-            sessionize_hour(
-                spark, args.date, args.hour, args.path, sort_output=not args.no_sort
-            )
+            sessionize_hour(spark, args.date, args.hour, args.path)
         elif args.cmd == "backfill":
             from commerce_sessionization_spark.operators import sessionize_hour
 
@@ -378,11 +370,7 @@ def main(argv: list[str] | None = None) -> int:
                 top.error("--end before --start")
             while t <= end:
                 sessionize_hour(
-                    spark,
-                    t.strftime("%Y-%m-%d"),
-                    t.strftime("%H"),
-                    args.path,
-                    sort_output=not args.no_sort,
+                    spark, t.strftime("%Y-%m-%d"), t.strftime("%H"), args.path
                 )
                 t += timedelta(hours=1)
         elif args.cmd == "stream":

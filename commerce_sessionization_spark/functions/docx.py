@@ -13,42 +13,45 @@ reference repo has no document surface; north star.
 
 from __future__ import annotations
 
+import io
 import re
+import zipfile
+import zlib
 
 from commerce_sessionization_spark.functions.codecs import UnsupportedMediaError
+
+#: What a damaged zip raises while it is read: a bad header or CRC, a
+#: corrupt deflate stream, a member cut short.
+_CORRUPT_ZIP = (zipfile.BadZipFile, zlib.error, EOFError)
 
 
 def parse_docx(payload: bytes) -> dict:
     """Structure + core properties of a DOCX: paragraph count, Title /
     Creator / Application (docProps/core.xml + app.xml)."""
-    import io as _io
-    import zipfile
-
     buf = bytes(payload or b"")
     if buf[:4] != b"PK\x03\x04":
         raise UnsupportedMediaError("not a DOCX (zip) payload")
     try:
-        zf = zipfile.ZipFile(_io.BytesIO(buf))
+        zf = zipfile.ZipFile(io.BytesIO(buf))
         names = set(zf.namelist())
         if "word/document.xml" not in names:
             raise UnsupportedMediaError("zip is not a DOCX (no document.xml)")
-        doc = zf.read("word/document.xml")
-    except zipfile.BadZipFile as e:
+        doc, core, app = (
+            zf.read(part) if part in names else b""
+            for part in ("word/document.xml", "docProps/core.xml", "docProps/app.xml")
+        )
+    except _CORRUPT_ZIP as e:
         raise UnsupportedMediaError(f"docx: bad zip: {e}") from None
 
-    def prop(part: str, tag: bytes) -> str | None:
-        if part not in names:
-            return None
-        m = re.search(
-            rb"<" + tag + rb"[^>]*>([^<]*)</" + tag + rb">", zf.read(part)
-        )
+    def prop(xml: bytes, tag: bytes) -> str | None:
+        m = re.search(rb"<" + tag + rb"[^>]*>([^<]*)</" + tag + rb">", xml)
         return m.group(1).decode("utf-8", "replace") if m else None
 
     return {
         "n_paragraphs": len(re.findall(rb"<w:p[ >]", doc)),
-        "title": prop("docProps/core.xml", rb"dc:title"),
-        "author": prop("docProps/core.xml", rb"dc:creator"),
-        "producer": prop("docProps/app.xml", rb"Application"),
+        "title": prop(core, rb"dc:title"),
+        "author": prop(core, rb"dc:creator"),
+        "producer": prop(app, rb"Application"),
     }
 
 
@@ -62,15 +65,12 @@ def extract_docx_text(payload: bytes) -> list[str]:
     appears in order), headers/footers and embedded objects are out of
     scope by design.
     """
-    import io as _io
-    import zipfile
-
     buf = bytes(payload or b"")
     if buf[:4] != b"PK\x03\x04":
         raise UnsupportedMediaError("not a DOCX (zip) payload")
     try:
-        doc = zipfile.ZipFile(_io.BytesIO(buf)).read("word/document.xml")
-    except (zipfile.BadZipFile, KeyError) as e:
+        doc = zipfile.ZipFile(io.BytesIO(buf)).read("word/document.xml")
+    except (*_CORRUPT_ZIP, KeyError) as e:
         raise UnsupportedMediaError(f"docx: {e}") from None
     paragraphs = []
     for pm in re.finditer(rb"<w:p[ >].*?</w:p>", doc, re.S):
@@ -92,8 +92,6 @@ def build_docx(
 ) -> bytes:
     """Minimal valid DOCX for tests: [Content_Types], rels, document.xml,
     core/app props — the parts every real reader requires."""
-    import io as _io
-    import zipfile
 
     def xml_esc(s: str) -> str:
         return (
@@ -140,7 +138,7 @@ def build_docx(
         'officeDocument/2006/relationships/officeDocument" '
         'Target="word/document.xml"/></Relationships>'
     )
-    out = _io.BytesIO()
+    out = io.BytesIO()
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
         zf.writestr("[Content_Types].xml", ctypes)
         zf.writestr("_rels/.rels", rels)

@@ -17,10 +17,11 @@ change every id.
 
 Scale notes (100 TB): the per-user window shuffles once on ``user_id``
 (Catalyst collapses W1-W4 into one WindowExec); hot users are bounded by one
-hour of events + 1 carried row, so the sort is small per key. The final
-global ``sort(event_timestamp)`` (``SessionizationBuiltIn.scala:110``) is a
-range-exchange the big path does not need — keep ``sort_output=False`` there
-and let the partitioned write cluster instead.
+hour of events + 1 carried row, so the sort is small per key. The
+reference's final global ``sort(event_timestamp)``
+(``SessionizationBuiltIn.scala:110``) is replaced by a partition-local sort
+in the window's own stage: no range exchange and no sampling job, and each
+written file ascends by event time (an hour's files may overlap in time).
 """
 
 from __future__ import annotations
@@ -51,9 +52,7 @@ def with_event_timestamp(df: DataFrame) -> DataFrame:
     )
 
 
-def augment_session_id(
-    df: DataFrame, process_time: datetime, sort_output: bool = True
-) -> DataFrame:
+def augment_session_id(df: DataFrame, process_time: datetime) -> DataFrame:
     """Assign ``session_id`` to every event of hour ``process_time``.
 
     Input: union of prev-hour active-session representatives (session_id
@@ -68,7 +67,8 @@ def augment_session_id(
     3. seed ids: keep carried id / mint sha2 at boundaries / NULL (W3)
     4. forward-fill via ``last(ignorenulls)`` (W4)
     5. drop carried prev-hour rows; keep only the processed hour (P5)
-    6. optional global sort by timestamp (O1) + drop transients (P8)
+    6. sort each partition by timestamp, so every written file ascends by
+       event time (O1, per file rather than global) + drop transients (P8)
     """
     if "session_id" not in df.columns:
         df = df.withColumn("session_id", F.lit(None).cast("string"))
@@ -106,8 +106,9 @@ def augment_session_id(
         (F.col("event_date") == process_time.strftime("%Y-%m-%d"))
         & (F.col("event_hour") == process_time.strftime("%H"))
     )
-    if sort_output:
-        df = df.sort("event_timestamp")
+    # The partition columns lead the sort key: that is the order the
+    # planned partitioned write requires, so it adds no sort of its own.
+    df = df.sortWithinPartitions("event_date", "event_hour", "event_timestamp")
     return df.drop("event_timestamp", "time_diff").select(
         *[f.name for f in SESSION_SCHEMA.fields]
     )
@@ -141,7 +142,6 @@ def sessionize_hour(
     event_date: str,
     event_hour: str,
     base_path: str,
-    sort_output: bool = True,
     write: bool = True,
 ) -> DataFrame:
     """EP1 — the hourly incremental job (``SessionizationBuiltIn.scala:25-65``).
@@ -174,7 +174,7 @@ def sessionize_hour(
     prev_active = load_prev_active_sessions(prev_sessions, process_time)
 
     unioned = prev_active.unionByName(behaviors, allowMissingColumns=True)
-    sessions = augment_session_id(unioned, process_time, sort_output=sort_output)
+    sessions = augment_session_id(unioned, process_time)
     if write:
         write_partitioned_parquet(
             sessions, f"{base_path}/sessions", cluster_before_write=False

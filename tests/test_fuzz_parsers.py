@@ -258,3 +258,26 @@ def test_document_extraction_zip_errors_swallowed_only_for_pk(monkeypatch):
     monkeypatch.setattr(docx_mod, "parse_docx", zip_boom)
     rec = multimodal._extract_document_rec(2, b"PK\x03\x04junk", "application/docx")
     assert rec["format"] == "unknown"
+
+
+def test_corrupt_docx_mutants_degrade_to_unknown():
+    """Seeded byte-mutants of a valid DOCX: a damaged zip (bad CRC or
+    header, corrupt deflate stream, truncated member) must come back as
+    format='unknown', never fail the document pass."""
+    import random
+
+    from commerce_sessionization_spark.functions.docx import build_docx
+    from commerce_sessionization_spark.operators import multimodal
+
+    good = build_docx(["hello world paragraph"] * 20, title="T", author="A")
+    rnd = random.Random(0)
+    formats = []
+    for i in range(400):
+        mutant = bytearray(good)
+        for _ in range(rnd.randint(1, 4)):
+            # keep the PK magic so every mutant reaches the zip layer
+            mutant[rnd.randrange(4, len(mutant))] = rnd.randrange(256)
+        rec = multimodal._extract_document_rec(i, bytes(mutant), "application/docx")
+        formats.append(rec["format"])
+    # both outcomes occur: the mutants hit payload bytes and zip structure
+    assert set(formats) == {"docx", "unknown"}

@@ -8,6 +8,13 @@ engine's generic sessionize on driver testdata.
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import random
+from collections import defaultdict
+from datetime import datetime
+
+import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import functions as F
@@ -19,6 +26,11 @@ from commerce_sessionization_spark.sources import read_parquet
 from commerce_sessionization_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
+
+CSV_HEADER = (
+    "event_time,event_type,product_id,category_id,"
+    "category_code,brand,price,user_id\n"
+)
 
 
 @pytest.fixture(scope="module")
@@ -35,10 +47,7 @@ def pipeline(spark, tmp_path_factory):
         ("2019-10-01 11:05:00 UTC", "view", 4, 12, "c.c", "b3", 2.0, 1),
     ]
     with open(csv, "w") as f:
-        f.write(
-            "event_time,event_type,product_id,category_id,"
-            "category_code,brand,price,user_id\n"
-        )
+        f.write(CSV_HEADER)
         for r in rows:
             f.write(",".join(str(x) for x in r) + "\n")
     out = str(base / "data")
@@ -48,13 +57,71 @@ def pipeline(spark, tmp_path_factory):
     return out
 
 
+@pytest.fixture(scope="module")
+def seeded_pipeline(spark, tmp_path_factory):
+    """Two hours of seeded multi-user traffic, plus the carry-in edges: a
+    1 800 s gap across the boundary (the prev-hour event sits on the
+    hh:30:00 cutoff), a 1 801 s gap, and a same-second tie. Partition
+    coalescing is off while the hours run, so an hour spans several
+    window partitions and so several files."""
+    base = tmp_path_factory.mktemp("seeded")
+    rnd = random.Random(11)
+    rows = [
+        (f"2019-10-01 {rnd.choice((10, 11))}:{rnd.randrange(60):02d}:"
+         f"{rnd.randrange(60):02d} UTC", rnd.randrange(40))
+        for _ in range(400)
+    ] + [
+        ("2019-10-01 10:30:00 UTC", 1000),
+        ("2019-10-01 11:00:00 UTC", 1000),
+        ("2019-10-01 10:29:59 UTC", 1001),
+        ("2019-10-01 11:00:00 UTC", 1001),
+        ("2019-10-01 10:40:00 UTC", 1002),
+        ("2019-10-01 10:40:00 UTC", 1002),
+        ("2019-10-01 11:05:00 UTC", 1002),
+    ]
+    csv = base / "raw.csv"
+    with open(csv, "w") as f:
+        f.write(CSV_HEADER)
+        for event_time, user in rows:
+            f.write(f"{event_time},view,1,1,c.a,b1,1.0,{user}\n")
+    out = str(base / "data")
+    divide_file(spark, str(csv), out)
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        sessionize_hour(spark, "2019-10-01", "10", out)
+        sessionize_hour(spark, "2019-10-01", "11", out)
+    finally:
+        spark.conf.set(key, prior)
+    return out
+
+
+def reference_sessions(events):
+    """(user_id, event_time, session_id) by a per-user loop over the whole
+    history: a gap over 1 800 s opens a session, whose id is
+    ``sha256("{user}-yyyy-MM-dd HH:mm:ss")`` of its first event."""
+    by_user = defaultdict(list)
+    for user, event_time in events:
+        by_user[user].append(event_time)
+    out = []
+    for user, times in by_user.items():
+        prev = start = None
+        for event_time in sorted(times):
+            t = datetime.strptime(event_time, "%Y-%m-%d %H:%M:%S UTC")
+            if prev is None or (t - prev).total_seconds() > 1800:
+                start = t
+            prev = t
+            key = f"{user}-{start:%Y-%m-%d %H:%M:%S}"
+            out.append((user, event_time, hashlib.sha256(key.encode()).hexdigest()))
+    return sorted(out)
+
+
 def test_ingest_layout_and_partitioning(spark, pipeline):
     logs = read_parquet(spark, f"{pipeline}/logs", BEHAVIOR_SCHEMA)
     assert logs.count() == 5
     hours = {r.event_hour for r in logs.select("event_hour").distinct().collect()}
     assert hours == {"10", "11"}
-    import glob
-
     files = glob.glob(f"{pipeline}/logs/event_date=*/event_hour=*/*.parquet")
     assert files, "hive-partitioned layout expected"
 
@@ -88,6 +155,49 @@ def test_rerun_is_idempotent(spark, pipeline):
         for r in read_parquet(spark, f"{pipeline}/sessions", SESSION_SCHEMA).collect()
     )
     assert before == after
+
+
+@pytest.mark.parametrize("fixture", ["pipeline", "seeded_pipeline"])
+def test_ids_equal_a_per_user_reference_loop(spark, request, fixture):
+    base = request.getfixturevalue(fixture)
+    logs = read_parquet(spark, f"{base}/logs", BEHAVIOR_SCHEMA).collect()
+    sess = read_parquet(spark, f"{base}/sessions", SESSION_SCHEMA).collect()
+    got = sorted((r.user_id, r.event_time, r.session_id) for r in sess)
+    assert got == reference_sessions((r.user_id, r.event_time) for r in logs)
+
+
+def test_each_written_file_ascends_by_event_time(pipeline, seeded_pipeline):
+    """The hourly job sorts each partition, not the whole hour: every file
+    ascends by event_time, and one hour's files may overlap in time."""
+    files_per_hour = {}
+    for base in (pipeline, seeded_pipeline):
+        for hour_dir in glob.glob(f"{base}/sessions/event_date=*/event_hour=*"):
+            files = glob.glob(f"{hour_dir}/*.parquet")
+            files_per_hour[hour_dir] = len(files)
+            for path in files:
+                times = pq.read_table(path, columns=["event_time"])
+                times = times.column("event_time").to_pylist()
+                assert times == sorted(times), path
+    assert len(files_per_hour) == 4
+    # the seeded hours span several files, so the check is per file
+    assert max(files_per_hour.values()) >= 2
+
+
+def test_hour_runs_three_jobs_without_range_exchange(spark, pipeline):
+    """Hour 11 (carry-in present) runs 3 Spark jobs; with the reference's
+    global sort it ran 5 (a range exchange plus its sampling job)."""
+    sc = spark.sparkContext
+    group = "test_pipeline.sessionize_hour"
+    sc.setJobGroup(group, "sessionize_hour 2019-10-01 11")
+    try:
+        sessionize_hour(spark, "2019-10-01", "11", pipeline)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+    hour = sessionize_hour(spark, "2019-10-01", "11", pipeline, write=False)
+    plan = hour._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning" not in plan.lower()
 
 
 def test_missing_sessions_dir_is_the_only_empty_carry_in(

@@ -18,6 +18,10 @@ box stable:
   working tree's phases divided by median over the base phases) and
   their geometric mean — a number that stays meaningful when the
   absolute seconds do not. ratio > 1 means the working tree is slower.
+- Each query also carries its per-pair ratios (phase i of A against
+  phase i of B) and their min and max; ``slowest`` shows that
+  [min, max] spread beside each ratio, so a per-query gate can tell a
+  regression from the harness's own noise.
 
     python tools/bench_ab.py --base <git-ref | checkout-dir> [--queries a,b,...]
         [--repeats 2] [--phases 4] [--out BENCH_AB.json]
@@ -103,6 +107,57 @@ def run_phase(tree: Path, queries: list[str], repeats: int) -> dict:
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
+def query_ratio(base_phases: list[float], work_phases: list[float]) -> dict:
+    """One query's work/base ratio and its spread.
+
+    ``ratio`` is the median of the working tree's phases over the median
+    of the base phases. ``pair_ratios`` pairs phase i of A with phase i
+    of B (the ABBA order puts each pair in the same block), and
+    ``ratio_min``/``ratio_max`` bound them: a ratio whose pairs straddle
+    1.0 is within the harness's noise for that query.
+    """
+    a = statistics.median(base_phases)
+    b = statistics.median(work_phases)
+    pairs = [
+        round(w / max(x, 1e-9), 4) for x, w in zip(base_phases, work_phases)
+    ]
+    return {
+        "base": round(a, 3),
+        "work": round(b, 3),
+        "ratio": round(b / max(a, 1e-9), 4),
+        "pair_ratios": pairs,
+        "ratio_min": min(pairs),
+        "ratio_max": max(pairs),
+    }
+
+
+def summarize(phase_timings: dict[str, list[dict[str, float]]],
+              queries: list[str]) -> dict:
+    """Per-query ratios, their geometric mean (``value``) and the five
+    largest ratios (``slowest``), each as [query, ratio, [min, max]]."""
+    per_query = {
+        q: query_ratio(
+            [p[q] for p in phase_timings["A"]],
+            [p[q] for p in phase_timings["B"]],
+        )
+        for q in queries
+    }
+    geomean = round(
+        statistics.geometric_mean(
+            [max(v["ratio"], 1e-9) for v in per_query.values()]
+        ),
+        4,
+    )
+    slowest = sorted(
+        (
+            (q, v["ratio"], [v["ratio_min"], v["ratio_max"]])
+            for q, v in per_query.items()
+        ),
+        key=lambda t: -t[1],
+    )[:5]
+    return {"value": geomean, "slowest": slowest, "queries": per_query}
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--base", required=True,
@@ -170,32 +225,18 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    per_query = {}
-    ratios = []
-    for q in queries:
-        a = statistics.median([p[q] for p in phase_timings["A"]])
-        b = statistics.median([p[q] for p in phase_timings["B"]])
-        r = round(b / max(a, 1e-9), 4)
-        per_query[q] = {"base": round(a, 3), "work": round(b, 3),
-                        "ratio": r}
-        ratios.append(r)
-    geomean = round(
-        statistics.geometric_mean([max(r, 1e-9) for r in ratios]), 4
-    )
+    summary = summarize(phase_timings, queries)
     full = {
         "metric": "ab_ratio_geomean",
-        "value": geomean,
+        "value": summary["value"],
         "unit": "work/base",
         "base_ref": args.base,
         "phases": order,
         "repeats": args.repeats,
         "load_avgs": loads,
         "n_queries": len(queries),
-        "slowest": sorted(
-            ((q, v["ratio"]) for q, v in per_query.items()),
-            key=lambda t: -t[1],
-        )[:5],
-        "queries": per_query,
+        "slowest": summary["slowest"],
+        "queries": summary["queries"],
     }
     out_path = Path(args.out) if args.out else REPO / "bench_ab_result.json"
     out_path.write_text(json.dumps(full) + "\n")
