@@ -23,6 +23,7 @@ import argparse
 import sys
 from datetime import datetime, timedelta
 
+from commerce_sessionization_spark.operators.sessions import DEFAULT_GAP_SECONDS
 from commerce_sessionization_spark.session import get_spark
 
 
@@ -67,7 +68,7 @@ def main(argv: list[str] | None = None) -> int:
         action="store_true",
         help="keep running on new files (default drains the backlog and exits)",
     )
-    st.add_argument("--gap-seconds", type=int, default=1800)
+    st.add_argument("--gap-seconds", type=int, default=DEFAULT_GAP_SECONDS)
     st.add_argument("--watermark", default="30 minutes")
     _add_common(st)
 

@@ -32,6 +32,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from commerce_sessionization_spark.operators.sessions import DEFAULT_GAP_SECONDS
 from commerce_sessionization_spark.schemas import BEHAVIOR_SCHEMA, SESSION_SCHEMA
 from commerce_sessionization_spark.sources.io import (
     read_parquet,
@@ -39,7 +40,7 @@ from commerce_sessionization_spark.sources.io import (
 )
 
 #: 30-minute inactivity gap, seconds (``SessionizationBuiltIn.scala:12``).
-SESSION_EXPIRED_SECONDS = 30 * 60
+SESSION_EXPIRED_SECONDS = DEFAULT_GAP_SECONDS
 
 #: Stored event_time format (``SessionizationBuiltIn.scala:82-85``).
 EVENT_TIME_FORMAT = "yyyy-MM-dd HH:mm:ss 'UTC'"

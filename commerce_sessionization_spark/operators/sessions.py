@@ -79,12 +79,12 @@ def sessionize_bucketed(
     boundaries are stitched afterwards:
 
     1. tentative sessionization within each ``(user, bucket)`` window;
-    2. per-bucket summary row (first/last ts, last tentative start, #sessions);
-    3. per user, fold the (tiny — #buckets) summary chain with
-       ``F.aggregate``: a bucket's first session merges into the previous
-       chain when the boundary gap ≤ ``gap_seconds``, inheriting the chain's
-       true start — which keeps propagating while a bucket holds a single
-       merged session;
+    2. per-bucket summary row (first/last ts, last tentative start);
+    3. per user, two window passes over the (tiny — #buckets) summary,
+       ordered by bucket: a bucket's first session merges into the
+       previous bucket's last one when the boundary gap ≤ ``gap_seconds``,
+       inheriting the chain's true start — which keeps propagating while
+       a bucket holds a single merged session;
     4. join the corrected starts back on ``(user, bucket)`` and re-mint ids.
 
     Two bounded shuffles + one summary-sized shuffle instead of one
@@ -110,90 +110,41 @@ def sessionize_bucketed(
         F.min(ts_col).alias("_first_ts"),
         F.max(ts_col).alias("_last_ts"),
         F.max("_tstart").alias("_last_start"),
-        F.countDistinct("_tstart").alias("_nsess"),
     )
 
-    # Fold each user's bucket chain oldest→newest. State: the previous
-    # bucket's true last-session start + its last event ts. A bucket's first
-    # session merges iff the cross-boundary gap fits; the chain's start keeps
-    # flowing through single-session buckets.
-    chain = (
-        summ.groupBy(user_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct("_b", "_first_ts", "_last_ts", "_last_start", "_nsess")
-                )
-            ).alias("_chain")
-        )
+    # chain = the true start of each bucket's last session: its own last
+    # tentative start, unless the bucket holds only one session (that start
+    # is its first event) and that session merges into the previous bucket.
+    wb = Window.partitionBy(user_col).orderBy("_b")
+    prev_last = F.lag("_last_ts").over(wb)
+    merge = prev_last.isNotNull() & (
+        F.unix_micros(F.col("_first_ts")) - F.unix_micros(prev_last) <= gap_us
+    )
+    single = F.col("_last_start") == F.col("_first_ts")
+    chain = F.last(
+        F.when(~(single & F.col("_merge")), F.col("_last_start")),
+        ignorenulls=True,
+    ).over(wb.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    fixes = (
+        summ.withColumn("_merge", merge)
+        .withColumn("_chain", chain)
         .select(
             user_col,
-            F.aggregate(
-                "_chain",
-                F.struct(
-                    F.array().cast(
-                        "array<struct<b:long,fixed_start:timestamp>>"
-                    ).alias("out"),
-                    F.lit(None).cast("timestamp").alias("prev_start"),
-                    F.lit(None).cast("timestamp").alias("prev_ts"),
-                ),
-                lambda acc, s: F.struct(
-                    F.concat(
-                        acc["out"],
-                        F.array(
-                            F.struct(
-                                s["_b"].alias("b"),
-                                F.when(
-                                    acc["prev_ts"].isNotNull()
-                                    & (
-                                        (
-                                            F.unix_micros(s["_first_ts"])
-                                            - F.unix_micros(acc["prev_ts"])
-                                        )
-                                        <= gap_us
-                                    ),
-                                    acc["prev_start"],
-                                )
-                                .otherwise(s["_first_ts"])
-                                .alias("fixed_start"),
-                            )
-                        ),
-                    ).alias("out"),
-                    F.when(
-                        (s["_nsess"] == 1)
-                        & acc["prev_ts"].isNotNull()
-                        & (
-                            (
-                                F.unix_micros(s["_first_ts"])
-                                - F.unix_micros(acc["prev_ts"])
-                            )
-                            <= gap_us
-                        ),
-                        acc["prev_start"],
-                    )
-                    .otherwise(s["_last_start"])
-                    .alias("prev_start"),
-                    s["_last_ts"].alias("prev_ts"),
-                ),
-                lambda acc: acc["out"],
-            ).alias("_fixes"),
-        )
-        .select(user_col, F.explode("_fixes").alias("_fix"))
-        .select(
-            user_col,
-            F.col("_fix.b").alias("_b"),
-            F.col("_fix.fixed_start").alias("_fixed_start"),
+            "_b",
+            "_first_ts",
+            F.when(F.col("_merge"), F.lag("_chain").over(wb))
+            .otherwise(F.col("_first_ts"))
+            .alias("_fixed_start"),
         )
     )
 
     # A bucket's first tentative session always starts at its first event;
     # only rows of that first session take the corrected start.
-    first_of_bucket = F.min(ts_col).over(Window.partitionBy(user_col, "_b"))
-    out = (
-        work.join(chain, [user_col, "_b"])
+    return (
+        work.join(fixes, [user_col, "_b"])
         .withColumn(
             "_start",
-            F.when(F.col("_tstart") == first_of_bucket, F.col("_fixed_start"))
+            F.when(F.col("_tstart") == F.col("_first_ts"), F.col("_fixed_start"))
             .otherwise(F.col("_tstart")),
         )
         .withColumn(
@@ -205,9 +156,8 @@ def sessionize_bucketed(
                 256,
             ),
         )
-        .drop("_b", "_tstart", "_fixed_start", "_start")
+        .drop("_b", "_tstart", "_first_ts", "_fixed_start", "_start")
     )
-    return out
 
 
 def session_stats(

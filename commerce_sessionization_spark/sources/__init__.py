@@ -20,7 +20,7 @@ from commerce_sessionization_spark.sources.generator import (
 from commerce_sessionization_spark.sources.generator import (
     register as register_generator,
 )
-from commerce_sessionization_spark.sources.tables import load_table, load_tables
+from commerce_sessionization_spark.sources.tables import load_table
 
 __all__ = [
     "CommerceEventsDataSource",
@@ -40,5 +40,4 @@ __all__ = [
     "write_partitioned",
     "write_partitioned_parquet",
     "load_table",
-    "load_tables",
 ]

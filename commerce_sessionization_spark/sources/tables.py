@@ -40,9 +40,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # arithmetic (unix_micros etc.) works uniformly downstream
             df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or ALL_TESTDATA_TABLES)}

@@ -77,6 +77,7 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from commerce_sessionization_spark.operators.sessions import DEFAULT_GAP_SECONDS
 from commerce_sessionization_spark.streaming.sessionize_stream import (
     read_events_stream,
     sessionize_stream_stateful,
@@ -220,7 +221,7 @@ def stream_sessions_to_parquet(
     source_glob: str,
     out_path: str,
     checkpoint: str,
-    gap_seconds: int = 1800,
+    gap_seconds: int = DEFAULT_GAP_SECONDS,
     watermark: str = "30 minutes",
     available_now: bool = True,
     **source_options: Any,

@@ -6,6 +6,10 @@ out of the graded window.
 
 from __future__ import annotations
 
+import hashlib
+import json
+from pathlib import Path
+
 from commerce_sessionization_spark.plans.queries import (
     CATALOG,
     EXTENDED_CATALOG,
@@ -199,6 +203,51 @@ REQUIRED_IN_DRIVER_WINDOW = {
     # carries the IDENTICAL oracle SQL) -> EXTENDED, both graded r8.
     "customer_entity_resolution", # blocking + fuzzy match + components
 }
+
+
+#: Committed catalog fingerprint: both name sequences and the sha256 of
+#: every oracle string.
+GOLDEN = Path(__file__).with_name("catalog_golden.json")
+
+#: The gap-rule family, defined in plans/sessions.py.
+SESSION_FAMILY = {
+    "sessionize_events", "sessionize_events_bucketed", "prev_active_sessions",
+    "session_stats", "sql_session_stats", "user_session_counts",
+    "session_window_agg", "session_transitions", "session_funnel",
+    "linear_attribution", "concurrent_sessions_peak",
+    "session_pattern_match", "capped_sessionize_parity",
+    "legacy_udf_sessions",
+}
+
+
+def catalog_fingerprint() -> dict:
+    return {
+        "catalog": [q.name for q in CATALOG],
+        "extended_catalog": [q.name for q in EXTENDED_CATALOG],
+        "oracle_sha256": {
+            q.name: None if q.oracle is None
+            else hashlib.sha256(q.oracle.encode()).hexdigest()
+            for q in FULL_CATALOG
+        },
+    }
+
+
+def test_catalog_matches_golden():
+    """Moving queries between modules changes neither catalog order nor
+    any oracle byte. An intended change rewrites tests/catalog_golden.json
+    from ``catalog_fingerprint()`` in the same commit and says why."""
+    golden = json.loads(GOLDEN.read_text())
+    now = catalog_fingerprint()
+    assert now["catalog"] == golden["catalog"]
+    assert now["extended_catalog"] == golden["extended_catalog"]
+    old, new = golden["oracle_sha256"], now["oracle_sha256"]
+    changed = sorted(n for n in old.keys() | new.keys() if old.get(n) != new.get(n))
+    assert not changed, f"oracle SQL changed: {changed}"
+    in_sessions = {
+        q.name for q in FULL_CATALOG
+        if q.spark.__module__ == "commerce_sessionization_spark.plans.sessions"
+    }
+    assert in_sessions == SESSION_FAMILY
 
 
 def test_driver_window_is_exactly_50():

@@ -99,8 +99,24 @@ def test_empty_buckets_between_sessions(spark):
     assert_equivalent(spark, rows)
 
 
-@pytest.mark.parametrize("seed", [7, 42, 1337])
-def test_fuzz_random_traffic(spark, seed):
+#: (gap_seconds, bucket_hours): the reference rule over 1 h and 6 h buckets,
+#: and gaps longer than a bucket, where a session merges across empty buckets
+_FUZZ_SHAPES = [(1800, 1), (7200, 1), (1800, 6), (30000, 1)]
+
+
+@pytest.mark.parametrize(
+    "seed,gap_seconds,bucket_hours",
+    [
+        pytest.param(
+            seed, gap, hours,
+            id=str(seed) if (gap, hours) == (1800, 1)
+            else f"{seed}-{gap}s-{hours}h",
+        )
+        for gap, hours in _FUZZ_SHAPES
+        for seed in (7, 42, 1337)
+    ],
+)
+def test_fuzz_random_traffic(spark, seed, gap_seconds, bucket_hours):
     rng = random.Random(seed)
     rows = []
     eid = 0
@@ -108,11 +124,16 @@ def test_fuzz_random_traffic(spark, seed):
         t = T0 + timedelta(seconds=rng.randint(0, 3600))
         for _ in range(rng.randint(5, 60)):
             # mix of intra-session jitter and boundary-ish gaps, incl. exact
-            gap = rng.choice([1, 30, 600, 1799, 1800, 1801, 3000, 90000])
+            gap = rng.choice(
+                [1, 30, 600, gap_seconds - 1, gap_seconds, gap_seconds + 1,
+                 3000, 90000]
+            )
             t = t + timedelta(seconds=gap + rng.randint(0, 5))
             rows.append((eid, user, t))
             eid += 1
-    assert_equivalent(spark, rows, bucket_hours=1)
+    assert_equivalent(
+        spark, rows, bucket_hours=bucket_hours, gap_seconds=gap_seconds
+    )
 
 
 def test_on_real_events_table(spark):
