@@ -38,6 +38,56 @@ def _dec(col: F.Column) -> F.Column:
     return col.cast("decimal(38,18)")
 
 
+def _sum0(col: F.Column, exact: bool, window=None) -> F.Column:
+    """Sum that is 0.0 over no rows, as a double: decimal-exact
+    (order-independent) when ``exact``, over ``window`` when given."""
+    s = F.sum(_dec(col) if exact else col)
+    if window is not None:
+        s = s.over(window)
+    if exact:
+        return F.coalesce(s, F.lit(0).cast("decimal(38,18)")).cast("double")
+    return F.coalesce(s, F.lit(0.0))
+
+
+#: Row count up to which a loop broadcasts its per-round state (ranks,
+#: scores, labels, a BFS frontier, distances) into the edge join; the
+#: regime is chosen from the measured vertex or frontier count. 4M
+#: (id, double) rows are tens of MB. Past it the join shuffles, the plan
+#: billion-node graphs need.
+_BROADCAST_ROWS = 4_000_000
+
+
+def _undirected(
+    edges: DataFrame, src_col: str, dst_col: str, weight_col: str | None = None
+) -> DataFrame:
+    """One ``(a, b)`` row per undirected edge with ``a < b``: least /
+    greatest fold the orientation and self-loops drop. Duplicates
+    collapse; with ``weight_col`` each row carries its weight as long
+    ``w`` and parallel edges keep the cheapest."""
+    a, b = F.col(src_col), F.col(dst_col)
+    w = [] if weight_col is None else [F.col(weight_col).cast("long").alias("w")]
+    und = edges.select(
+        F.least(a, b).alias("a"), F.greatest(a, b).alias("b"), *w
+    ).filter(F.col("a") != F.col("b"))
+    if weight_col is None:
+        return und.distinct()
+    return und.groupBy("a", "b").agg(F.min("w").alias("w"))
+
+
+def _both_ways(und: DataFrame, *extra: str) -> DataFrame:
+    """Adjacency ``(node, nbr, *extra)``: both directions of every
+    ``(a, b)`` row of ``und``, unfolded by one explode in a single pass;
+    the ``extra`` columns ride along on both."""
+    return und.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("a").alias("node"), F.col("b").alias("nbr"), *extra),
+                F.struct(F.col("b").alias("node"), F.col("a").alias("nbr"), *extra),
+            )
+        ).alias("_e")
+    ).select("_e.node", "_e.nbr", *(f"_e.{c}" for c in extra))
+
+
 #: hi/lo split base for the exact-mode long accumulation (cf. the same
 #: constant in operators/ml.py's sufficient-stats split)
 _SPLIT = 10**9
@@ -57,7 +107,6 @@ def pagerank(
     iterations: int = 5,
     damping: float = 0.85,
     exact: bool = False,
-    broadcast_vertices: int = 4_000_000,
     partition_invariants: bool = True,
     seeds: DataFrame | None = None,
     weight_col: str | None = None,
@@ -75,7 +124,11 @@ def pagerank(
     byte-identical to before so existing oracle replays are unaffected.
 
     ``edges`` is directed (symmetrize upstream for an undirected graph);
-    ``vertices`` must contain every node, including isolated ones. Returns
+    ``vertices`` must contain every node exactly once, including isolated
+    ones: vertex ids must be unique. A duplicated id counts twice in N and
+    holds rank twice, so the rank mass is no longer 1 (the exact split
+    path then raises on its decimal merge cast; the all-decimal path
+    returns unnormalized ranks). Returns
     ``(node, rank)`` after ``iterations`` rounds of
 
         rank'(v) = (1-d)/N + d · (Σ_{u→v} rank(u)/outdeg(u) + dangling/N)
@@ -90,7 +143,7 @@ def pagerank(
     one aggregation by destination, and a scalar semi-join sum, instead
     of re-deriving degree/dangling membership every round. When the
     vertex set is small enough to broadcast (``n_vert <=
-    broadcast_vertices``, default 4M ≈ tens of MB of (id, double)), the
+    _BROADCAST_ROWS``, 4M ≈ tens of MB of (id, double)), the
     per-round rank table is broadcast into the edge join, so the big
     edge list NEVER shuffles — and with ``partition_invariants`` (the
     default) the loop-invariant tables are laid out on the iteration
@@ -118,22 +171,6 @@ def pagerank(
     split is gated on the provable domain (unweighted, 0 <= damping
     <= 1, broadcast regime) and falls back to all-decimal elsewhere.
     """
-    if exact:
-        def _sum(col: F.Column) -> F.Column:
-            return F.sum(_dec(col)).cast("double")
-
-        def _sum0(col: F.Column) -> F.Column:
-            return (
-                F.coalesce(F.sum(_dec(col)), F.lit(0).cast("decimal(38,18)"))
-                .cast("double")
-            )
-    else:
-        def _sum(col: F.Column) -> F.Column:
-            return F.sum(col)
-
-        def _sum0(col: F.Column) -> F.Column:
-            return F.coalesce(F.sum(col), F.lit(0.0))
-
     src = F.col(src_col)
 
     # pin the edge list ONCE: it is referenced every iteration, and without
@@ -188,7 +225,7 @@ def pagerank(
     # setup split; the values are byte-identical, only computed once).
     out_deg = pin(out_deg)
     base = F.lit((1.0 - damping) / n_vert)
-    small = n_vert <= broadcast_vertices
+    small = n_vert <= _BROADCAST_ROWS
 
     # loop-invariant hoists: degree lives ON the VERTEX row (round-11 —
     # see below), and the dangling membership set is fixed by the
@@ -288,9 +325,13 @@ def pagerank(
     # hi·10^9 + lo = d·10^18 exactly for either sign (frac ∈ [0,1)).
     # Per (dst, scan-partition) the hi/lo streams sum as plain LONGs —
     # 0 ≤ damping ≤ 1 keeps total rank mass at 1 (±|E|·5e-19 decimal
-    # rounding), so every addend obeys c ∈ [0, 1+ε], hi ≤ 10^9, and a
-    # partial stays under 2^63 while a task holds < ~9·10^9 rows — and
-    # only the per-task partials merge in decimal(38,0), reconstructing
+    # rounding) over unique vertex ids, so every addend obeys
+    # c ∈ [0, 1+ε] and hi ≤ 10^9. Nothing here checks that bound:
+    # ANSI (pinned in session.get_spark) makes an overflow on this path
+    # raise instead of wrap — a long partial past 2^63, an addend
+    # outside decimal(20,18), or a merged sum outside decimal(38,18)
+    # (the duplicated-id case in tests/test_graph.py). Only the
+    # per-task partials merge in decimal(38,0), reconstructing
     # Σd = (10^9·Σhi + Σlo)/10^18 by exact integer algebra (the final
     # /10^18 division is exact: an integer over 10^18 has exactly 18
     # fractional digits, representable at scale 18). Values are
@@ -362,7 +403,10 @@ def pagerank(
                     ).alias("_c"),
                 )
                 .groupBy(id_col)
-                .agg(_sum(F.col("_c")).alias("_in"))
+                .agg(
+                    (F.sum(_dec(F.col("_c"))).cast("double") if exact else F.sum("_c"))
+                    .alias("_in")
+                )
             )
         # the dangling term only exists when dangling vertices do (see
         # the fast-path note above); when it does, _dangling rides a
@@ -388,7 +432,7 @@ def pagerank(
                 F.broadcast(dang_nodes) if small else dang_nodes,
                 id_col,
                 "left_semi",
-            ).agg(_sum0(F.col("rank")).alias("_dangling"))
+            ).agg(_sum0(F.col("rank"), exact).alias("_dangling"))
             nxt = nxt.crossJoin(F.broadcast(dangling))
         ranks = pin(nxt.select(F.col(id_col), new_rank.alias("rank"), *carry))
     if carry:
@@ -440,13 +484,8 @@ def triangle_counts(
     Output: (node, degree, n_triangles, cc_q6) for every node with
     degree >= 2, where cc = 2T / (d(d-1)) quantized to 6 digits.
     """
-    a, b = F.col(src_col), F.col(dst_col)
     und = (
-        edges.select(
-            F.least(a, b).alias("a"), F.greatest(a, b).alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
+        _undirected(edges, src_col, dst_col)
         # pinned: the edge list (often an expensive pair-generation
         # subtree) is referenced by the degree count, the ranked
         # direction, and both sides of the wedge join — without this
@@ -580,7 +619,6 @@ def label_propagation(
     rounds: int = 4,
     src_col: str = "src",
     dst_col: str = "dst",
-    broadcast_labels: int = 4_000_000,
 ) -> DataFrame:
     """Fixed-round synchronous label propagation (community detection).
 
@@ -596,7 +634,7 @@ def label_propagation(
     breaks frequency ties to the smallest value, which IS the LPA tie
     rule, so the per-node winner needs no (node, label) pre-count and
     no struct-argmax second shuffle. When the vertex set is small
-    enough (``<= broadcast_labels``), the per-round label table
+    enough (``<= _BROADCAST_ROWS``), the per-round label table
     broadcasts into the join and the adjacency is laid out
     hash-partitioned by node ONCE (cache, which keeps its
     outputPartitioning, see ``session.pin``): hash(node)
@@ -610,32 +648,18 @@ def label_propagation(
     Output: (node, community) — the label each node holds after
     ``rounds`` rounds.
     """
-    a, b = F.col(src_col), F.col(dst_col)
-    und = pin(
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = pin(_undirected(edges, src_col, dst_col))
     verts = pin(
         und.select(F.explode(F.array(F.col("a"), F.col("b"))).alias("node"))
         .distinct()
     )
     n_vert = verts.count()
-    small = n_vert <= broadcast_labels
+    small = n_vert <= _BROADCAST_ROWS
     # adjacency with the self-vote row, laid out by node once: the loop
     # joins it on nbr each round with a broadcast label table, so the big
     # side never moves again
-    adj = (
-        und.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a").alias("node"), F.col("b").alias("nbr")),
-                    F.struct(F.col("b").alias("node"), F.col("a").alias("nbr")),
-                )
-            ).alias("_e")
-        )
-        .select("_e.node", "_e.nbr")
-        .unionAll(verts.select("node", F.col("node").alias("nbr")))
+    adj = _both_ways(und).unionAll(
+        verts.select("node", F.col("node").alias("nbr"))
     )
     if small:
         adj = adj.repartition(F.col("node")).cache()
@@ -678,24 +702,9 @@ def shortest_paths(
     Output: (node, dist) for every node within ``rounds`` hops of
     ``source`` (the source itself at dist 0).
     """
-    a, b = F.col(src_col), F.col(dst_col)
-    und = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    adj = (
-        und.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a").alias("node"), F.col("b").alias("nbr")),
-                    F.struct(F.col("b").alias("node"), F.col("a").alias("nbr")),
-                )
-            ).alias("_e")
-        )
-        .select("_e.node", "_e.nbr")
-        # loop-invariant: columnar persist (see session.pin)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # loop-invariant: columnar persist (see session.pin)
+    adj = _both_ways(_undirected(edges, src_col, dst_col)).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     spark = edges.sparkSession
     seed = spark.createDataFrame([(source, 0)], "node long, dist int")
@@ -719,12 +728,11 @@ def shortest_paths(
     # broadcast the frontier while it's dimension-sized (the common BFS
     # regime); a web-scale frontier that outgrows this falls back to a
     # shuffle join — same result, the plan billion-node graphs need
-    broadcast_limit = 4_000_000
     for r in range(1, rounds + 1):
         if n_frontier == 0:
             break
         fr = frontier.select(F.col("node").alias("nbr"))
-        if n_frontier <= broadcast_limit:
+        if n_frontier <= _BROADCAST_ROWS:
             fr = F.broadcast(fr)
         reached = pin(
             adj.join(fr, "nbr")
@@ -748,7 +756,6 @@ def weighted_shortest_paths(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str = "w",
-    broadcast_limit: int = 4_000_000,
 ) -> DataFrame:
     """Bellman-Ford single-source shortest paths with non-negative
     integer edge weights, ``rounds`` relaxation rounds.
@@ -767,36 +774,9 @@ def weighted_shortest_paths(
     dimension-sized; the pinned adjacency never reshuffles. Output:
     (node, dist) for nodes reachable within ``rounds`` edges.
     """
-    a, b = F.col(src_col), F.col(dst_col)
-    wgt = F.col(weight_col).cast("long")
-    und = (
-        edges.select(
-            F.least(a, b).alias("a"), F.greatest(a, b).alias("b"), wgt.alias("w")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.min("w").alias("w"))  # parallel edges keep the cheapest
-    )
-    adj = (
-        und.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("a").alias("node"),
-                        F.col("b").alias("nbr"),
-                        F.col("w"),
-                    ),
-                    F.struct(
-                        F.col("b").alias("node"),
-                        F.col("a").alias("nbr"),
-                        F.col("w"),
-                    ),
-                )
-            ).alias("_e")
-        )
-        .select("_e.node", "_e.nbr", "_e.w")
-        # loop-invariant: columnar persist (see session.pin)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # loop-invariant: columnar persist (see session.pin)
+    adj = _both_ways(_undirected(edges, src_col, dst_col, weight_col), "w").persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     spark = edges.sparkSession
     dist = spark.createDataFrame([(source, 0)], "node long, dist long")
@@ -805,7 +785,7 @@ def weighted_shortest_paths(
     fingerprint = (1, 0)
     for _ in range(rounds):
         d = dist.select(F.col("node").alias("nbr"), F.col("dist").alias("_d"))
-        if fingerprint[0] <= broadcast_limit:
+        if fingerprint[0] <= _BROADCAST_ROWS:
             d = F.broadcast(d)
         relaxed = adj.join(d, "nbr").select(
             "node", (F.col("_d") + F.col("w")).alias("dist")
@@ -832,7 +812,6 @@ def hits(
     src_col: str = "src",
     dst_col: str = "dst",
     exact: bool = False,
-    broadcast_vertices: int = 4_000_000,
 ) -> DataFrame:
     """HITS (Kleinberg 1999): authority and hub scores over a DIRECTED
     graph by alternating power iteration with L1 normalization.
@@ -849,14 +828,14 @@ def hits(
     Scale shape mirrors ``pagerank``: the edge list pins ONCE
     (compressed columnar), each half-round is one score⋈edges join +
     one aggregation, the score table broadcasts while the vertex set
-    is dimension-sized (past ``broadcast_vertices`` the join falls
+    is dimension-sized (past ``_BROADCAST_ROWS`` the join falls
     back to shuffle — the billion-node plan), and each round's score
     tables are pinned (``session.pin``) for O(1) lineage. In the
     broadcast regime the L1 normalizer rides a whole-table window over
     the half-round's |V| rows, so fill + norm + divide execute in ONE
     pass per half-round (round-11, guide §2.4; decimal window sums are
     order-independent, so exact-mode values are unchanged — oracle
-    hash-verified); past ``broadcast_vertices`` the normalizer stays a
+    hash-verified); past ``_BROADCAST_ROWS`` the normalizer stays a
     1-row broadcast crossJoin over the pinned raw table, which never
     funnels |V| rows through one window task. The explicitly pinned
     edge list is released before returning; the per-round score
@@ -871,28 +850,6 @@ def hits(
     _whole = Window.partitionBy().rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
-    if exact:
-        def _sum0(col: F.Column) -> F.Column:
-            return (
-                F.coalesce(F.sum(_dec(col)), F.lit(0).cast("decimal(38,18)"))
-                .cast("double")
-            )
-
-        def _sum0_win(col: F.Column) -> F.Column:
-            return (
-                F.coalesce(
-                    F.sum(_dec(col)).over(_whole),
-                    F.lit(0).cast("decimal(38,18)"),
-                )
-                .cast("double")
-            )
-    else:
-        def _sum0(col: F.Column) -> F.Column:
-            return F.coalesce(F.sum(col), F.lit(0.0))
-
-        def _sum0_win(col: F.Column) -> F.Column:
-            return F.coalesce(F.sum(col).over(_whole), F.lit(0.0))
-
     edges = edges.select(
         F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst")
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -902,7 +859,7 @@ def hits(
         .distinct()
     )
     n_vert = verts.count()
-    small = n_vert <= broadcast_vertices
+    small = n_vert <= _BROADCAST_ROWS
 
     if small:
         # zero-exchange loop layout (round-11, cf. pagerank's wedges):
@@ -914,7 +871,7 @@ def hits(
         # cache layout, and the vertex fill-join sees both sides
         # clustered on node — so a half-round's only exchange is the
         # single-partition normalizer window. Costs one extra columnar
-        # copy of the edges; past broadcast_vertices the loop keeps the
+        # copy of the edges; past _BROADCAST_ROWS the loop keeps the
         # single pin and per-round shuffles (the billion-node plan).
         e_bydst = edges.repartition(F.col("_dst")).cache()
         e_bysrc = edges.repartition(F.col("_src")).cache()
@@ -939,7 +896,7 @@ def hits(
             # decimal sum is order-independent so exact-mode values are
             # unchanged. Checkpointing the NORMALIZED table (not raw)
             # keeps lineage O(1) and makes every consumer a plain scan.
-            norm = _sum0_win(F.col(col))
+            norm = _sum0(F.col(col), exact, _whole)
             return pin(
                 raw.select(
                     "node",
@@ -955,7 +912,7 @@ def hits(
         # lazy: one broadcast crossJoin over the pinned raw, never |V|
         # rows through a single window task.
         raw = pin(raw)
-        norm = raw.agg(_sum0(F.col(col)).alias("_norm"))
+        norm = raw.agg(_sum0(F.col(col), exact).alias("_norm"))
         return raw.crossJoin(F.broadcast(norm)).select(
             "node",
             F.when(F.col("_norm") > 0, F.col(col) / F.col("_norm"))
@@ -972,7 +929,7 @@ def hits(
                 "_src",
             )
             .groupBy(F.col("_dst").alias("node"))
-            .agg(_sum0(F.col("hub")).alias("authority"))
+            .agg(_sum0(F.col("hub"), exact).alias("authority"))
         )
         auth = _normalize(
             verts.join(a_raw, "node", "left").select(
@@ -988,7 +945,7 @@ def hits(
                 "_dst",
             )
             .groupBy(F.col("_src").alias("node"))
-            .agg(_sum0(F.col("authority")).alias("hub"))
+            .agg(_sum0(F.col("authority"), exact).alias("hub"))
         )
         hub = _normalize(
             verts.join(h_raw, "node", "left").select(
@@ -1044,12 +1001,7 @@ def k_core(
     Output: (node, core_degree) — surviving nodes with their degree in
     the surviving subgraph (>= k iff the peel reached fixpoint).
     """
-    a, b = F.col(src_col), F.col(dst_col)
-    cur = pin(
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    cur = pin(_undirected(edges, src_col, dst_col))
     n_edges = cur.count()
     for _ in range(rounds):
         if n_edges == 0:

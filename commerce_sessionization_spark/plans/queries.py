@@ -4,8 +4,9 @@ Every entry pairs a Spark DataFrame program with (where SQL-expressible) an
 equivalent ANSI-SQL oracle that DuckDB runs on the same parquet tables; the
 driver hash-compares both at sf=0.01 (CORRECTNESS gate) and `bench.py` times
 the Spark side at sf=0.1. The registry (``CATALOG``, ``EXTENDED_CATALOG``)
-lives here; the session family is defined in ``plans/sessions.py`` and the
-shared ``QueryDef`` contract and helpers in ``plans/base.py``.
+lives here; the session family is defined in ``plans/sessions.py``, the
+graph family in ``plans/graph.py``, and the shared ``QueryDef`` contract
+and helpers in ``plans/base.py``.
 
 Cross-engine determinism rules (so order-insensitive value hashes match):
 
@@ -76,6 +77,32 @@ from commerce_sessionization_spark.plans.base import (
     SparkQuery,
     _dec_sum,
     _quant,
+)
+from commerce_sessionization_spark.plans.graph import (
+    SQL_HITS_COPURCHASE,
+    SQL_KCORE_PARTS,
+    SQL_LPA_COMMUNITIES,
+    SQL_PAGERANK_COPURCHASE,
+    SQL_PART_HOP_DISTANCES,
+    SQL_PART_WEIGHTED_DISTANCES,
+    SQL_PPR_COPURCHASE,
+    SQL_TRIANGLE_COUNTS,
+    SQL_WPAGERANK_COPURCHASE,
+    _pagerank_sql,
+    _score,
+    q_hits_copurchase,
+    q_hits_copurchase_fast,
+    q_kcore_parts,
+    q_lpa_communities,
+    q_pagerank_copurchase,
+    q_pagerank_copurchase_fast,
+    q_part_hop_distances,
+    q_part_weighted_distances,
+    q_ppr_copurchase,
+    q_ppr_copurchase_fast,
+    q_triangle_counts,
+    q_wpagerank_copurchase,
+    q_wpagerank_copurchase_fast,
 )
 from commerce_sessionization_spark.plans.sessions import (
     SQL_CONCURRENT_SESSIONS_PEAK,
@@ -4603,7 +4630,7 @@ def _neardup_graph(spark: SparkSession, sf_dir: str):
     docs = load_table(spark, sf_dir, "documents")
     # pinned: both branches of the symmetrizing union read `pairs`, and
     # the Jaccard pair generation is the expensive subtree (cf. the
-    # _copurchase_graph cp pin — same double-execution, same fix)
+    # plans/graph._copurchase_graph cp pin — same double-execution, same fix)
     pairs = pin(
         ngram_jaccard_pairs(docs, n=3, threshold=0.8)
         .select("a", "b")
@@ -4615,183 +4642,25 @@ def _neardup_graph(spark: SparkSession, sf_dir: str):
     return edges, verts
 
 
+def _neardup_pagerank(spark: SparkSession, sf_dir: str, exact: bool) -> DataFrame:
+    """5-round PageRank over the near-dup graph (the body of the
+    ``pagerank_neardup`` pair)."""
+    from commerce_sessionization_spark.operators.graph import pagerank
+
+    edges, verts = _neardup_graph(spark, sf_dir)
+    out = pagerank(edges, verts, iterations=5, damping=0.85, exact=exact)
+    return out.select(
+        F.col("node").alias("doc_id"), _score(F.col("rank"), exact, "rank")
+    )
+
+
 def q_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5-iteration PageRank over the near-dup graph, ORACLE MODE: the
     ``exact=True`` decimal contribution sums make the power iteration
     bit-reproducible, so the DuckDB oracle replays all 5 rounds
     hash-comparable. The default double-precision scale path is benched
     as ``pagerank_neardup_fast`` below."""
-    from commerce_sessionization_spark.operators.graph import pagerank
-
-    edges, verts = _neardup_graph(spark, sf_dir)
-    out = pagerank(edges, verts, iterations=5, damping=0.85, exact=True)
-    return out.select(
-        F.col("node").alias("doc_id"), _quant(F.col("rank"), 12).alias("rank_q12")
-    )
-
-
-def _part_pair_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Part co-occurrence edges (parts sharing an order basket), id-ordered.
-
-    Basket-array generation, not a fact self-join: ONE shuffle of
-    lineitem (the basket groupBy), then ordered pairs unfold from each
-    sorted basket array in a narrow stage — the self-join form shuffles
-    the fact table twice for the same DISTINCT pair set (−17% measured
-    at sf0.1; the saved exchange is the point at 100 TB). Per-basket
-    pair fanout is quadratic in basket size, which TPC-H (and most
-    carts) bounds by a small constant. Oracles keep the self-join
-    formulation — identical pair set, independently derived.
-
-    Emits the pair MULTISET (one row per co-occurring basket): every
-    graph consumer (triangles / k-core / LPA / BFS) normalizes and
-    dedupes internally anyway, so a distinct here would only add a
-    second full-pair shuffle in front of theirs.
-    """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("_ps")
-    )
-    return (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(_ps, (x, i) -> "
-                    "transform(slice(_ps, i + 2, size(_ps) - i - 1), "
-                    "y -> struct(x as src, y as dst))))"
-                )
-            ).alias("_p")
-        )
-        .select("_p.src", "_p.dst")
-    )
-
-
-def _copurchase_graph(spark: SparkSession, sf_dir: str):
-    """Customer<->part bipartite graph from order lines (~600k edges at
-    sf0.1): edge generation is one join + distinct, so — unlike the
-    near-dup graph, whose cost is all in pair generation — PageRank here
-    is dominated by the per-iteration join+agg arithmetic. That makes it
-    the bench vehicle for the decimal-vs-double split."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    cp = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey")).alias("c"),
-            F.concat(F.lit("p"), F.col("l_partkey")).alias("p"),
-        )
-        .distinct()
-        # pinned: edges AND verts derive from cp, and pagerank
-        # checkpoints each input separately — unpinned, the join+distinct
-        # executed twice (profiler: the two ~10 MiB-shuffle pair-gen jobs
-        # back to back at the head of every pagerank run). Loop-
-        # invariant, so columnar persist (see session.pin).
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    edges = cp.select(F.col("c").alias("src"), F.col("p").alias("dst")).unionByName(
-        cp.select(F.col("p").alias("src"), F.col("c").alias("dst"))
-    )
-    verts = (
-        cp.select(F.col("c").alias("node"))
-        .union(cp.select(F.col("p").alias("node")))
-        .distinct()
-    )
-    return edges, verts, cp
-
-
-def q_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """5-iteration PageRank over the co-purchase graph, ORACLE MODE
-    (decimal-exact replay, same contract as ``pagerank_neardup``)."""
-    from commerce_sessionization_spark.operators.graph import pagerank
-
-    edges, verts, cp = _copurchase_graph(spark, sf_dir)
-    out = pagerank(edges, verts, iterations=5, damping=0.85, exact=True)
-    # pagerank returns a materialized checkpoint: the pair-gen pin can go
-    cp.unpersist(blocking=False)
-    return out.select("node", _quant(F.col("rank"), 12).alias("rank_q12"))
-
-
-def q_pagerank_copurchase_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Co-purchase PageRank on the double-precision SCALE path — the
-    headline bench pairs this against ``pagerank_copurchase`` to price
-    the decimal replay arithmetic on an iteration-dominated graph."""
-    from commerce_sessionization_spark.operators.graph import pagerank
-
-    edges, verts, cp = _copurchase_graph(spark, sf_dir)
-    out = pagerank(edges, verts, iterations=5, damping=0.85, exact=False)
-    cp.unpersist(blocking=False)
-    return out.select("node", F.round(F.col("rank"), 6).alias("rank_r6"))
-
-
-def q_hits_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HITS over the DIRECTED customer→part co-purchase graph: hubs are
-    customers whose baskets concentrate on authoritative parts,
-    authorities are parts bought by strong hubs — the bipartite ranking
-    PageRank's symmetrized walk can't express (it conflates the two
-    roles). 3 alternating rounds, decimal-exact sums, L1 normalization
-    (see ``operators.graph.hits`` for why L1 replaces the textbook L2:
-    no sqrt in the loop, same eigenvector, engine-replayable) — the
-    oracle replays every round as chained CTEs.
-    """
-    from commerce_sessionization_spark.operators.graph import hits
-
-    _edges, _verts, cp = _copurchase_graph(spark, sf_dir)
-    directed = cp.select(F.col("c").alias("src"), F.col("p").alias("dst"))
-    out = hits(directed, iterations=3, exact=True)
-    # hits returns a materialized checkpoint: the pair-gen pin can go
-    cp.unpersist(blocking=False)
-    return out.select(
-        "node",
-        _quant(F.col("authority"), 12).alias("auth_q12"),
-        _quant(F.col("hub"), 12).alias("hub_q12"),
-    )
-
-
-def _hits_sql(rounds: int = 3) -> str:
-    """Chained-CTE DuckDB replay of ``operators.graph.hits``
-    (exact=True, L1): per round, decimal-summed in-neighbor hubs →
-    normalize, decimal-summed out-neighbor authorities → normalize."""
-    dec = "DECIMAL(38,18)"
-    parts = [f"""WITH e AS (
-  SELECT DISTINCT 'c' || o_custkey AS src, 'p' || l_partkey AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-), v AS (
-  SELECT src AS node FROM e UNION SELECT dst FROM e
-), h0 AS (SELECT node, 1.0::DOUBLE AS hub FROM v)"""]
-    for r in range(1, rounds + 1):
-        parts.append(f""", ar{r} AS (
-  SELECT v.node,
-         CAST(COALESCE(sum(CAST(h.hub AS {dec})), 0) AS DOUBLE) AS authority
-  FROM v LEFT JOIN e ON e.dst = v.node
-         LEFT JOIN h{r - 1} h ON h.node = e.src
-  GROUP BY v.node
-), an{r} AS (
-  SELECT CAST(COALESCE(sum(CAST(authority AS {dec})), 0) AS DOUBLE) AS s
-  FROM ar{r}
-), a{r} AS (
-  SELECT node, CASE WHEN s > 0 THEN authority / s ELSE 0.0 END AS authority
-  FROM ar{r}, an{r}
-), hr{r} AS (
-  SELECT v.node,
-         CAST(COALESCE(sum(CAST(a.authority AS {dec})), 0) AS DOUBLE) AS hub
-  FROM v LEFT JOIN e ON e.src = v.node
-         LEFT JOIN a{r} a ON a.node = e.dst
-  GROUP BY v.node
-), hn{r} AS (
-  SELECT CAST(COALESCE(sum(CAST(hub AS {dec})), 0) AS DOUBLE) AS s
-  FROM hr{r}
-), h{r} AS (
-  SELECT node, CASE WHEN s > 0 THEN hub / s ELSE 0.0 END AS hub
-  FROM hr{r}, hn{r}
-)""")
-    parts.append(f"""
-SELECT a.node,
-       CAST(floor(a.authority * 1000000000000.0) AS BIGINT) AS auth_q12,
-       CAST(floor(h.hub * 1000000000000.0) AS BIGINT) AS hub_q12
-FROM a{rounds} a JOIN h{rounds} h ON h.node = a.node""")
-    return "".join(parts)
-
-
-SQL_HITS_COPURCHASE = _hits_sql(3)
+    return _neardup_pagerank(spark, sf_dir, exact=True)
 
 
 def q_pagerank_neardup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4801,17 +4670,11 @@ def q_pagerank_neardup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     dependent), hence no value oracle; ``tests/test_graph.py`` pins it
     to the exact mode within 1e-9 per rank, and ranks are rounded to 6
     digits here so the output is stable enough for a rows-only check."""
-    from commerce_sessionization_spark.operators.graph import pagerank
-
-    edges, verts = _neardup_graph(spark, sf_dir)
-    out = pagerank(edges, verts, iterations=5, damping=0.85, exact=False)
-    return out.select(
-        F.col("node").alias("doc_id"), F.round(F.col("rank"), 6).alias("rank_r6")
-    )
+    return _neardup_pagerank(spark, sf_dir, exact=False)
 
 
 #: Near-dup graph prelude: must define CTEs ``pr_edges(src, dst)`` and
-#: ``verts(node)`` for the generic iteration chain below.
+#: ``verts(node)`` for the generic iteration chain of ``_pagerank_sql``.
 _PAGERANK_NEARDUP_PRELUDE = _SHINGLE_CTE.rstrip() + ", " + """
 pr_pairs AS (
   SELECT a, b
@@ -4821,261 +4684,8 @@ pr_pairs AS (
   SELECT a AS src, b AS dst FROM pr_pairs UNION ALL SELECT b, a FROM pr_pairs
 ), verts AS (SELECT doc_id AS node FROM documents)"""
 
-#: Co-purchase bipartite graph: customer <-> part edges from order lines,
-#: symmetrized; vertex set = every node that appears in an edge.
-_PAGERANK_COPURCHASE_PRELUDE = """
-WITH cp AS (
-  SELECT DISTINCT 'c' || o_custkey AS c, 'p' || l_partkey AS p
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-), pr_edges AS (
-  SELECT c AS src, p AS dst FROM cp UNION ALL SELECT p, c FROM cp
-), verts AS (
-  SELECT c AS node FROM cp UNION SELECT p FROM cp
-)"""
-
-
-def _pagerank_sql(prelude: str, iterations: int = 5, d: str = "0.85",
-                  out_col: str = "doc_id", personalized: bool = False,
-                  weighted: bool = False) -> str:
-    """Generate the chained-CTE DuckDB twin of ``operators.graph.pagerank``
-    (one CTE triple per iteration — recursive CTEs allow only a single
-    reference to the working table, and each round needs three).
-
-    ``prelude`` is the leading WITH-chain and must define
-    ``pr_edges(src, dst)`` and ``verts(node)`` — plus ``seeds(node)``
-    when ``personalized`` — ; the iteration chain and the decimal-exact
-    replay arithmetic are graph-independent. The personalized variant
-    replays the seeded teleport vector: rank₀ = p, and each round's
-    (1−d) and dangling terms multiply p(v) instead of dividing by N —
-    the same IEEE operand order the Spark operator uses, so rounds stay
-    bit-identical."""
-    parts = [prelude.rstrip().rstrip(",") + ","]
-    if weighted:
-        parts.append("""
-nv AS (SELECT count(*)::BIGINT AS n FROM verts),
-deg AS (
-  SELECT src AS node,
-         CAST(sum(CAST(wt AS DECIMAL(27,9))) AS DOUBLE) AS ws
-  FROM pr_edges GROUP BY 1
-),
-coefe AS (
-  SELECT e.src, e.dst, CAST(e.wt AS DOUBLE) / w.ws AS coef
-  FROM pr_edges e JOIN deg w ON e.src = w.node
-),""")
-    else:
-        parts.append("""
-nv AS (SELECT count(*)::BIGINT AS n FROM verts),
-deg AS (SELECT src AS node, count(*) AS outdeg FROM pr_edges GROUP BY 1),""")
-    if personalized:
-        parts.append("""
-ns AS (SELECT count(*)::BIGINT AS n FROM seeds),
-pers AS (
-  SELECT v.node,
-         CASE WHEN s.node IS NOT NULL THEN 1.0 / ns.n ELSE 0.0 END AS p
-  FROM verts v LEFT JOIN seeds s ON v.node = s.node, ns
-),
-it0 AS (SELECT node, p AS rank FROM pers)""")
-    else:
-        parts.append("""
-it0 AS (SELECT node, 1.0 / nv.n AS rank FROM verts, nv)""")
-    for i in range(1, iterations + 1):
-        p = i - 1
-        if personalized:
-            it_body = f"""it{i} AS (
-  SELECT v.node,
-         (1.0 - {d}) * v.p + {d} * (COALESCE(c.inr, 0.0) + g.m * v.p) AS rank
-  FROM pers v LEFT JOIN con{i} c ON v.node = c.node, dang{i} g
-)"""
-        else:
-            it_body = f"""it{i} AS (
-  SELECT v.node,
-         (1.0 - {d}) / nv.n + {d} * (COALESCE(c.inr, 0.0) + g.m / nv.n) AS rank
-  FROM verts v LEFT JOIN con{i} c ON v.node = c.node, nv, dang{i} g
-)"""
-        if weighted:
-            con_body = f"""con{i} AS (
-  SELECT e.dst AS node,
-         CAST(sum(CAST(r.rank * e.coef AS DECIMAL(38,18))) AS DOUBLE) AS inr
-  FROM it{p} r JOIN coefe e ON e.src = r.node
-  GROUP BY 1
-)"""
-        else:
-            con_body = f"""con{i} AS (
-  SELECT e.dst AS node,
-         CAST(sum(CAST(r.rank / dg.outdeg AS DECIMAL(38,18))) AS DOUBLE) AS inr
-  FROM it{p} r JOIN deg dg ON r.node = dg.node JOIN pr_edges e ON e.src = r.node
-  GROUP BY 1
-)"""
-        parts.append(f""",
-dang{i} AS (
-  SELECT CAST(COALESCE(sum(CAST(r.rank AS DECIMAL(38,18))),
-                       0::DECIMAL(38,18)) AS DOUBLE) AS m
-  FROM it{p} r LEFT JOIN deg dg ON r.node = dg.node WHERE dg.node IS NULL
-), {con_body}, {it_body}""")
-    parts.append(f"""
-SELECT node AS {out_col},
-       CAST(floor(rank * 1000000000000.0) AS BIGINT) AS rank_q12
-FROM it{iterations}
-""")
-    return "".join(parts)
-
 
 SQL_PAGERANK_NEARDUP = _pagerank_sql(_PAGERANK_NEARDUP_PRELUDE)
-SQL_PAGERANK_COPURCHASE = _pagerank_sql(
-    _PAGERANK_COPURCHASE_PRELUDE, out_col="node"
-)
-_WPAGERANK_COPURCHASE_PRELUDE = """
-WITH cp AS (
-  SELECT 'c' || o_custkey AS c, 'p' || l_partkey AS p,
-         count(*) AS wt
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-  GROUP BY 1, 2
-), pr_edges AS (
-  SELECT c AS src, p AS dst, wt FROM cp
-  UNION ALL SELECT p, c, wt FROM cp
-), verts AS (
-  SELECT c AS node FROM cp UNION SELECT p FROM cp
-)"""
-
-SQL_WPAGERANK_COPURCHASE = _pagerank_sql(
-    _WPAGERANK_COPURCHASE_PRELUDE, out_col="node", weighted=True
-)
-
-
-def q_wpagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted PageRank over the co-purchase graph: a customer's rank
-    splits across parts ∝ how often they bought each one (line-count
-    edge weights), not uniformly — repeat purchases matter. ORACLE MODE:
-    per-source weight totals sum in exact decimal so the hoisted w/Σw
-    coefficients are bit-identical in both engines, and the 5 rounds
-    replay hash-comparable at q12 like the uniform and personalized
-    variants."""
-    from commerce_sessionization_spark.operators.graph import pagerank
-
-    edges, verts, cp = _wcopurchase_graph(spark, sf_dir)
-    out = pagerank(
-        edges, verts, iterations=5, damping=0.85, exact=True, weight_col="wt"
-    )
-    cp.unpersist(blocking=False)
-    return out.select("node", _quant(F.col("rank"), 12).alias("rank_q12"))
-
-
-SQL_PPR_COPURCHASE = _pagerank_sql(
-    _PAGERANK_COPURCHASE_PRELUDE + """,
-seeds AS (
-  SELECT node FROM verts
-  WHERE node LIKE 'c%' AND CAST(substr(node, 2) AS BIGINT) % 50 = 0
-)""",
-    out_col="node",
-    personalized=True,
-)
-
-
-def q_ppr_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Personalized PageRank (random walk with restart) over the
-    co-purchase graph, seeded on every 50th customer — the
-    'recommendations relative to a cohort' query: teleport and dangling
-    mass return to the seed cohort, so high-rank parts are those
-    reachable from THOSE customers' baskets, not globally popular ones.
-    ORACLE MODE (decimal-exact replay): the seeded teleport vector
-    multiplies p(v) with the same IEEE operand order in both engines,
-    so all 5 rounds hash-match at q12 like the uniform variant."""
-    from commerce_sessionization_spark.operators.graph import pagerank
-
-    edges, verts, cp = _copurchase_graph(spark, sf_dir)
-    seeds = verts.filter(
-        F.col("node").startswith("c")
-        & (F.expr("CAST(substr(node, 2) AS BIGINT)") % 50 == 0)
-    )
-    out = pagerank(
-        edges, verts, iterations=5, damping=0.85, exact=True, seeds=seeds
-    )
-    cp.unpersist(blocking=False)
-    return out.select("node", _quant(F.col("rank"), 12).alias("rank_q12"))
-
-
-def q_ppr_copurchase_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Personalized PageRank on the double-precision SCALE path — the
-    variant a 100 TB user actually runs (plain double sums, no decimal
-    casts in the loop). Rows-only oracle like the uniform ``_fast``
-    twin: float summation is order-dependent, so no engine-independent
-    value replay exists; parity with the decimal oracle mode is pinned
-    to 2e-6 in tests/test_graph.py."""
-    from commerce_sessionization_spark.operators.graph import pagerank
-
-    edges, verts, cp = _copurchase_graph(spark, sf_dir)
-    seeds = verts.filter(
-        F.col("node").startswith("c")
-        & (F.expr("CAST(substr(node, 2) AS BIGINT)") % 50 == 0)
-    )
-    out = pagerank(
-        edges, verts, iterations=5, damping=0.85, exact=False, seeds=seeds
-    )
-    cp.unpersist(blocking=False)
-    return out.select("node", F.round(F.col("rank"), 6).alias("rank_r6"))
-
-
-def _wcopurchase_graph(spark: SparkSession, sf_dir: str):
-    """Weighted co-purchase graph shared by the decimal and double
-    weighted-PageRank variants: grouped (customer, part, line-count)
-    edges — 3.3× smaller per-round join input than raw pairs."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    cp = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .groupBy(
-            F.concat(F.lit("c"), F.col("o_custkey")).alias("c"),
-            F.concat(F.lit("p"), F.col("l_partkey")).alias("p"),
-        )
-        .agg(F.count(F.lit(1)).alias("wt"))
-        # loop-invariant, so columnar persist (see session.pin); it
-        # also makes the callers' unpersist() real
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    edges = cp.select(
-        F.col("c").alias("src"), F.col("p").alias("dst"), "wt"
-    ).unionByName(
-        cp.select(F.col("p").alias("src"), F.col("c").alias("dst"), "wt")
-    )
-    verts = (
-        cp.select(F.col("c").alias("node"))
-        .union(cp.select("p"))
-        .distinct()
-    )
-    return edges, verts, cp
-
-
-def q_wpagerank_copurchase_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted PageRank on the double-precision SCALE path (plain
-    double w/Σw coefficients and contribution sums). Rows-only oracle;
-    parity with the decimal oracle mode pinned to 2e-6 in
-    tests/test_graph.py."""
-    from commerce_sessionization_spark.operators.graph import pagerank
-
-    edges, verts, cp = _wcopurchase_graph(spark, sf_dir)
-    out = pagerank(
-        edges, verts, iterations=5, damping=0.85, exact=False,
-        weight_col="wt",
-    )
-    cp.unpersist(blocking=False)
-    return out.select("node", F.round(F.col("rank"), 6).alias("rank_r6"))
-
-
-def q_hits_copurchase_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HITS on the double-precision SCALE path (plain double hub and
-    authority sums, double L1 normalizations). Rows-only oracle; parity
-    with the decimal oracle mode pinned to 2e-6 in tests/test_graph.py."""
-    from commerce_sessionization_spark.operators.graph import hits
-
-    _e, _v, cp = _copurchase_graph(spark, sf_dir)
-    directed = cp.select(F.col("c").alias("src"), F.col("p").alias("dst"))
-    out = hits(directed, iterations=3, exact=False)
-    cp.unpersist(blocking=False)
-    return out.select(
-        "node",
-        F.round(F.col("authority"), 6).alias("auth_r6"),
-        F.round(F.col("hub"), 6).alias("hub_r6"),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -6123,50 +5733,6 @@ FROM (
   FROM adc
 )
 WHERE rank <= 10
-"""
-
-
-def q_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-part triangle counts + clustering coefficient over the
-    part-part co-occurrence graph (parts sharing an order basket).
-
-    Spark runs the degree-ordered compact-forward join (wedge fanout
-    bounded by the higher-degree endpoint — the skew-safe formulation);
-    the oracle replays the naive id-ordered 3-way join, which yields the
-    identical triangle set, so the counts hash-match while the *plans*
-    differ — the point of the scale path.
-    """
-    from commerce_sessionization_spark.operators.graph import triangle_counts
-
-    return triangle_counts(_part_pair_edges(spark, sf_dir))
-
-
-SQL_TRIANGLE_COUNTS = """
-WITH und AS (
-  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-  FROM lineitem x JOIN lineitem y ON x.l_orderkey = y.l_orderkey
-  WHERE x.l_partkey < y.l_partkey
-), deg AS (
-  SELECT node, count(*) AS degree
-  FROM (SELECT a AS node FROM und UNION ALL SELECT b FROM und)
-  GROUP BY node
-), tri AS (
-  SELECT e1.a AS p, e1.b AS q, e2.b AS r
-  FROM und e1
-  JOIN und e2 ON e2.a = e1.b
-  JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b
-), pernode AS (
-  SELECT node, count(*) AS n_triangles
-  FROM (SELECT unnest([p, q, r]) AS node FROM tri)
-  GROUP BY node
-)
-SELECT deg.node, degree,
-       COALESCE(n_triangles, 0) AS n_triangles,
-       CAST(floor(CAST(2 * COALESCE(n_triangles, 0) AS DOUBLE)
-                  / CAST(degree * (degree - 1) AS DOUBLE) * 1000000.0)
-            AS BIGINT) AS cc_q6
-FROM deg LEFT JOIN pernode ON pernode.node = deg.node
-WHERE degree >= 2
 """
 
 
@@ -7665,135 +7231,6 @@ GROUP BY event_type, bucket_idx
 
 
 # --------------------------------------------------------------------------
-# k-core decomposition (graph family)
-# --------------------------------------------------------------------------
-
-_KCORE_K = 80
-_KCORE_ROUNDS = 7
-
-
-def q_kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-core of the part co-purchase graph: fixed-round peeling.
-
-    ``k_core`` removes sub-k-degree nodes (and their edges) for up to 7
-    rounds, early-exiting at the fixpoint; the oracle replays all 7
-    rounds as chained CTEs — a converged graph passes through later
-    rounds unchanged, so both paths agree (the PageRank replayed-oracle
-    pattern applied to an anti-join loop). k=80 sits inside the sf0.01
-    degree distribution (min 42, median 115), so the peel actually
-    cascades for several rounds before stabilizing.
-    """
-    from commerce_sessionization_spark.operators.graph import k_core
-
-    return k_core(
-        _part_pair_edges(spark, sf_dir), k=_KCORE_K, rounds=_KCORE_ROUNDS
-    )
-
-
-def _kcore_sql(k: int, rounds: int) -> str:
-    """Chained-CTE replay of `rounds` peel rounds (the SQL twin).
-
-    Every CTE is ``AS MATERIALIZED``: each round references its
-    predecessor three times, so DuckDB's default inlining would expand
-    the chain into 3^rounds scans of the base table.
-    """
-    parts = [
-        """WITH e0 AS MATERIALIZED (
-  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-  FROM lineitem x JOIN lineitem y ON x.l_orderkey = y.l_orderkey
-  WHERE x.l_partkey < y.l_partkey
-)"""
-    ]
-    for r in range(rounds):
-        parts.append(
-            f""", d{r} AS MATERIALIZED (
-  SELECT node, count(*) AS deg
-  FROM (SELECT a AS node FROM e{r} UNION ALL SELECT b FROM e{r})
-  GROUP BY node
-), e{r + 1} AS MATERIALIZED (
-  SELECT * FROM e{r}
-  WHERE a NOT IN (SELECT node FROM d{r} WHERE deg < {k})
-    AND b NOT IN (SELECT node FROM d{r} WHERE deg < {k})
-)"""
-        )
-    parts.append(
-        f"""
-SELECT node, count(*) AS core_degree
-FROM (SELECT a AS node FROM e{rounds} UNION ALL SELECT b FROM e{rounds})
-GROUP BY node"""
-    )
-    return "".join(parts)
-
-
-SQL_KCORE_PARTS = _kcore_sql(_KCORE_K, _KCORE_ROUNDS)
-
-
-# --------------------------------------------------------------------------
-# Label propagation communities (graph family)
-# --------------------------------------------------------------------------
-
-_LPA_ROUNDS = 4
-
-
-def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Community labels on the part co-purchase graph: fixed-round
-    synchronous label propagation with self-vote and smallest-label tie
-    break (``operators.graph.label_propagation``). Deterministic rules +
-    a fixed round count make the iteration SQL-replayable — the oracle
-    chains one (join → count → argmax) CTE per round, the k-core /
-    PageRank replayed-oracle pattern applied to a mode computation.
-    """
-    from commerce_sessionization_spark.operators.graph import label_propagation
-
-    return label_propagation(_part_pair_edges(spark, sf_dir), rounds=_LPA_ROUNDS)
-
-
-def _lpa_sql(rounds: int) -> str:
-    """Chained-CTE replay: argmax-by-(count desc, label asc) per round.
-
-    ``AS MATERIALIZED`` for the same reason as ``_kcore_sql``: each round
-    reads its predecessor once but sits under `rounds` levels of
-    nesting, and inlining would re-expand the basket self-join per level.
-    """
-    parts = [
-        """WITH und AS MATERIALIZED (
-  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-  FROM lineitem x JOIN lineitem y ON x.l_orderkey = y.l_orderkey
-  WHERE x.l_partkey < y.l_partkey
-), verts AS MATERIALIZED (
-  SELECT DISTINCT node
-  FROM (SELECT a AS node FROM und UNION ALL SELECT b FROM und)
-), adj AS MATERIALIZED (
-  SELECT a AS node, b AS nbr FROM und
-  UNION ALL SELECT b, a FROM und
-  UNION ALL SELECT node, node FROM verts
-), l0 AS MATERIALIZED (
-  SELECT node, node AS community FROM verts
-)"""
-    ]
-    for r in range(rounds):
-        parts.append(
-            f""", c{r} AS MATERIALIZED (
-  SELECT adj.node, l.community AS lbl, count(*) AS c
-  FROM adj JOIN l{r} l ON adj.nbr = l.node
-  GROUP BY adj.node, l.community
-), l{r + 1} AS MATERIALIZED (
-  SELECT node, lbl AS community
-  FROM (SELECT node, lbl,
-               row_number() OVER (PARTITION BY node
-                                  ORDER BY c DESC, lbl ASC) AS rn
-        FROM c{r})
-  WHERE rn = 1
-)"""
-        )
-    parts.append(f"\nSELECT node, community FROM l{rounds}")
-    return "".join(parts)
-
-
-SQL_LPA_COMMUNITIES = _lpa_sql(_LPA_ROUNDS)
-
-
-# --------------------------------------------------------------------------
 # Scalar quantization (int8) similarity — compression path beside PQ/IVF
 # --------------------------------------------------------------------------
 
@@ -9047,70 +8484,6 @@ GROUP BY 1, 2
 
 
 # --------------------------------------------------------------------------
-# Single-source shortest paths (BFS) — graph family
-# --------------------------------------------------------------------------
-
-_SSSP_ROUNDS = 4
-
-
-def q_part_hop_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hop distances from the smallest part key over the co-purchase
-    graph: frontier-propagated BFS (``operators.graph.shortest_paths``),
-    4 rounds. The Spark side joins only each round's frontier against
-    the adjacency (broadcast while dimension-sized); the oracle replays
-    the same rounds as chained CTEs — for unit weights, full
-    min-relaxation IS BFS, and an emptied frontier makes extra rounds
-    no-ops, so early exit and full replay agree.
-    """
-    from commerce_sessionization_spark.operators.graph import shortest_paths
-
-    # loop-invariant: columnar persist (see session.pin)
-    edges = _part_pair_edges(spark, sf_dir).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    src = edges.agg(
-        F.min(F.least(F.col("src"), F.col("dst")))
-    ).first()[0]
-    if src is None:  # empty graph: no source, empty distance table
-        edges.unpersist(blocking=False)
-        return spark.createDataFrame([], "node long, dist int")
-    out = shortest_paths(edges, source=int(src), rounds=_SSSP_ROUNDS)
-    # shortest_paths returns a materialized checkpoint: release the pin
-    edges.unpersist(blocking=False)
-    return out
-
-
-def _sssp_sql(rounds: int) -> str:
-    parts = [
-        """WITH und AS MATERIALIZED (
-  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-  FROM lineitem x JOIN lineitem y ON x.l_orderkey = y.l_orderkey
-  WHERE x.l_partkey < y.l_partkey
-), adj AS MATERIALIZED (
-  SELECT a AS node, b AS nbr FROM und
-  UNION ALL SELECT b, a FROM und
-), d0 AS MATERIALIZED (
-  SELECT min(a) AS node, 0 AS dist FROM und
-)"""
-    ]
-    for r in range(1, rounds + 1):
-        parts.append(
-            f""", d{r} AS MATERIALIZED (
-  SELECT * FROM d{r - 1}
-  UNION ALL
-  SELECT DISTINCT adj.node, {r} AS dist
-  FROM adj JOIN d{r - 1} p ON adj.nbr = p.node
-  WHERE adj.node NOT IN (SELECT node FROM d{r - 1})
-)"""
-        )
-    parts.append(f"\nSELECT node, dist FROM d{rounds}")
-    return "".join(parts)
-
-
-SQL_PART_HOP_DISTANCES = _sssp_sql(_SSSP_ROUNDS)
-
-
-# --------------------------------------------------------------------------
 # Autocorrelation (ACF) of the daily revenue series — time-series family
 # --------------------------------------------------------------------------
 
@@ -9441,72 +8814,6 @@ SELECT (SELECT min(dot) FROM dots) AS est_join_size,
        (SELECT count(*) FROM lineitem JOIN part ON l_partkey = p_partkey)
          AS exact_join_size
 """
-
-
-# --------------------------------------------------------------------------
-# Weighted shortest paths (Bellman-Ford — graph family)
-# --------------------------------------------------------------------------
-
-_WSSSP_ROUNDS = 5
-
-
-def q_part_weighted_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted single-source shortest paths on the co-purchase graph:
-    Bellman-Ford min-plus rounds (``graph.weighted_shortest_paths``)
-    with deterministic integer weights 1 + (a+b) mod 5 — unlike BFS, a
-    reached node's distance keeps improving through cheaper multi-hop
-    routes, so every round relaxes ALL distances (broadcast while
-    dimension-sized) instead of only a frontier. Fixpoint early-exit ==
-    the oracle's full chained-CTE replay, the k-core argument again.
-    """
-    from commerce_sessionization_spark.operators.graph import (
-        weighted_shortest_paths,
-    )
-
-    edges = (
-        _part_pair_edges(spark, sf_dir)
-        .withColumn("w", 1 + (F.col("src") + F.col("dst")) % 5)
-        # loop-invariant: columnar persist (see session.pin)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    src = edges.agg(F.min(F.least(F.col("src"), F.col("dst")))).first()[0]
-    if src is None:  # empty graph
-        edges.unpersist(blocking=False)
-        return spark.createDataFrame([], "node long, dist long")
-    out = weighted_shortest_paths(edges, source=int(src), rounds=_WSSSP_ROUNDS)
-    edges.unpersist(blocking=False)
-    return out
-
-
-def _wsssp_sql(rounds: int) -> str:
-    parts = [
-        """WITH und0 AS MATERIALIZED (
-  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-  FROM lineitem x JOIN lineitem y ON x.l_orderkey = y.l_orderkey
-  WHERE x.l_partkey < y.l_partkey
-), adj AS MATERIALIZED (
-  SELECT a AS node, b AS nbr, 1 + (a + b) % 5 AS w FROM und0
-  UNION ALL SELECT b, a, 1 + (a + b) % 5 FROM und0
-), d0 AS MATERIALIZED (
-  SELECT min(a) AS node, CAST(0 AS BIGINT) AS dist FROM und0
-)"""
-    ]
-    for r in range(1, rounds + 1):
-        parts.append(
-            f""", d{r} AS MATERIALIZED (
-  SELECT node, min(dist) AS dist FROM (
-    SELECT node, dist FROM d{r - 1}
-    UNION ALL
-    SELECT adj.node, p.dist + adj.w
-    FROM adj JOIN d{r - 1} p ON adj.nbr = p.node
-  ) GROUP BY node
-)"""
-        )
-    parts.append(f"\nSELECT node, dist FROM d{rounds}")
-    return "".join(parts)
-
-
-SQL_PART_WEIGHTED_DISTANCES = _wsssp_sql(_WSSSP_ROUNDS)
 
 
 # --------------------------------------------------------------------------

@@ -219,6 +219,17 @@ SESSION_FAMILY = {
     "legacy_udf_sessions",
 }
 
+#: The co-purchase and part-graph queries defined in plans/graph.py
+#: (pagerank_neardup and its _fast twin stay beside the dedup family).
+GRAPH_FAMILY = {
+    "pagerank_copurchase", "pagerank_copurchase_fast",
+    "ppr_copurchase", "ppr_copurchase_fast",
+    "wpagerank_copurchase", "wpagerank_copurchase_fast",
+    "hits_copurchase", "hits_copurchase_fast",
+    "triangle_counts", "kcore_parts", "lpa_communities",
+    "part_hop_distances", "part_weighted_distances",
+}
+
 
 def catalog_fingerprint() -> dict:
     return {
@@ -243,11 +254,15 @@ def test_catalog_matches_golden():
     old, new = golden["oracle_sha256"], now["oracle_sha256"]
     changed = sorted(n for n in old.keys() | new.keys() if old.get(n) != new.get(n))
     assert not changed, f"oracle SQL changed: {changed}"
-    in_sessions = {
-        q.name for q in FULL_CATALOG
-        if q.spark.__module__ == "commerce_sessionization_spark.plans.sessions"
-    }
-    assert in_sessions == SESSION_FAMILY
+
+    def defined_in(module: str) -> set:
+        return {
+            q.name for q in FULL_CATALOG
+            if q.spark.__module__ == f"commerce_sessionization_spark.plans.{module}"
+        }
+
+    assert defined_in("sessions") == SESSION_FAMILY
+    assert defined_in("graph") == GRAPH_FAMILY
 
 
 def test_driver_window_is_exactly_50():

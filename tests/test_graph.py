@@ -7,6 +7,7 @@ import struct
 
 import pytest
 
+from pyspark.errors import ArithmeticException
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -725,3 +726,13 @@ class TestPagerankExactLongSplit:
             )
         )
         assert split == ref
+
+    def test_duplicated_vertex_ids_raise(self, spark):
+        # out of domain: vertex ids must be unique. 200 copies of node 0
+        # put ~200 units of rank mass where the split assumes 1, and the
+        # decimal merge cast overflows; ANSI turns that into an error,
+        # never a plausible wrong rank
+        e = _edges(spark, [(0, 1), (1, 0)])
+        v = _verts(spark, [0] * 200 + [1])
+        with pytest.raises(ArithmeticException, match="NUMERIC_VALUE_OUT_OF_RANGE"):
+            pagerank(e, v, iterations=5, exact=True).collect()

@@ -4,7 +4,11 @@ VERDICT r10 item 1: the graph loops' remaining cost is per-iteration
 driver jobs (pin materialization + broadcast collects) — this probe
 counts them so the round-11 fix has a before/after receipt.
 
-    python tools/graph_jobs_probe.py [query ...] [--sf DIR]
+    SF_DIR=<scale-factor dir> python tools/graph_jobs_probe.py [query ...]
+
+``SF_DIR`` names the scale-factor directory (default sf0.1). The session
+comes from ``session.get_spark``, so it runs on ``local[$SPARK_GRAFT_CPUS]``
+like every other script; job counts are the receipt, walls are leads.
 """
 
 from __future__ import annotations
@@ -40,7 +44,7 @@ DEFAULT = [
 def main() -> int:
     names = [a for a in sys.argv[1:] if not a.startswith("--")] or DEFAULT
     sf_dir = os.environ.get("SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="graph-jobs-probe", master="local[32]")
+    spark = get_spark(app_name="graph-jobs-probe")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_spark_queries()
     ui = spark.sparkContext.uiWebUrl
